@@ -42,8 +42,11 @@ import org.apache.spark.storage.StorageLevel
   *   - Freshness follows the projection registry's model rather than
   *     pure TTL expiry: every ingest path that appends files under a
   *     table root calls [[invalidatePath]], which drops every entry whose
-  *     plan scanned that root. The TTL remains as a backstop for sources
-  *     graft does not write (external files mutated out-of-band).
+  *     plan scanned that root. A miss whose compute overlaps an
+  *     invalidation of a root it scans is returned to its caller but not
+  *     kept, since it may predate the ingest. The TTL remains as a
+  *     backstop for sources graft does not write (external files mutated
+  *     out-of-band).
   *
   * Recomputation always re-plans from the ANALYZED logical plan via
   * `Dataset.ofRows` — never by re-running the caller's memoized
@@ -76,6 +79,10 @@ object QueryCache {
   private val entries =
     new java.util.LinkedHashMap[Key, Entry](16, 0.75f, true)
   private val lock = new Object
+  // invalidations so far per table root (guarded by `lock`): a miss
+  // computed across an invalidation of a root it scans is not kept
+  private val pathEpochs = scala.collection.mutable.HashMap.empty[String, Long]
+    .withDefaultValue(0L)
 
   @volatile private var hitCount = 0L
   @volatile private var missCount = 0L
@@ -150,7 +157,9 @@ object QueryCache {
     }))
     if (!deterministic || timeDependent) return df
     val now = System.currentTimeMillis()
-    lock.synchronized {
+    val paths = rootPathsOf(df.queryExecution.analyzed)
+    def epochs = paths.map(p => p -> pathEpochs(p)).toMap
+    val epochsBefore = lock.synchronized {
       val hit = entries.get(key)
       if (hit != null && now - hit.createdMs <= ttlMs) {
         hitCount += 1
@@ -161,6 +170,7 @@ object QueryCache {
         return hit.result.toDF(df.columns.toIndexedSeq: _*)
       }
       if (hit != null) dropEntry(key, hit) // expired
+      epochs
     }
     // compute OUTSIDE the lock: a slow query must not serialize the cache.
     // NEVER re-run the caller's DataFrame — its memoized QueryExecution
@@ -168,14 +178,19 @@ object QueryCache {
     // filter builds a NEW Dataset over the analyzed plan, so persisting
     // it triggers a fresh planning pass that re-lists the (refreshed)
     // file index; the optimizer erases the trivial filter itself.
-    val analyzed = df.queryExecution.analyzed
     val result = df
       .where(org.apache.spark.sql.functions.lit(true))
       .persist(StorageLevel.MEMORY_AND_DISK)
     result.count()
-    val entry = Entry(key, result, now, rootPathsOf(analyzed))
+    val entry = Entry(key, result, now, paths)
     lock.synchronized {
       missCount += 1
+      if (epochs != epochsBefore) {
+        // an ingest into a scanned root committed during the compute: the
+        // result may predate it, so this caller gets it but no one else
+        result.unpersist(false)
+        return result
+      }
       val race = entries.get(key)
       if (race != null && now - race.createdMs <= ttlMs) {
         result.unpersist(false)
@@ -202,11 +217,11 @@ object QueryCache {
     * relative caller path is absolutized before matching — same contract
     * as `Projections.invalidatePath`. */
   def invalidatePath(path: String): Unit = lock.synchronized {
-    if (entries.isEmpty) return
     val target = {
       val p = new org.apache.hadoop.fs.Path(path).toUri.getPath
       if (p.startsWith("/")) p else new java.io.File(p).getAbsolutePath
     }
+    pathEpochs(target) += 1
     entries.entrySet().asScala
       .filter(_.getValue.paths.contains(target)).toSeq
       .foreach(e => dropEntry(e.getKey, e.getValue))

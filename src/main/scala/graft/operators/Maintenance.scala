@@ -24,14 +24,22 @@ object Maintenance {
     * question exactly (parquet block metadata is authoritative) for the
     * cost of the directory listing the next scan would repeat anyway.
     * Footers are read driver-side in parallel — at a 100 TB table this
-    * is O(files) small reads instead of a full data pass. */
+    * is O(files) small reads instead of a full data pass. Files are found
+    * at any depth, so a partitioned layout (`TimeTable`'s
+    * `_time_bucket=...` directories) counts too; directories Spark's file
+    * index skips (`_temporary`, hidden ones) are skipped here as well. */
   def parquetRowCount(spark: SparkSession, path: String): Long = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
     val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    val files = fs.listStatus(p)
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-    java.util.Arrays.stream(files).parallel().mapToLong { st =>
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    def parquetFiles(dir: Path): Seq[FileStatus] = fs.listStatus(dir).toSeq.flatMap { st =>
+      val name = st.getPath.getName
+      if (st.isFile) Option.when(name.endsWith(".parquet"))(st).toSeq
+      else if (name.startsWith(".") || (name.startsWith("_") && !name.contains("="))) Nil
+      else parquetFiles(st.getPath)
+    }
+    java.util.Arrays.stream(parquetFiles(root).toArray).parallel().mapToLong { st =>
       val in = org.apache.parquet.hadoop.util.HadoopInputFile
         .fromStatus(st, conf)
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)

@@ -78,7 +78,7 @@ final class FakeBroker(val numPartitions: Int = 1) {
     logs(partition).synchronized {
       val log = logs(partition)
       if (fromOffset >= log.length) Seq.empty
-      else log.slice(fromOffset.toInt, math.min(log.length, fromOffset.toInt + max)).toSeq
+      else log.slice(fromOffset.toInt, math.min(log.length.toLong, fromOffset + max).toInt).toSeq
     }
 
   /** Next offset to be assigned in `partition` (Kafka end offset). */
@@ -222,15 +222,17 @@ final case class IngestStatus(status: String, committed: Int, total: Int,
   *  - out-of-order batch commits fold through [[CommitTracker]], one per
   *    partition (per-shard committed SN).
   *
-  * The driver-side pieces (offset-range aggregate: ≤numPartitions rows;
-  * new idem keys: bounded by the consume batch cap) match the
-  * reference's consumer-node-resident index; the table append itself is
-  * fully distributed.
+  * A batch commits in two Spark jobs. The first collects each record's
+  * `(partition, SN, idem key)`, which the consume batch cap bounds, and
+  * the driver decides dedup from it the way the reference's consumer
+  * does: one hash lookup per record against the recent-key index. The
+  * second is the fully distributed table append, filtered by the set of
+  * dropped `(partition, SN)` records. Its plan therefore grows with the
+  * batch, never with the index.
   */
 final class WalCommitter(tablePath: String, maxIdemKeys: Int = 100000) {
   import org.apache.spark.sql.DataFrame
-  import org.apache.spark.sql.expressions.Window
-  import org.apache.spark.sql.functions._
+  import org.apache.spark.sql.functions.{col, udf}
 
   private val trackers = new ConcurrentHashMap[Int, CommitTracker]()
   private val seenIdem =
@@ -247,48 +249,45 @@ final class WalCommitter(tablePath: String, maxIdemKeys: Int = 100000) {
   /** Commit one consumed micro-batch; rows must carry `_wal_partition`
     * and `_wal_sn` metadata columns plus the payload columns. */
   def commitBatch(batch: DataFrame): Unit = {
-    import batch.sparkSession.implicits._
-    val rows = batch.persist()
-    try {
-      // consumed contiguous offset range per partition, PRE-dedup: the
-      // SN advance must cover deduped records too (reference :1093)
-      val ranges = rows.groupBy("_wal_partition")
-        .agg(min("_wal_sn").as("lo"), max("_wal_sn").as("hi"))
-        .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-      if (ranges.nonEmpty) {
-        val known = seenIdem.synchronized {
-          import scala.jdk.CollectionConverters._
-          seenIdem.keySet().asScala.toSet
+    val meta = batch.select("_wal_partition", "_wal_sn", "_idem").collect()
+      .map(r => (r.getInt(0), r.getLong(1), Option(r.getString(2))))
+    if (meta.isEmpty) return
+    // consumed offset range per partition, PRE-dedup: the SN advance must
+    // cover deduped records too (reference :1093)
+    val ranges = meta.groupMapReduce(_._1)(m => (m._2, m._2)) {
+      case ((lo1, hi1), (lo2, hi2)) => (math.min(lo1, lo2), math.max(hi1, hi2))
+    }
+    // within-batch: the first record per idem key wins (lowest SN, then
+    // lowest partition); cross-batch: keys already in the recent-key
+    // index are dropped; keyless records are always kept
+    val first = mutable.LinkedHashMap.empty[String, (Int, Long)]
+    meta.sortBy(m => (m._2, m._1)).foreach {
+      case (p, sn, Some(k)) if !first.contains(k) => first(k) = (p, sn)
+      case _ =>
+    }
+    val known = seenIdem.synchronized(first.keySet.filter(seenIdem.containsKey))
+    val dropped = meta.collect {
+      case (p, sn, Some(k)) if known(k) || first(k) != ((p, sn)) => (p, sn)
+    }.toSet
+    if (dropped.size < meta.length) {
+      val kept =
+        if (dropped.isEmpty) batch
+        else {
+          val keep = udf((p: Int, sn: Long) => !dropped((p, sn)))
+          batch.filter(keep(col("_wal_partition"), col("_wal_sn")))
         }
-        // within-batch: first record per idem key wins (lowest SN);
-        // cross-batch: drop keys already in the recent-key index.
-        // Keyless rows bypass the window entirely — partitioning the
-        // window by _idem would funnel every null-key row into ONE
-        // window partition (a straggler task at scale); they need no
-        // dedup, so they must not pay for one.
-        val keyless = rows.filter(col("_idem").isNull)
-        val w = Window.partitionBy("_idem").orderBy("_wal_sn")
-        val firstPerKey = rows.filter(col("_idem").isNotNull)
-          .withColumn("_rn", row_number().over(w))
-          .filter(col("_rn") === 1).drop("_rn")
-        val dedupedKeyed =
-          if (known.isEmpty) firstPerKey
-          else firstPerKey.filter(!col("_idem").isInCollection(known))
-        val deduped = keyless.unionByName(dedupedKeyed)
-        deduped.drop("_wal_partition", "_wal_sn")
-          .write.mode("append").parquet(tablePath)
-        // commit hook: refresh projections registered over this table
-        // (reference: inserts push blocks through dependent MVs)
-        graft.plans.Projections.invalidatePath(tablePath)
-        graft.core.QueryCache.invalidatePath(tablePath)
-        val newKeys = rows.select("_idem").na.drop().distinct().as[String].collect()
-        seenIdem.synchronized(newKeys.foreach(k => seenIdem.put(k, java.lang.Boolean.TRUE)))
-        ranges.foreach { case (p, lo, hi) =>
-          val t = trackers.computeIfAbsent(p, _ => new CommitTracker())
-          (lo to hi).foreach(t.recordCommitted)
-        }
-      }
-    } finally { rows.unpersist(); () }
+      kept.drop("_wal_partition", "_wal_sn")
+        .write.mode("append").parquet(tablePath)
+      // commit hook: refresh projections registered over this table
+      // (reference: inserts push blocks through dependent MVs)
+      graft.plans.Projections.invalidatePath(tablePath)
+      graft.core.QueryCache.invalidatePath(tablePath)
+    }
+    seenIdem.synchronized(first.keys.foreach(k => seenIdem.put(k, java.lang.Boolean.TRUE)))
+    ranges.foreach { case (p, (lo, hi)) =>
+      val t = trackers.computeIfAbsent(p, _ => new CommitTracker())
+      (lo to hi).foreach(t.recordCommitted)
+    }
   }
 }
 

@@ -125,6 +125,15 @@ class FakeWalSpec extends AnyFunSuite {
     } finally broker.shutdown()
   }
 
+  test("fetch without a cap returns the rest of the log from any offset") {
+    val broker = new FakeBroker()
+    try {
+      (0 until 5).foreach(i => broker.append(0, s"k$i", payload(s"k$i", i, i.toLong)))
+      assert(broker.fetch(0, 2L).map(_.offset) == Seq(2L, 3L, 4L))
+      assert(broker.fetch(0, 3L, max = 1).map(_.offset) == Seq(3L))
+    } finally broker.shutdown()
+  }
+
   test("unknown ingest mode rejected") {
     val broker = new FakeBroker()
     try intercept[IllegalArgumentException] {
@@ -146,7 +155,8 @@ class FakeWalSpec extends AnyFunSuite {
   test("end-to-end: produce → consume → checkpointed commit → offsets = commit SN, " +
     "idem dedup across batches, resume from checkpoint without re-commit") {
     val broker = new FakeBroker()
-    val base = "/root/repo/target/fakewal_" + System.nanoTime()
+    val baseDir = java.nio.file.Files.createTempDirectory("fakewal")
+    val base = baseDir.toString
     try {
       val producer = new WalProducer(broker)
       val tail = new WalSource.BrokerTail(broker, spark)
@@ -190,6 +200,9 @@ class FakeWalSpec extends AnyFunSuite {
       // a,b from batch 1; e from batch 2; cross-batch dup "b" dropped;
       // nothing from batch 1 re-committed on resume
       assert(committed == Seq("a", "b", "e"))
-    } finally broker.shutdown()
+    } finally {
+      broker.shutdown()
+      org.apache.commons.io.FileUtils.deleteDirectory(baseDir.toFile)
+    }
   }
 }

@@ -171,6 +171,18 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(Maintenance.parquetRowCount(spark, emptyDir) == 0L)
   }
 
+  test("parquetRowCount counts the files of a time-partitioned table") {
+    val dir = java.nio.file.Files.createTempDirectory("footer_count_part")
+    try {
+      val table = dir.resolve("t").toString
+      val df = (0 until 50).map(i => (i.toLong, java.sql.Timestamp.valueOf(
+        f"2024-03-${i % 3 + 1}%02d 10:00:00"))).toDF("id", "_time")
+      graft.core.TimeTable.write(df, table)
+      assert(new java.io.File(table).listFiles().count(_.isDirectory) == 3)
+      assert(Maintenance.parquetRowCount(spark, table) == 50L)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
   test("HLL sketch states survive parquet round-trip and merge in a fresh read") {
     val dir = "/root/repo/target/sketch_test"
     val li = Tables.load(spark, sf, "lineitem")

@@ -18,6 +18,18 @@ class QueryCacheSpec extends AnyFunSuite {
     QueryCache.maxEntries = 64
   }
 
+  /** Re-list `df`'s file relations in place, as the ingest paths do. */
+  private def refreshFileIndex(df: org.apache.spark.sql.DataFrame): Unit =
+    df.queryExecution.analyzed.foreach {
+      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        lr.relation match {
+          case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+            h.location.refresh()
+          case _ =>
+        }
+      case _ =>
+    }
+
   test("identical plans hit; textually different but plan-equal queries share") {
     freshState()
     val base = spark.range(1000).select(col("id"), (col("id") % 7).as("k"))
@@ -90,15 +102,7 @@ class QueryCacheSpec extends AnyFunSuite {
     assert(QueryCache.size == 2)
     // append + refresh the relation in place (the ingest-path sequence)
     spark.range(100, 200).write.mode("append").parquet(dir)
-    base.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        lr.relation match {
-          case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            h.location.refresh()
-          case _ =>
-        }
-      case _ =>
-    }
+    refreshFileIndex(base)
     QueryCache.invalidatePath(dir)
     assert(QueryCache.size == 1, "off-path entry must survive")
     assert(QueryCache.cached(onPath).collect()(0).getLong(0) == (0L until 200L).sum,
@@ -106,4 +110,51 @@ class QueryCacheSpec extends AnyFunSuite {
     QueryCache.clear()
     fs.delete(new org.apache.hadoop.fs.Path(dir), true)
   }
+
+  test("an invalidation that lands while a miss is computed is not lost") {
+    freshState()
+    val root = java.nio.file.Files.createTempDirectory("graft_qcache_race")
+    val dir = root.resolve("t").toString
+    val staged = root.resolve("staged").toString
+    spark.range(100).coalesce(1).write.parquet(dir)
+    spark.range(100, 200).coalesce(1).write.parquet(staged)
+    val base = spark.read.parquet(dir)
+    import QueryCacheSpec.{first, proceed, started}
+    // the first row the compute reads parks it until the ingest below is
+    // done; the latches live in an object because tasks get a
+    // deserialized copy of the closure
+    val gate = udf { (id: Long) =>
+      if (first.getAndSet(false)) { started.countDown(); proceed.await() }
+      id
+    }
+    val onPath = base.agg(sum(gate(col("id"))).as("s"))
+    val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
+    try {
+      val racing = pool.submit(new java.util.concurrent.Callable[Long] {
+        override def call(): Long = QueryCache.cached(onPath).collect()(0).getLong(0)
+      })
+      assert(started.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      // an ingest commits a file while the miss is being computed (a
+      // Spark write here would wait on the parked cache build)
+      new java.io.File(staged).listFiles().filter(_.getName.endsWith(".parquet"))
+        .foreach(f => java.nio.file.Files.move(f.toPath, root.resolve("t").resolve(f.getName)))
+      refreshFileIndex(base)
+      QueryCache.invalidatePath(dir)
+      proceed.countDown()
+      racing.get(60, java.util.concurrent.TimeUnit.SECONDS)
+      assert(QueryCache.cached(onPath).collect()(0).getLong(0) == (0L until 200L).sum,
+        "result computed before the ingest served after its invalidation")
+    } finally {
+      proceed.countDown()
+      pool.shutdown()
+      QueryCache.clear()
+      org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
+    }
+  }
+}
+
+object QueryCacheSpec {
+  val started = new java.util.concurrent.CountDownLatch(1)
+  val proceed = new java.util.concurrent.CountDownLatch(1)
+  val first = new java.util.concurrent.atomic.AtomicBoolean(true)
 }
