@@ -21,8 +21,47 @@ import org.apache.spark.sql.SparkSession
   * own `stream_gate_sec` bucket (judge r15 Wrong #3: their
   * processAllAvailable scheduling jitter — 2.7 s to 28.5 s on identical
   * code — was the entire round-over-round spread of the suite).
+  *
+  * A query that throws (in the warm-up or in any timed run) is never a
+  * timing: its `status` is `failed`, it is named in `failed` and on
+  * stderr, it is left out of `queries` and of both sums, and the main
+  * exits with status 1 after printing its lines.
   */
 object Bench {
+
+  /** One timed run: wall seconds, and the failure when the query threw. */
+  final case class Timing(sec: Double, error: Option[String]) {
+    def ok: Boolean = error.isEmpty
+    def status: String = if (ok) "ok" else "failed"
+  }
+
+  def timeOnce(run: () => Unit): Timing = {
+    val t0 = System.nanoTime()
+    val error =
+      try { run(); None }
+      catch { case e: Throwable => Some(s"${e.getClass.getSimpleName}: ${e.getMessage}") }
+    Timing((System.nanoTime() - t0) / 1e9, error)
+  }
+
+  /** Best-of-N with N scaled to the first measurement, bounding total
+    * bench wall time while still de-noising the (fast) majority. Any
+    * failed run fails the query. */
+  def bestOf(run: () => Unit): Timing = {
+    val t1 = timeOnce(run)
+    if (!t1.ok) t1
+    else {
+      // ALWAYS at least one retry: no registered query legitimately runs
+      // 30s+ at sf0.1, so a first pass that slow is a full-GC storm
+      // landing on an unlucky query (observed: 0.3s q_dedup_exact
+      // measured at 39s late in the 178-query suite) — nudge the
+      // collector, then measure again. min() discards the storm.
+      val extra = if (t1.sec < 5.0) 2 else 1
+      if (t1.sec >= 30.0) System.gc()
+      val all = t1 +: Seq.fill(extra)(timeOnce(run))
+      all.find(!_.ok).getOrElse(all.minBy(_.sec))
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -48,7 +87,7 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
     Tables.tune(spark)
 
-    def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
+    def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)(): Unit =
       try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
       finally Tables.releaseScratch()
 
@@ -57,29 +96,10 @@ object Bench {
       args.headOption.filter(_.nonEmpty).map(_.split(",").toSet)
 
     // Warm the JVM: codegen, parquet footer reads, broadcast machinery.
-    Seq("q1_pricing_summary", "q_join_multi", "q_window_rank").foreach { n =>
-      SparkEntry.queries.get(n).foreach(fn => try run(fn) catch { case _: Throwable => () })
-    }
-
-    def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try run(fn) catch { case _: Throwable => () }
-      (System.nanoTime() - t0) / 1e9
-    }
-
-    /** Best-of-N with N scaled to the first measurement, bounding total
-      * bench wall time while still de-noising the (fast) majority. */
-    def bestOf(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t1 = timeOnce(fn)
-      // ALWAYS at least one retry: no registered query legitimately runs
-      // 30s+ at sf0.1, so a first pass that slow is a full-GC storm
-      // landing on an unlucky query (observed: 0.3s q_dedup_exact
-      // measured at 39s late in the 178-query suite) — nudge the
-      // collector, then measure again. min() discards the storm.
-      val extra = if (t1 < 5.0) 2 else 1
-      if (t1 >= 30.0) System.gc()
-      (t1 +: Seq.fill(extra)(timeOnce(fn))).min
-    }
+    // A warm-up failure fails the run like a timed one.
+    val warmFailures = Seq("q1_pricing_summary", "q_join_multi", "q_window_rank")
+      .flatMap(n => SparkEntry.queries.get(n).map(fn => n -> timeOnce(run(fn))))
+      .filterNot(_._2.ok)
 
     // Ambient load BEFORE any bench work: the suite itself drives the
     // 32-thread box to ~10, so sampling at the end conflates self-load
@@ -119,13 +139,22 @@ object Bench {
     // AFTER the batch queries, so micro_suite_sec measures code and diffs
     // cleanly round-over-round.
     val (streamSel, batchSel) = selected.partition(_._1.startsWith("q_stream_"))
-    val batchResults = batchSel.map { case (name, fn) => name -> bestOf(fn) }
-    val streamResults = streamSel.map { case (name, fn) => name -> bestOf(fn) }
+    val batchResults = batchSel.map { case (name, fn) => name -> bestOf(run(fn)) }
+    val streamResults = streamSel.map { case (name, fn) => name -> bestOf(run(fn)) }
     val results = batchResults ++ streamResults
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
+    val failures = warmFailures.map { case (n, t) => s"$n (warm-up)" -> t } ++
+      results.filterNot(_._2.ok)
+    failures.foreach { case (n, t) => System.err.println(s"[bench] $n failed: ${t.error.get}") }
+    // Failed queries carry no timing: `queries` and both sums cover the
+    // queries that ran, `status` names every query's outcome.
+    val qs = results.collect { case (k, t) if t.ok => "\"" + k + "\":" + t.sec }
       .mkString("{", ",", "}")
-    val total = batchResults.map(_._2).sum
-    val streamTotal = streamResults.map(_._2).sum
+    val statuses = results.map { case (k, t) => "\"" + k + "\":\"" + t.status + "\"" }
+      .mkString("{", ",", "}")
+    val failedNames = failures.map("\"" + _._1 + "\"").mkString("[", ",", "]")
+    def okSum(rs: Seq[(String, Timing)]) = rs.collect { case (_, t) if t.ok => t.sec }.sum
+    val total = okSum(batchResults)
+    val streamTotal = okSum(streamResults)
     // System load: timings degrade 1.5-2x when the box is busy
     // (observed: same code, 8.3s vs 14.4s hits suite) — the reader can
     // discount a run that raced other work. ambient = sampled BEFORE the
@@ -151,7 +180,7 @@ object Bench {
         } catch { case _: Throwable => () }
     }
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","stream_gate_sec":$streamTotal,"queries":$qs,"sf":"$sfDir","load_avg_ambient":$ambientLoad,"load_avg":$loadAvg$hits}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","stream_gate_sec":$streamTotal,"queries":$qs,"status":$statuses,"failed":$failedNames,"sf":"$sfDir","load_avg_ambient":$ambientLoad,"load_avg":$loadAvg$hits}"""
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("target/BENCH_local.json"), line)
     catch { case _: Throwable => () }
@@ -164,7 +193,7 @@ object Bench {
       s""","hits_suite_sec":${r.total},"hits_regime":"${if (r.cold) "cold" else "cached"}"""")
       .getOrElse("")
     val totalsLine =
-      s"""{"metric":"totals","micro_suite_sec":$total,"stream_gate_sec":$streamTotal,"n_queries":${results.size}$hitsCompact,"sf":"$sfDir","load_avg_ambient":$ambientLoad,"ambient_samples":${ambientSamples.mkString("[", ",", "]")},"load_avg":$loadAvg}"""
+      s"""{"metric":"totals","micro_suite_sec":$total,"stream_gate_sec":$streamTotal,"n_queries":${results.size},"n_failed":${failures.size}$hitsCompact,"sf":"$sfDir","load_avg_ambient":$ambientLoad,"ambient_samples":${ambientSamples.mkString("[", ",", "]")},"load_avg":$loadAvg}"""
     println(totalsLine)
     // Belt-and-braces for the driver's parser (judge r16 Wrong #2:
     // sbt's "[info] " log decoration kept these lines unparsable since
@@ -177,5 +206,6 @@ object Bench {
       java.nio.file.Paths.get(outPath), line + "\n" + totalsLine + "\n")
     catch { case _: Throwable => () }
     spark.stop()
+    if (failures.nonEmpty) sys.exit(1)
   }
 }

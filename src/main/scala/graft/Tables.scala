@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Table registry over the driver-generated parquet test data.
   *
@@ -27,7 +29,16 @@ object Tables {
     * in-memory Dictionaries, `src/Dictionaries/`). */
   val broadcastable: Set[String] = Set("region", "nation", "supplier")
 
-  /** Load a test table. `events.ts` has shipped in two physical layouts
+  /** Load a test table. Every table but `events` is read with its schema
+    * supplied (`spark.read.schema(s).parquet`), so building the DataFrame
+    * launches no Spark job: an unschema'd parquet read runs a
+    * schema-inference job (~100 ms on a local session) on every call. The
+    * schema is inferred on the first load of a table in a session and
+    * reused while the table's file listing and the session's parquet
+    * confs are unchanged (see [[schemaOf]]); only the schema is kept,
+    * never data or plans.
+    *
+    * `events.ts` has shipped in two physical layouts
     * across test-data generations: parquet TIMESTAMP(NANOS) — which
     * Spark's vectorized reader rejects, so it arrives as raw long nanos
     * under spark.sql.legacy.parquet.nanosAsLong and is truncated to
@@ -44,7 +55,60 @@ object Tables {
     */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     if (name == "events") cachedEvents(spark, sfDir)
-    else spark.read.parquet(s"$sfDir/$name.parquet")
+    else {
+      val path = s"$sfDir/$name.parquet"
+      spark.read.schema(schemaOf(spark, path)).parquet(path)
+    }
+  }
+
+  /** Resolved table schemas, weak-keyed by session like [[eventsCache]].
+    * Per session: path -> (resolution key, schema). */
+  private val schemas = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession,
+      java.util.concurrent.ConcurrentHashMap[String, (String, StructType)]]())
+
+  /** The schema an unschema'd `spark.read.parquet(path)` would infer now.
+    * Inferred once per (session, path, resolution key) and reused after.
+    * The key is the fingerprint of the path's file listing (a rewritten
+    * table has new lengths or mtimes, so it re-resolves) plus every
+    * parquet conf set on the session (`nanosAsLong`, `binaryAsString`,
+    * `inferTimestampNTZ`, ... change the inferred types). Listing a
+    * local or HDFS directory is a driver-side metadata call, not a job. */
+  private def schemaOf(spark: SparkSession, path: String): StructType = {
+    val perSession = schemas.synchronized(schemas.computeIfAbsent(spark,
+      _ => new java.util.concurrent.ConcurrentHashMap[String, (String, StructType)]()))
+    val confs = spark.conf.getAll.filter(_._1.contains("parquet")).toSeq.sorted
+    val key = listingFingerprint(listFiles(spark, path)) + confs.mkString(";")
+    val known = perSession.get(path)
+    if (known != null && known._1 == key) known._2
+    else {
+      val schema = spark.read.parquet(path).schema
+      perSession.put(path, (key, schema))
+      schema
+    }
+  }
+
+  /** Every file under `path` (the path itself when it is a file); empty
+    * when the path does not exist, so the inferring read reports it. */
+  private def listFiles(spark: SparkSession, path: String): Seq[FileStatus] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = Seq.newBuilder[FileStatus]
+    try {
+      val it = fs.listFiles(p, true)
+      while (it.hasNext) files += it.next()
+    } catch { case _: java.io.FileNotFoundException => () }
+    files.result()
+  }
+
+  /** Fingerprint of a file listing: MD5 over the sorted
+    * `path|length|mtime` line of each file. Regenerating a table under
+    * the same path changes it. */
+  private[graft] def listingFingerprint(files: Seq[FileStatus]): String = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    files.map(f => s"${f.getPath}|${f.getLen}|${f.getModificationTime}").sorted
+      .foreach(l => md.update((l + "\n").getBytes("UTF-8")))
+    md.digest().map("%02x".format(_)).mkString
   }
 
   /** Events cache, weak-keyed by session so a stopped/GC'd session never
@@ -102,19 +166,23 @@ object Tables {
   }
 
   /** RAM-backed scratch root for gate fixtures and streaming
-    * checkpoints: /dev/shm when present and writable (Linux tmpfs —
+    * checkpoints: under /dev/shm when present and writable (Linux tmpfs —
     * the same placement the bench already uses for spark.local.dir;
     * guide §6: keep transient small-file scratch I/O off slow disk),
-    * falling back to java.io.tmpdir elsewhere (advisor r16: a /dev/shm
-    * literal breaks hosts without that mount). Layout matches the
-    * previous fixed tmpdir paths: one directory per fixture name,
-    * deleted and rebuilt inside every query invocation — nothing
-    * written here survives a query, so nothing is reusable across
-    * runs. */
+    * else under java.io.tmpdir (a /dev/shm literal breaks hosts without
+    * that mount). The directory carries the JVM's pid, as
+    * spark.local.dir does, so two JVMs never rebuild or delete each
+    * other's fixtures, and it is deleted when the JVM exits. Layout: one
+    * directory per fixture name, deleted and rebuilt inside every query
+    * invocation — nothing written here survives a query, so nothing is
+    * reusable across runs. */
   lazy val scratchRoot: String = {
     val shm = new java.io.File("/dev/shm")
-    if (shm.isDirectory && shm.canWrite) "/dev/shm/graft-scratch"
-    else System.getProperty("java.io.tmpdir")
+    val base = if (shm.isDirectory && shm.canWrite) shm.getPath
+      else System.getProperty("java.io.tmpdir")
+    val root = new java.io.File(base, s"graft-scratch-${ProcessHandle.current().pid()}")
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(root))
+    root.getPath
   }
 
   /** Apply engine-level session tuning once per session. Values chosen for

@@ -228,20 +228,15 @@ object Projections {
     * on-disk copy instead of silently serving rows of the old data.
     * The listing comes from the (memoized) FileIndex, so this costs no
     * extra namenode round-trips at registration time. */
-  private def baseFingerprint(base: DataFrame): String = {
-    val lines = base.queryExecution.analyzed.collect {
+  private def baseFingerprint(base: DataFrame): String =
+    graft.Tables.listingFingerprint(base.queryExecution.analyzed.collect {
       case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
         lr.relation match {
           case fsr: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            fsr.location.listFiles(Nil, Nil).flatMap(_.files)
-              .map(f => s"${f.getPath}|${f.getLen}|${f.getModificationTime}")
+            fsr.location.listFiles(Nil, Nil).flatMap(_.files).map(_.fileStatus)
           case _ => Nil
         }
-    }.flatten.sorted
-    val md = java.security.MessageDigest.getInstance("MD5")
-    lines.foreach(l => md.update((l + "\n").getBytes("UTF-8")))
-    md.digest().map("%02x".format(_)).mkString
-  }
+    }.flatten)
 
   private def fpPath(dir: String) =
     new org.apache.hadoop.fs.Path(dir + "/_GRAFT_BASE_FP")

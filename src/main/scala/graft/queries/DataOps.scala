@@ -23,9 +23,9 @@ object DataOps extends QueryModule {
     }),
 
     // Connected components over a pair graph (the canonical-document
-    // step after near-dup pair mining) by distributed min-label
-    // propagation — oracled against a DuckDB recursive CTE on the SAME
-    // deterministic edge set, so the fixpoint itself is hash-checked.
+    // step after near-dup pair mining) by union-find contraction —
+    // oracled against a DuckDB recursive CTE on the SAME deterministic
+    // edge set, so the labelling itself is hash-checked.
     "q_dedup_components" -> ((s, dir) => {
       val edges = t(s, dir, "orders")
         .filter(col("o_orderkey") % 97 === 0)

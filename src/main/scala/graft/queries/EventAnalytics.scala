@@ -82,9 +82,11 @@ object EventAnalytics extends QueryModule {
           unix_micros(col("ts")), col("step")).as("matched"))
     }),
 
-    // sequenceCount: non-overlapping signup→purchase chains
-    // (hash-checked: the DuckDB oracle folds the same greedy scan with
-    // list_reduce; exactness also covered by AggregatorSpec).
+    // sequenceCount: non-overlapping signup→purchase chains; a signup and
+    // a purchase at the same timestamp order signup first, as the
+    // reference orders equal timestamps by condition (hash-checked: the
+    // DuckDB oracle counts signup→purchase adjacencies in (ts, step)
+    // order; exactness also covered by AggregatorSpec).
     "q_sequence_count" -> ((s, dir) => {
       val e = t(s, dir, "events")
         .withColumn("step",
@@ -178,23 +180,22 @@ object EventAnalytics extends QueryModule {
     }))
 
   def oracles: Map[String, String] = Map(
-    // Greedy left-to-right scan reproduced as a DuckDB list_reduce fold
-    // over the time-ordered step list: state = count*10 + next-needed.
+    // The greedy signup→purchase scan completes one chain at every
+    // purchase that directly follows a signup in (t, step) order, so the
+    // count is a LAG adjacency count. (A list_reduce fold of the same
+    // scan returned wrong counts for some users under DuckDB 1.0 when
+    // many users' lists were folded in one query.)
     "q_sequence_count" ->
       """WITH e AS (
         |  SELECT user_id, epoch_us(ts::TIMESTAMP) AS t,
         |    CASE WHEN event_type='signup' THEN 1 ELSE 2 END AS step
         |  FROM events WHERE event_type IN ('signup','purchase')),
-        |l AS (SELECT user_id, [0] || list(step ORDER BY t, step) AS steps
-        |      FROM e GROUP BY user_id)
+        |s AS (SELECT user_id, step,
+        |        lag(step) OVER (PARTITION BY user_id ORDER BY t, step) AS prev
+        |      FROM e)
         |SELECT user_id,
-        |  (list_reduce(steps, (acc, k) -> CASE
-        |     WHEN k = (CASE WHEN acc % 10 = 0 THEN 1 ELSE acc % 10 END)
-        |     THEN CASE WHEN (CASE WHEN acc % 10 = 0 THEN 1 ELSE acc % 10 END) = 2
-        |               THEN ((acc // 10) + 1) * 10 + 1
-        |               ELSE (acc // 10) * 10 + 2 END
-        |     ELSE acc END) // 10)::BIGINT AS n_chains
-        |FROM l""".stripMargin,
+        |  (count(*) FILTER (WHERE prev = 1 AND step = 2))::BIGINT AS n_chains
+        |FROM s GROUP BY user_id""".stripMargin,
 
     // strict_order windowFunnel as a list_reduce fold carrying
     // (max level, current depth, chain start) through the sorted events;

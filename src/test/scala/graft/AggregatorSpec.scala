@@ -112,6 +112,23 @@ class AggregatorSpec extends AnyFunSuite {
     assert(agg.finish(ArrayBuffer((1L, 2), (2L, 2))) == 0)
   }
 
+  test("sequenceCount orders a timestamp tie signup-first, as q_sequence_count's oracle does") {
+    val agg = new SequenceCountAgg(2)
+    // a purchase and a signup at the same time, purchase arriving first:
+    // the tie sorts by step, so the signup opens and the purchase closes
+    assert(agg.finish(ArrayBuffer((10L, 2), (10L, 1))) == 1)
+    assert(agg.finish(ArrayBuffer((5L, 1), (7L, 2), (7L, 1), (7L, 2))) == 1)
+    // the oracle's form: purchases directly preceded by a signup in
+    // (ts, step) order; drawn from few timestamps so most events tie
+    val rng = new scala.util.Random(7)
+    (1 to 200).foreach { _ =>
+      val evs = Seq.fill(rng.nextInt(30))((rng.nextInt(6).toLong, 1 + rng.nextInt(2)))
+      val steps = evs.sorted.map(_._2)
+      val adjacent = steps.zip(steps.drop(1)).count(_ == ((1, 2)))
+      assert(agg.finish(ArrayBuffer.from(evs)) == adjacent, evs)
+    }
+  }
+
   test("retention masks by first condition") {
     val agg = new RetentionAgg(3)
     val buf = agg.merge(agg.reduce(agg.zero, Seq(true, false, true)),

@@ -14,7 +14,7 @@ import graft.plans.Projections
   * distribution through the alias layer), results are identical,
   * re-registration reuses the files without rewriting, and ingest
   * invalidation rebuilds the copy. */
-class BucketedProjectionSpec extends AnyFunSuite {
+class BucketedProjectionSpec extends AnyFunSuite with TempDirs {
   import TestSpark._
 
   private def physical(df: DataFrame): String = {
@@ -24,7 +24,7 @@ class BucketedProjectionSpec extends AnyFunSuite {
 
   private def freshDirs(): (String, String) = {
     val stamp = System.nanoTime().toString
-    ("target/bproj_base_" + stamp, "target/bproj_copy_" + stamp)
+    (tmp("bproj_base_") + stamp, tmp("bproj_copy_") + stamp)
   }
 
   private def writeBase(dir: String, n: Int = 40000): DataFrame = {

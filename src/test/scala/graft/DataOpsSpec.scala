@@ -288,4 +288,38 @@ class DataOpsSpec extends AnyFunSuite {
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(sComp == Map("a" -> "a", "b" -> "a", "c" -> "a"))
   }
+
+  test("connected components over several edge partitions match a union-find reference") {
+    import spark.implicits._
+    val rng = new scala.util.Random(11)
+    val ids = rng.shuffle((0L until 80000L).toVector)
+    // long chains whose ids rise along the chain, fall along it, and
+    // follow no order; trees; clusters of two and three
+    val rising = (1L until 12000L).map(i => (100000L + i - 1, 100000L + i))
+    val falling = (1L until 12000L).map(i => (300000L - i + 1, 300000L - i))
+    val shuffled = ids.take(8000).sliding(2).map(p => (p(0), p(1))).toSeq
+    val trees = (8000 until 60000).map(i =>
+      (ids(i), ids(8000 + (i - 8000) / 100 * 100 + rng.nextInt(math.max(1, (i - 8000) % 100)))))
+    val small = (60000 until 79998 by 3).flatMap(i =>
+      Seq((ids(i), ids(i + 1)), (ids(i + 1), ids(i + 2))).take(1 + i % 2))
+    val pairs = rising ++ falling ++ shuffled ++ trees ++ small
+    // both directions of every pair: more edges than one partition holds
+    assert(pairs.size * 2 > 100000 && spark.sparkContext.defaultParallelism > 1)
+
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val expected = parent.keys.map(x => x -> find(x)).toMap
+
+    val got = Dedup.connectedComponents(rng.shuffle(pairs).toDF("a", "b"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got.size == expected.size)
+    assert(got == expected)
+  }
 }

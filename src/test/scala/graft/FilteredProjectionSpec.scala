@@ -11,7 +11,7 @@ import graft.plans.Projections
   * the registered equality routes to the cached matching-rows subset,
   * with identical results; anything without the conjunct, referencing
   * an uncarried column, or non-row-wise must NOT route. */
-class FilteredProjectionSpec extends AnyFunSuite {
+class FilteredProjectionSpec extends AnyFunSuite with TempDirs {
   import TestSpark._
 
   private def physical(df: DataFrame): String =
@@ -81,7 +81,7 @@ class FilteredProjectionSpec extends AnyFunSuite {
 
       // cold (unpersisted, disk-backed) base: scan-bound — the policy
       // registers, and the hot-key query routes with identical results
-      val dir = "target/filtered_regime_" + System.nanoTime()
+      val dir = tmp("filtered_regime_") + System.nanoTime()
       cachedBase.write.parquet(dir)
       val coldBase = spark.read.parquet(dir)
       def q: DataFrame = coldBase.filter(col("ctr") === 62)
@@ -98,7 +98,7 @@ class FilteredProjectionSpec extends AnyFunSuite {
 
   test("disk-materialized filtered projection routes to the parquet slice") {
     val base0 = makeBase()
-    val dir = "target/filtered_disk_" + System.nanoTime()
+    val dir = tmp("filtered_disk_") + System.nanoTime()
     base0.write.parquet(dir)
     val coldBase = spark.read.parquet(dir)
     def q: DataFrame = coldBase.filter(col("ctr") === 62 && col("flag") === 0)
@@ -122,7 +122,7 @@ class FilteredProjectionSpec extends AnyFunSuite {
     // listing at write time. Reuse is only legal when the live base
     // still matches — deleting and regenerating the base under the same
     // path must trigger a rebuild, never silently serve the old rows.
-    val dir = "target/filtered_fp_" + System.nanoTime()
+    val dir = tmp("filtered_fp_") + System.nanoTime()
     val slice = dir + "_ctr62"
     spark.range(1000)
       .select((col("id") % 100).cast("int").as("ctr"), col("id").as("v"))
@@ -181,7 +181,7 @@ class FilteredProjectionSpec extends AnyFunSuite {
     // min/max ranges non-overlapping — so parquet footer stats can skip
     // files outside a queried window; and the routed window aggregate
     // must still be exact.
-    val dir = "target/filtered_sort_" + System.nanoTime()
+    val dir = tmp("filtered_sort_") + System.nanoTime()
     val slice = dir + "_ctr62"
     spark.range(200000).select(
       when(col("id") % 7 === 0, lit(62)).otherwise(col("id") % 500)
@@ -315,7 +315,7 @@ class FilteredProjectionSpec extends AnyFunSuite {
 
   test("clusterBy disk slice: bucketed parquet routes and aggregates exchange-free; fingerprint separates filter values") {
     val base0 = makeBase()
-    val dir0 = "target/filtered_bucketed_" + System.nanoTime()
+    val dir0 = tmp("filtered_bucketed_") + System.nanoTime()
     base0.write.parquet(dir0)
     val coldBase = spark.read.parquet(dir0)
     def q: DataFrame = coldBase.filter(col("ctr") === 62)
@@ -358,8 +358,7 @@ class FilteredProjectionSpec extends AnyFunSuite {
       spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       Projections.clear()
       // clean the base parquet and the slice dir (plus its fingerprint),
-      // mirroring the sortCol disk test — otherwise every run leaks a
-      // parquet dir pair under target/ (advisor r12)
+      // mirroring the sortCol disk test
       val fs = new org.apache.hadoop.fs.Path(dir0)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(dir0), true)

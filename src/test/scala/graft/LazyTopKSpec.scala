@@ -7,11 +7,11 @@ import graft.plans.LazyTopK
 /** Lazy top-k materialization: the rewrite must fire only on wide
   * parquet ORDER BY + LIMIT shapes, inject a pushable sort-key bound,
   * and return EXACTLY the unrewritten result (ties, DESC, filters). */
-class LazyTopKSpec extends AnyFunSuite {
+class LazyTopKSpec extends AnyFunSuite with TempDirs {
   import TestSpark._
   import spark.implicits._
 
-  private val dir = "target/lazytopk_test"
+  private val dir = tmp("lazytopk_test")
 
   /** 12 measure columns (clears minSavedCols = 8) + key/tag columns,
     * written shuffled so the parquet order is NOT the sort order for
@@ -72,7 +72,7 @@ class LazyTopKSpec extends AnyFunSuite {
   /** Key-clustered table: 8 files, each a contiguous ts range — footer
     * stats make adjacent ranges disjoint, the staged pre-pass territory. */
   private lazy val clustered: String = {
-    val d = "target/lazytopk_clustered"
+    val d = tmp("lazytopk_clustered")
     spark.range(0, 8000, 1, 8).toDF("id")
       .withColumn("ts", col("id"))
       .withColumn("tag", concat(lit("t"), col("id") % 7))
@@ -140,7 +140,7 @@ class LazyTopKSpec extends AnyFunSuite {
   test("narrow attempt below the clustering threshold: a range-layout " +
       "table (2 overlapping files per key block, disjointFraction < 0.5) " +
       "still fires when the bound prunes files, and stays exact") {
-    val d = "target/lazytopk_ranged"
+    val d = tmp("lazytopk_ranged")
     // 8 files; files 2i and 2i+1 BOTH span ts block [i*1000, i*1000+999]
     // (hash-uniform inside the block, like two CounterID-split files of
     // one EventDate) — every adjacent pair overlaps a block boundary or
@@ -212,8 +212,8 @@ class LazyTopKSpec extends AnyFunSuite {
       "and same-size tables never share an entry") {
     // 64 files: the parallel footer pool (16 threads) must read each
     // footer exactly once, then serve repeats from the LRU cache
-    val dA = "target/lazytopk_manyA"
-    val dB = "target/lazytopk_manyB"
+    val dA = tmp("lazytopk_manyA")
+    val dB = tmp("lazytopk_manyB")
     spark.range(0, 6400, 1, 64).toDF("id").withColumn("ts", col("id"))
       .select(Seq(col("id"), col("ts")) ++
         (1 to 12).map(i => (col("id") * i).as(s"m$i")): _*)
@@ -252,7 +252,7 @@ class LazyTopKSpec extends AnyFunSuite {
 
   test("planning hygiene: one shared footer pool; a cache hit recomputes " +
       "no path digest and reads no footers") {
-    val d = "target/lazytopk_pooltest"
+    val d = tmp("lazytopk_pooltest")
     spark.range(0, 3200, 1, 8).toDF("id").withColumn("ts", col("id"))
       .select(Seq(col("id"), col("ts")) ++
         (1 to 12).map(i => (col("id") * i).as(s"m$i")): _*)
@@ -285,7 +285,7 @@ class LazyTopKSpec extends AnyFunSuite {
 
   test("digest memo invalidates on an in-place MIDDLE-file rewrite that " +
       "keeps count/head/last fixed (r13 staleness edge)") {
-    val d = "target/lazytopk_mtime_test"
+    val d = tmp("lazytopk_mtime_test")
     spark.range(0, 4000, 1, 4).toDF("id").withColumn("ts", col("id"))
       .select(Seq(col("id"), col("ts")) ++
         (1 to 12).map(i => (col("id") * i).as(s"m$i")): _*)

@@ -5,12 +5,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Maintenance
 import graft.sql.Search
 
-class MaintenanceSpec extends AnyFunSuite {
+class MaintenanceSpec extends AnyFunSuite with TempDirs {
   import TestSpark._
   import spark.implicits._
 
   test("TTL expiry removes only rows older than the cutoff") {
-    val dir = "/root/repo/target/ttl_test"
+    val dir = tmp("ttl_test")
     Tables.load(spark, sf, "events").withColumnRenamed("ts", "_time")
       .write.mode("overwrite").parquet(dir)
     val before = spark.read.parquet(dir).count()
@@ -25,7 +25,7 @@ class MaintenanceSpec extends AnyFunSuite {
   }
 
   test("TTL GROUP BY SET rolls expired rows up; any() takes the order-minimal row; NULL time survives") {
-    val dir = "/root/repo/target/ttlagg_test"
+    val dir = tmp("ttlagg_test")
     // (id, key, v, tag, t): key 1 has two expired rows + one survivor;
     // key 2 has one expired row; id 6 has NULL time (must never expire)
     Seq(
@@ -57,7 +57,7 @@ class MaintenanceSpec extends AnyFunSuite {
   }
 
   test("TTL GROUP BY SET casts the aggregate back to the column type") {
-    val dir = "/root/repo/target/ttlagg_cast_test"
+    val dir = tmp("ttlagg_cast_test")
     Seq((1L, 1L, 3L, "2020-01-01"), (2L, 1L, 4L, "2020-01-02"))
       .toDF("id", "key", "n", "d")
       .withColumn("ts", $"d".cast("timestamp")).drop("d")
@@ -71,7 +71,7 @@ class MaintenanceSpec extends AnyFunSuite {
   }
 
   test("column TTL resets only expired rows' values; NULL default and NULL time handled") {
-    val dir = "/root/repo/target/ttlcol_test"
+    val dir = tmp("ttlcol_test")
     Seq((1L, 10L, Some("2020-01-01 00:00:00")),
         (2L, 20L, Some("2024-06-01 00:00:00")),
         (3L, 30L, None: Option[String]))
@@ -88,7 +88,7 @@ class MaintenanceSpec extends AnyFunSuite {
   }
 
   test("TTL recompression splits codecs without changing content") {
-    val dir = "/root/repo/target/ttlrc_test"
+    val dir = tmp("ttlrc_test")
     Tables.load(spark, sf, "orders").write.mode("overwrite").parquet(dir)
     val before = spark.read.parquet(dir)
       .agg(count(lit(1)), sum($"o_orderkey")).head()
@@ -104,7 +104,7 @@ class MaintenanceSpec extends AnyFunSuite {
   }
 
   test("OPTIMIZE compacts many small files into the target count, preserving rows") {
-    val dir = "/root/repo/target/compact_test"
+    val dir = tmp("compact_test")
     Tables.load(spark, sf, "lineitem")
       .repartition(24).write.mode("overwrite").parquet(dir)
     assert(Maintenance.fileCount(spark, dir) >= 20)
@@ -117,7 +117,7 @@ class MaintenanceSpec extends AnyFunSuite {
   }
 
   test("ALTER DELETE drops matching rows; NULL predicate rows are kept") {
-    val dir = "/root/repo/target/mutdel_test"
+    val dir = tmp("mutdel_test")
     Seq((1, Some(5)), (2, Some(20)), (3, None: Option[Int]))
       .toDF("id", "v").write.mode("overwrite").parquet(dir)
     val (kept, deleted) = Maintenance.mutateDelete(spark, dir, "v > 10")
@@ -127,7 +127,7 @@ class MaintenanceSpec extends AnyFunSuite {
   }
 
   test("ALTER UPDATE evaluates assignments on the pre-mutation row and casts to the column type") {
-    val dir = "/root/repo/target/mutupd_test"
+    val dir = tmp("mutupd_test")
     Seq((1, 10L, 100L), (2, 20L, 200L)).toDF("id", "a", "b")
       .write.mode("overwrite").parquet(dir)
     // simultaneous swap + a double-typed expression cast back to LONG:
@@ -141,7 +141,7 @@ class MaintenanceSpec extends AnyFunSuite {
   }
 
   test("ALTER UPDATE rejects duplicate assignments to one column") {
-    val dir = "/root/repo/target/mutupd_dup_test"
+    val dir = tmp("mutupd_dup_test")
     Seq((1, 10L)).toDF("id", "a").write.mode("overwrite").parquet(dir)
     val e = intercept[IllegalArgumentException] {
       Maintenance.mutateUpdate(spark, dir, Seq("a" -> "1", "a" -> "2"), "true")
@@ -158,14 +158,14 @@ class MaintenanceSpec extends AnyFunSuite {
   }
 
   test("parquetRowCount (footer metadata) equals a full count() scan") {
-    val dir = "/root/repo/target/footer_count_test"
+    val dir = tmp("footer_count_test")
     // multi-file dir so the footer sum actually sums across files
     Tables.load(spark, sf, "orders").repartition(5, $"o_orderkey")
       .write.mode("overwrite").parquet(dir)
     val exact = spark.read.parquet(dir).count()
     assert(Maintenance.parquetRowCount(spark, dir) == exact)
     // empty result set → zero rows, not an error
-    val emptyDir = "/root/repo/target/footer_count_empty"
+    val emptyDir = tmp("footer_count_empty")
     Tables.load(spark, sf, "orders").filter(lit(false))
       .coalesce(1).write.mode("overwrite").parquet(emptyDir)
     assert(Maintenance.parquetRowCount(spark, emptyDir) == 0L)
@@ -184,7 +184,7 @@ class MaintenanceSpec extends AnyFunSuite {
   }
 
   test("HLL sketch states survive parquet round-trip and merge in a fresh read") {
-    val dir = "/root/repo/target/sketch_test"
+    val dir = tmp("sketch_test")
     val li = Tables.load(spark, sf, "lineitem")
     li.groupBy($"l_returnflag")
       .agg(hll_sketch_agg($"l_partkey").as("state"))

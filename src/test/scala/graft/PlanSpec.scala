@@ -9,7 +9,7 @@ import graft.sql.Search
 /** Plan-quality audit: the physical plans we'd want at 100 TB, asserted.
   * These guard against regressions that stay correct but stop scaling
   * (lost pushdown, lost broadcast, partition pruning gone). */
-class PlanSpec extends AnyFunSuite {
+class PlanSpec extends AnyFunSuite with TempDirs {
   import TestSpark._
   import spark.implicits._
 
@@ -70,7 +70,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("time-partitioned table prunes partitions on bounded read") {
-    val dir = "/root/repo/target/tt_test"
+    val dir = tmp("tt_test")
     val events = Tables.load(spark, sf, "events").withColumnRenamed("ts", "_time")
     TimeTable.write(events, dir, granularity = TimeTable.Daily,
       orderBy = Seq("user_id"))

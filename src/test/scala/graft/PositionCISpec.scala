@@ -11,7 +11,7 @@ import graft.functions.VolnitskySearcher
   * fallback across case folds that change byte LENGTH (U+0130) or
   * produce ASCII (U+212A Kelvin sign) — plus the plan-level swap of
   * instr(lower(x), c) / locate(c, lower(x), 1). */
-class PositionCISpec extends AnyFunSuite {
+class PositionCISpec extends AnyFunSuite with TempDirs {
   import TestSpark._
   import spark.implicits._
 
@@ -69,7 +69,7 @@ class PositionCISpec extends AnyFunSuite {
     val rows = Seq("Spark SQL engine", "no match here", "SPARK upper",
       "mid sPaRk mid", "Kelvin sparK trail", null)
     // parquet-backed: a LocalRelation would be constant-folded away
-    val dir = "/root/repo/target/pci_rows"
+    val dir = tmp("pci_rows")
     rows.toDF("t").write.mode("overwrite").parquet(dir)
     spark.read.parquet(dir).createOrReplaceTempView("pci_rows")
     val q = spark.sql(
@@ -128,7 +128,7 @@ class PositionCISpec extends AnyFunSuite {
       "CI engines and match the lowered compositions") {
     graft.functions.GraftScalar.register(spark)
     val rows = Seq("Spark and HASH", "neither", "hash only", "Kelvin hash")
-    val dir = "/root/repo/target/msci_rows"
+    val dir = tmp("msci_rows")
     rows.toDF("t").write.mode("overwrite").parquet(dir)
     spark.read.parquet(dir).createOrReplaceTempView("msci_rows")
     val q = spark.sql(

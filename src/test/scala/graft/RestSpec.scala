@@ -9,10 +9,10 @@ import graft.rest.{Catalog, RestServer}
 /** End-to-end REST integration: DDL → ingest → status → search →
   * analyzer → drop over real HTTP (mirrors the reference's
   * tests/integration/test_rest_ingest_api + test_rest_search_api flow). */
-class RestSpec extends AnyFunSuite {
+class RestSpec extends AnyFunSuite with TempDirs {
   import TestSpark._
 
-  private val root = "/root/repo/target/rest_spec_" + System.nanoTime()
+  private val root = tmp("rest_spec_") + System.nanoTime()
   private val catalog = new Catalog(spark, root)
   private val server = new RestServer(spark, catalog, port = 0)
   server.start()

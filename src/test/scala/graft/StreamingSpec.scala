@@ -9,7 +9,7 @@ import graft.streaming.StreamOps.IngestRow
 
 /** Drives the streaming operators with MemoryStream sources and memory
   * sinks (batch-synchronous via processAllAvailable). */
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with TempDirs {
   import TestSpark._
   import spark.implicits._
 
@@ -42,7 +42,7 @@ class StreamingSpec extends AnyFunSuite {
     // offsets (= commit SNs), cross-batch idempotent dedup, parquet
     // commit, then a time-bounded read over the committed table.
     import org.apache.spark.sql.types._
-    val base = "/root/repo/target/stream_file_" + System.nanoTime()
+    val base = tmp("stream_file_") + System.nanoTime()
     val inDir = new java.io.File(base + "/in"); inDir.mkdirs()
     def writeBatch(name: String, rows: Seq[String]): Unit =
       java.nio.file.Files.writeString(
@@ -81,7 +81,7 @@ class StreamingSpec extends AnyFunSuite {
   test("WAL source abstraction: file transport → json decode → dedup → " +
     "commit (transport-swappable with the kafka() reader)") {
     import org.apache.spark.sql.types._
-    val base = "/root/repo/target/stream_wal_" + System.nanoTime()
+    val base = tmp("stream_wal_") + System.nanoTime()
     val inDir = new java.io.File(base + "/in"); inDir.mkdirs()
     val schema = StructType(Seq(
       StructField("_idem", StringType), StructField("_time", TimestampType),
@@ -132,7 +132,7 @@ class StreamingSpec extends AnyFunSuite {
   test("stream-static enrichment join sees dimension updates per batch") {
     implicit val sql = spark.sqlContext
     import spark.implicits._
-    val dimPath = "/root/repo/target/enrich_dim_" + System.nanoTime()
+    val dimPath = tmp("enrich_dim_") + System.nanoTime()
     Seq((1L, "gold"), (2L, "basic")).toDF("dim_id", "tier")
       .write.mode("overwrite").parquet(dimPath)
     val src = MemoryStream[IngestRow]

@@ -1,0 +1,84 @@
+package graft
+
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.scalatest.funsuite.AnyFunSuite
+
+class TablesSpec extends AnyFunSuite with TempDirs {
+  import TestSpark._
+  import spark.implicits._
+
+  /** Spark jobs that `body` launches from this thread: jobs are tagged
+    * with a job group, and a marker job after `body` proves the listener
+    * has seen every earlier job. */
+  private def jobsIn(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = "tables-spec-" + System.nanoTime()
+    val jobs = new AtomicInteger
+    val markerSeen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) {
+          if (e.properties.getProperty("spark.job.description") == "marker") markerSeen.countDown()
+          else jobs.incrementAndGet()
+        }
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "body")
+    try {
+      body
+      sc.setJobDescription("marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(markerSeen.await(60, TimeUnit.SECONDS), "listener never saw the marker job")
+      jobs.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("a second load of a table launches no Spark job") {
+    val dir = tmp("second_load")
+    Seq((1L, "a"), (2L, "b")).toDF("k", "v").write.parquet(s"$dir/t.parquet")
+    assert(jobsIn(Tables.load(spark, dir, "t")) >= 1, "first load infers the schema")
+    assert(jobsIn(Tables.load(spark, dir, "t")) == 0)
+    // a parquet conf can change inferred types: changing one re-resolves
+    spark.conf.set("spark.sql.parquet.binaryAsString", "true")
+    try assert(jobsIn(Tables.load(spark, dir, "t")) >= 1)
+    finally spark.conf.unset("spark.sql.parquet.binaryAsString")
+  }
+
+  test("a rewritten table re-resolves its schema") {
+    val dir = tmp("rewrite")
+    Seq((1L, "a")).toDF("k", "v").write.parquet(s"$dir/t.parquet")
+    assert(Tables.load(spark, dir, "t").columns.toSeq == Seq("k", "v"))
+    Seq((2L, 3.5, "b")).toDF("k", "x", "v").write.mode("overwrite").parquet(s"$dir/t.parquet")
+    val after = Tables.load(spark, dir, "t")
+    assert(after.columns.toSeq == Seq("k", "x", "v"))
+    assert(after.as[(Long, Double, String)].collect().toSeq == Seq((2L, 3.5, "b")))
+  }
+
+  test("a typed load returns the rows and schema of an inferred read") {
+    Tables.all.filterNot(_ == "events").foreach { name =>
+      val typed = Tables.load(spark, sf, name)
+      val inferred = spark.read.parquet(s"$sf/$name.parquet")
+      assert(typed.schema == inferred.schema, name)
+      assert(typed.exceptAll(inferred).isEmpty && inferred.exceptAll(typed).isEmpty, name)
+    }
+  }
+
+  test("a missing table still fails with Spark's error") {
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      Tables.load(spark, tmp("missing"), "t"))
+    assert(e.getMessage.contains("PATH_NOT_FOUND"), e.getMessage)
+  }
+
+  test("the scratch root belongs to this JVM") {
+    val root = new java.io.File(Tables.scratchRoot)
+    assert(root.getName == s"graft-scratch-${ProcessHandle.current().pid()}")
+    assert(Set("/dev/shm", new java.io.File(System.getProperty("java.io.tmpdir")).getPath)
+      .contains(root.getParent))
+  }
+}

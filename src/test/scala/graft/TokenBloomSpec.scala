@@ -8,11 +8,11 @@ import graft.plans.TokenBloomIndex
   * counts on a controlled layout, byte-identical results vs the full
   * scan, and the pattern→gram extraction rules (wildcard resets,
   * escapes, too-short runs). */
-class TokenBloomSpec extends AnyFunSuite {
+class TokenBloomSpec extends AnyFunSuite with TempDirs {
   import TestSpark._
   import spark.implicits._
 
-  private val dir = "/root/repo/target/tokenbloom_test"
+  private val dir = tmp("tokenbloom_test")
 
   private def fixture(): Unit = {
     // 4 hash-partitioned files, each with a partition-unique marker
