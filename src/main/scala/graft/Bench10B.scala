@@ -138,8 +138,8 @@ object Bench10B {
     // cost is ONE full scan, amortized over every later point query —
     // timed separately so the probe reports the MV economics honestly
     val t0 = System.nanoTime()
-    graft.plans.Projections.registerAgg(spark, hits,
-      Seq("AdvEngineID"), Nil, coalesceTo = Some(1))
+    graft.plans.Projections.registerAggExpr(spark, hits,
+      keys = Seq(col("AdvEngineID")), measures = Nil, coalesceTo = Some(1))
     val stateBuildSec = (System.nanoTime() - t0) / 1e9
 
     def once(sql: String): Double = {

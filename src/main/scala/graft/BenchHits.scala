@@ -361,17 +361,18 @@ object BenchHits {
     // exchange-free (the q43 mechanism). Before this, q8 routed to the
     // ~100 k-row (RegionID, AdvEngineID) state through two exchanges of
     // pure shuffle-file churn: 0.28 s at 1 B vs the reference's 0.061.
-    graft.plans.Projections.registerAgg(spark, hits,
-      Seq("AdvEngineID"), Nil, coalesceTo = Some(1))
-    graft.plans.Projections.registerAgg(spark, hits,
-      Seq("MobilePhone", "MobilePhoneModel"),
-      Seq("UserID", "AdvEngineID", "ResolutionWidth", "SearchPhrase",
-        "EventDate"))
-    graft.plans.Projections.registerAgg(spark, hits,
-      Seq("RegionID", "AdvEngineID"),
-      Seq("UserID", "AdvEngineID", "ResolutionWidth"))
-    graft.plans.Projections.registerAgg(spark, hits,
-      Seq("SearchEngineID", "SearchPhrase"), Seq("UserID"))
+    graft.plans.Projections.registerAggExpr(spark, hits,
+      keys = Seq(col("AdvEngineID")), measures = Nil, coalesceTo = Some(1))
+    graft.plans.Projections.registerAggExpr(spark, hits,
+      keys = Seq(col("MobilePhone"), col("MobilePhoneModel")),
+      measures = Seq("UserID", "AdvEngineID", "ResolutionWidth",
+        "SearchPhrase", "EventDate").map(col))
+    graft.plans.Projections.registerAggExpr(spark, hits,
+      keys = Seq(col("RegionID"), col("AdvEngineID")),
+      measures = Seq("UserID", "AdvEngineID", "ResolutionWidth").map(col))
+    graft.plans.Projections.registerAggExpr(spark, hits,
+      keys = Seq(col("SearchEngineID"), col("SearchPhrase")),
+      measures = Seq(col("UserID")))
     // URL group-by family (q34/q35: `GROUP BY URL` + top-10 — 52 s and
     // 45 s at 1 B, 97 s combined): the URL key domain is data-bounded at
     // ~1 M distinct values (not row-bounded), so the reference's answer
@@ -383,7 +384,8 @@ object BenchHits {
     // insert-path refresh). LAST among column-keyed states: routing
     // takes the first match, and global aggregates must keep finishing
     // from the ~20-row AdvEngineID state, never this ~1 M-row one.
-    graft.plans.Projections.registerAgg(spark, hits, Seq("URL"), Nil)
+    graft.plans.Projections.registerAggExpr(spark, hits,
+      keys = Seq(col("URL")), measures = Nil)
 
     // EXPRESSION-KEYED filtered aggregate projections (the reference's
     // general MV: SELECT with computed keys + WHERE): q28/q29 group by
@@ -410,7 +412,7 @@ object BenchHits {
     // (StorageMaterializedView.cpp): per-family partial-state tables
     // keyed on (group cols, EventDate) with every non-date predicate
     // baked. The query's EventDate window applies to the STATE table
-    // (key-only residual conjuncts route — Projections.routeExprAgg),
+    // (key-only residual conjuncts route — Projections.AggStateProj),
     // and the roll-up finishes from pre-merged counts: O(distinct keys)
     // instead of O(slice) at any scale. clusterIdx lays the state out
     // hash-partitioned on the query's grouping key, so the roll-up
@@ -604,7 +606,7 @@ object BenchHits {
     // True when either carries it; the ctr62AggRouted list below shows
     // WHICH mechanism fired (q40 present = state).
     val q40Routed =
-      (try graft.plans.Projections.usesExprAggProjection(spark.sql(queries(39)))
+      (try graft.plans.Projections.usesAggProjection(spark.sql(queries(39)))
        catch { case _: Throwable => false }) ||
       (filteredRegistered &&
         (try graft.plans.Projections.usesFilteredProjection(spark.sql(queries(39)))
@@ -612,7 +614,7 @@ object BenchHits {
     // Which of the seven registered ctr62 family members finish from
     // their aggregate state tables?
     val ctr62AggRouted = Seq(36, 37, 38, 39, 40, 41, 42).filter { i =>
-      try graft.plans.Projections.usesExprAggProjection(spark.sql(queries(i)))
+      try graft.plans.Projections.usesAggProjection(spark.sql(queries(i)))
       catch { case _: Throwable => false }
     }.map(i => s"q${i + 1}").mkString(",")
     // Same proof for the bucketed disk projection: does q16 (the

@@ -69,7 +69,7 @@ object BenchProbe {
       println("=== PHYSICAL ===\n" + qe.executedPlan)
     }
     if (sys.env.get("SPARK_GRAFT_PROBE_STATE").contains("1")) {
-      graft.plans.Projections.exprAggDfs.zipWithIndex.foreach { case ((df, pl), i) =>
+      graft.plans.Projections.aggStateDfs.zipWithIndex.foreach { case ((df, pl), i) =>
         val t0 = System.nanoTime()
         val n = df.count()
         val t1 = System.nanoTime()
@@ -84,7 +84,6 @@ object BenchProbe {
     }
     println(s"routes: rowProj=${graft.plans.Projections.usesRowProjection(spark.sql(sql))}" +
       s" filtered=${graft.plans.Projections.usesFilteredProjection(spark.sql(sql))}" +
-      s" exprAgg=${graft.plans.Projections.usesExprAggProjection(spark.sql(sql))}" +
       s" agg=${graft.plans.Projections.usesAggProjection(spark.sql(sql))}")
     for (r <- 1 to runs) {
       stages.clear()

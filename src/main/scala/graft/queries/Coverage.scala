@@ -212,7 +212,7 @@ object Coverage extends QueryModule {
       } finally graft.plans.Projections.clear()
     }),
 
-    // Single-partition bounded-key aggregate state (registerAgg
+    // Single-partition bounded-key aggregate state (registerAggExpr
     // coalesceTo=1 — the hits q8 mechanism): the key domain is bounded
     // (5 order priorities at any scale), so the state collapses to ONE
     // partition and the routed roll-up + its ORDER BY plan as a single
@@ -220,8 +220,9 @@ object Coverage extends QueryModule {
     // zero-exchange property AND result identity are all driver-checked.
     "q_projection_aggsingle" -> ((s, dir) => {
       val base = t(s, dir, "orders")
-      graft.plans.Projections.registerAgg(s, base,
-        Seq("o_orderpriority"), Seq("o_custkey"), coalesceTo = Some(1))
+      graft.plans.Projections.registerAggExpr(s, base,
+        keys = Seq(col("o_orderpriority")), measures = Seq(col("o_custkey")),
+        coalesceTo = Some(1))
       try withAqeOff(s) {
         val q = base.filter(col("o_orderpriority") =!= "1-URGENT")
           .groupBy(col("o_orderpriority"))
@@ -245,7 +246,7 @@ object Coverage extends QueryModule {
     }),
 
     // LIKE on a state KEY column (the hits q21 shape —
-    // Projections.routeAgg): a filter whose references are a subset of
+    // Projections.AggStateProj): a filter whose references are a subset of
     // the state's key tuple partitions whole GROUPS, so aggregating the
     // matching pre-merged state rows is exact, and the global LIKE-count
     // finishes from O(keys) state instead of re-scanning the base. The
@@ -255,8 +256,8 @@ object Coverage extends QueryModule {
     // on top of the unit spec + 10 M identity probe.
     "q_projection_likekey" -> ((s, dir) => {
       val base = t(s, dir, "orders")
-      graft.plans.Projections.registerAgg(s, base,
-        Seq("o_orderpriority"), Seq("o_custkey"))
+      graft.plans.Projections.registerAggExpr(s, base,
+        keys = Seq(col("o_orderpriority")), measures = Seq(col("o_custkey")))
       try {
         val q = base.filter(col("o_orderpriority").like("%URGENT%"))
           .agg(count(lit(1)).as("n"), sum(col("o_custkey")).as("sc"))
@@ -291,7 +292,7 @@ object Coverage extends QueryModule {
           .agg(count(lit(1)).as("n"), sum(col("o_custkey")).as("sc"),
             min(col("o_custkey")).as("minc"), max(col("o_custkey")).as("maxc"),
             round(avg(col("o_custkey")), 4).as("avgc"))
-        require(graft.plans.Projections.usesExprAggProjection(q),
+        require(graft.plans.Projections.usesAggProjection(q),
           "q_projection_aggelim: query did not finish from the state table")
         require(!q.queryExecution.optimizedPlan.exists(
             _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Aggregate]),
@@ -322,7 +323,7 @@ object Coverage extends QueryModule {
           .groupBy(year(col("o_orderdate")).as("y"))
           .agg(count(lit(1)).as("n"), sum(col("o_custkey")).as("sc"),
             min(col("o_custkey")).as("minc"), max(col("o_custkey")).as("maxc"))
-        require(graft.plans.Projections.usesExprAggProjection(q),
+        require(graft.plans.Projections.usesAggProjection(q),
           "q_projection_expragg: query did not finish from the state table")
         val local = q.collect()
         // cast AFTER aggregation: the groupBy key must stay the bare
@@ -355,7 +356,7 @@ object Coverage extends QueryModule {
           .groupBy(col("o_orderpriority"))
           .agg(count(lit(1)).as("n"), sum(col("o_custkey")).as("sc"),
             min(col("o_custkey")).as("minc"), max(col("o_custkey")).as("maxc"))
-        require(graft.plans.Projections.usesExprAggProjection(q),
+        require(graft.plans.Projections.usesAggProjection(q),
           "q_projection_aggwindow: residual-window query did not finish " +
             "from the state table")
         val local = q.collect()

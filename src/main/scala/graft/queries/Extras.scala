@@ -93,8 +93,9 @@ object Extras extends QueryModule {
     "q_projection_agg_route" -> ((s, dir) => {
       val base = t(s, dir, "orders")
         .select(col("o_orderpriority"), col("o_custkey"), col("o_totalprice"))
-      graft.plans.Projections.registerAgg(s, base,
-        Seq("o_orderpriority"), Seq("o_totalprice", "o_custkey"))
+      graft.plans.Projections.registerAggExpr(s, base,
+        keys = Seq(col("o_orderpriority")),
+        measures = Seq(col("o_totalprice"), col("o_custkey")))
       base.groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n"),
           count(col("o_totalprice")).as("n_priced"),

@@ -53,7 +53,8 @@ class AggProjectionSpec extends AnyFunSuite {
       approx_count_distinct(col("s")).as("u"))
     val exact = rows(q.drop("u"))
     assert(!routed(q), "query routed before any registration")
-    Projections.registerAgg(spark, base, Seq("k1", "k2"), Seq("v", "s"))
+    Projections.registerAggExpr(spark, base,
+      Seq(col("k1"), col("k2")), Seq(col("v"), col("s")))
     try {
       assert(routed(q), s"agg did not route to the state table:\n${physical(q)}")
       assert(rows(q.drop("u")) == exact, "routed result diverges from base scan")
@@ -75,7 +76,8 @@ class AggProjectionSpec extends AnyFunSuite {
         min(col("v")).as("mn"), avg(col("v")).as("av"))
     val expSubset = rows(bySubset)
     val expGlobal = rows(global)
-    Projections.registerAgg(spark, base, Seq("k1", "k2"), Seq("v", "s"))
+    Projections.registerAggExpr(spark, base,
+      Seq(col("k1"), col("k2")), Seq(col("v"), col("s")))
     try {
       assert(routed(bySubset), "key-subset roll-up did not route")
       assert(routed(global), "global aggregate did not route")
@@ -92,7 +94,8 @@ class AggProjectionSpec extends AnyFunSuite {
       .groupBy(col("k1")).agg(count(lit(1)).as("n"))
     val expKey = rows(onKey)
     val expMeasure = rows(onMeasure)
-    Projections.registerAgg(spark, base, Seq("k1", "k2"), Seq("v", "s"))
+    Projections.registerAggExpr(spark, base,
+      Seq(col("k1"), col("k2")), Seq(col("v"), col("s")))
     try {
       // a key filter partitions whole groups: state rows filter exactly
       assert(routed(onKey), "key-column filter blocked routing")
@@ -113,7 +116,7 @@ class AggProjectionSpec extends AnyFunSuite {
       .agg(count(lit(1)).as("n"))
     val exact = q.collect().head.getLong(0)
     assert(exact > 0, "fixture must match some rows")
-    Projections.registerAgg(spark, base, Seq("s"), Nil)
+    Projections.registerAggExpr(spark, base, Seq(col("s")), Nil)
     try {
       assert(routed(q), "LIKE key filter blocked routing")
       assert(Projections.usesAggProjection(q),
@@ -127,7 +130,7 @@ class AggProjectionSpec extends AnyFunSuite {
     val base = makeBase()
     // count(NULL) never reaches the rule — Spark constant-folds it to 0
     // first, leaving a distinct-keys aggregate that IS exact from state —
-    // but its guard in rewriteAggExprs still matters for hand-built plans,
+    // but its guard in the state rewrite still matters for hand-built plans,
     // and the result must match either way
     def nullCount: DataFrame =
       base.groupBy(col("k1")).agg(count(lit(null)).as("n"))
@@ -138,7 +141,8 @@ class AggProjectionSpec extends AnyFunSuite {
     def exprKey: DataFrame =
       base.groupBy((col("k1") + 1).as("k")).agg(count(lit(1)).as("n"))
     val exp = Seq(nullCount, distinctSum, collectList, exprKey).map(rows)
-    Projections.registerAgg(spark, base, Seq("k1", "k2"), Seq("v", "s"))
+    Projections.registerAggExpr(spark, base,
+      Seq(col("k1"), col("k2")), Seq(col("v"), col("s")))
     try {
       val qs = Seq(distinctSum, collectList, exprKey)
       qs.zip(Seq("sum(DISTINCT)", "collect_list",
@@ -154,7 +158,8 @@ class AggProjectionSpec extends AnyFunSuite {
     // the hits-suite q3 shape: SUM over a column that is also a key
     def q: DataFrame = base.agg(sum(col("k1")).as("sk"), count(lit(1)).as("n"))
     val expected = rows(q)
-    Projections.registerAgg(spark, base, Seq("k1"), Seq("k1", "v"))
+    Projections.registerAggExpr(spark, base,
+      Seq(col("k1")), Seq(col("k1"), col("v")))
     try {
       assert(routed(q), "key-as-measure aggregate did not route")
       assert(rows(q) == expected)
@@ -165,8 +170,10 @@ class AggProjectionSpec extends AnyFunSuite {
     val base = makeBase()
     try {
       val n0 = Projections.registeredCount
-      val p1 = Projections.registerAgg(spark, base, Seq("k1"), Seq("v"))
-      val p2 = Projections.registerAgg(spark, base, Seq("k1"), Seq("v"))
+      val p1 = Projections.registerAggExpr(spark, base,
+        Seq(col("k1")), Seq(col("v")))
+      val p2 = Projections.registerAggExpr(spark, base,
+        Seq(col("k1")), Seq(col("v")))
       assert(Projections.registeredCount == n0 + 1)
       assert(p1 eq p2)
     } finally { Projections.clear(); base.unpersist(false) }
@@ -179,7 +186,7 @@ class AggProjectionSpec extends AnyFunSuite {
     Seq((1L, 10L), (1L, 5L), (2L, 20L)).toDF("k", "v").write.parquet(table)
 
     val base = spark.read.parquet(table)
-    Projections.registerAgg(spark, base, Seq("k"), Seq("v"))
+    Projections.registerAggExpr(spark, base, Seq(col("k")), Seq(col("v")))
     try {
       def q: DataFrame = base.groupBy(col("k")).agg(sum(col("v")).as("s"))
       def result: Map[Long, Long] =
@@ -209,7 +216,7 @@ class AggProjectionSpec extends AnyFunSuite {
       .groupBy(col("k1")).agg(count(lit(1)).as("n"))
       .orderBy(desc("n"))
     val exact = q.collect().map(_.toString).sorted.toSeq
-    Projections.registerAgg(spark, base, Seq("k1"), Nil,
+    Projections.registerAggExpr(spark, base, Seq(col("k1")), Nil,
       coalesceTo = Some(1))
     // AQE hides the executed plan inside an AdaptiveSparkPlanExec leaf,
     // making a ShuffleExchangeExec collect vacuously empty — the
@@ -251,7 +258,8 @@ class AggProjectionSpec extends AnyFunSuite {
       sum(col("v")).as("sv"), min(col("v")).as("mn"), max(col("v")).as("mx"),
       avg(col("v")).as("av"))
     val exact = rows(q)
-    Projections.registerAgg(spark, base, Seq("k1", "k2"), Seq("v"))
+    Projections.registerAggExpr(spark, base,
+      Seq(col("k1"), col("k2")), Seq(col("v")))
     try {
       assert(routed(q), "full-key grouping did not route")
       assert(!q.queryExecution.optimizedPlan.exists(_.isInstanceOf[Aggregate]),

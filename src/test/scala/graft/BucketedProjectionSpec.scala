@@ -122,4 +122,35 @@ class BucketedProjectionSpec extends AnyFunSuite with TempDirs {
       assert(Projections.usesRowProjection(q))
     } finally Projections.clear()
   }
+
+  test("a disk directory owned by one projection kind is refused to the other") {
+    val (baseDir, copyDir) = freshDirs()
+    val base = writeBase(baseDir)
+    def byUid: DataFrame = base.groupBy(col("uid")).agg(count(lit(1)).as("c"))
+    def slice(dir: String): DataFrame =
+      Projections.registerFiltered(spark, base, "v", 3L,
+        Seq("uid", "phrase", "v"), diskDir = Some(dir),
+        clusterBy = Some((Seq("uid"), 8)))
+    def bucketed(dir: String): DataFrame =
+      Projections.registerBucketed(spark, base, Seq("uid"),
+        Seq("uid", "phrase", "v"), numBuckets = 8, dir = dir)
+    // a live bucketed row copy owns copyDir: a filtered slice laid out
+    // there would overwrite the files its plan scans
+    bucketed(copyDir)
+    try {
+      val e = intercept[IllegalArgumentException](slice(copyDir))
+      assert(e.getMessage.contains("already backing"))
+      assert(Projections.usesRowProjection(byUid))
+    } finally Projections.clear()
+    // and the other way round: a live filtered slice owns the directory
+    val sliceDir = copyDir + "_v3"
+    slice(sliceDir)
+    try {
+      val e = intercept[IllegalArgumentException](bucketed(sliceDir))
+      assert(e.getMessage.contains("already backing"))
+      val q3 = base.filter(col("v") === 3L).groupBy(col("uid"))
+        .agg(count(lit(1)).as("c"))
+      assert(Projections.usesFilteredProjection(q3))
+    } finally Projections.clear()
+  }
 }

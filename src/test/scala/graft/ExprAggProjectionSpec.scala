@@ -17,7 +17,7 @@ class ExprAggProjectionSpec extends AnyFunSuite {
   import TestSpark._
 
   private def routed(df: DataFrame): Boolean =
-    Projections.usesExprAggProjection(df)
+    Projections.usesAggProjection(df)
 
   private def rows(df: DataFrame): Set[String] =
     df.collect().map(_.toString).toSet
@@ -66,17 +66,6 @@ class ExprAggProjectionSpec extends AnyFunSuite {
       // the returned value must be SOME ref of the group
       val vals = q.collect().map(_.getAs[String]("a"))
       assert(vals.forall(v => v == "" || v.startsWith("r")))
-      // routeNondeterministic=false pins routed == unrouted values:
-      // the within-contract-but-different any_value substitution must
-      // decline (count/sum/min/max still route)
-      Projections.routeNondeterministic = false
-      try {
-        // fresh frame: q's memoized QueryExecution pre-dates the flag
-        val q2 = base.groupBy(substring(col("url"), 8, 3).as("key"))
-          .agg(any_value(col("ref")).as("a"), count(lit(1)).as("c"))
-        assert(!routed(q2),
-          "any_value routed with nondeterministic substitutions disabled")
-      } finally Projections.routeNondeterministic = true
     } finally Projections.clear()
   }
 

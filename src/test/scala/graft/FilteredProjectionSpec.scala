@@ -17,6 +17,17 @@ class FilteredProjectionSpec extends AnyFunSuite with TempDirs {
   private def physical(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  /** Does `df` scan files under `dir`? Read from the file relations'
+    * root paths: the plan string cuts a long path short. */
+  private def scans(df: DataFrame, dir: String): Boolean = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val want = new java.io.File(dir).getAbsolutePath
+    df.queryExecution.optimizedPlan.collect {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
+        fs.location.rootPaths.map(_.toUri.getPath)
+    }.flatten.contains(want)
+  }
+
   private def makeBase(): DataFrame = {
     val df = spark.range(50000).select(
       when(col("id") % 10 === 0, lit(62)).otherwise(col("id") % 500)
@@ -110,7 +121,7 @@ class FilteredProjectionSpec extends AnyFunSuite with TempDirs {
       assert(Projections.usesFilteredProjection(q),
         s"did not route to the disk projection:\n${physical(q)}")
       // the routed scan must read the projection parquet, not the base
-      assert(physical(q).contains("_ctr62"),
+      assert(scans(q, dir + "_ctr62"),
         s"routed plan does not scan the materialized slice:\n${physical(q)}")
       assert(q.collect().map(_.toString).sorted.toSeq == exact,
         "disk-routed result diverges from the base scan")
@@ -205,7 +216,7 @@ class FilteredProjectionSpec extends AnyFunSuite with TempDirs {
     finally spark.conf.set(coalesce, prev)
     try {
       assert(Projections.usesFilteredProjection(q), "did not route")
-      assert(physical(q).contains("_ctr62"), "not scanning the slice")
+      assert(scans(q, slice), "not scanning the slice")
       assert(q.collect().map(_.toString).sorted.toSeq == exact,
         "routed window result diverges from the base scan")
       // disjoint per-file ranges: the layout the footer-stats prune needs
@@ -332,7 +343,7 @@ class FilteredProjectionSpec extends AnyFunSuite with TempDirs {
     try {
       assert(Projections.usesFilteredProjection(q),
         s"did not route to the bucketed slice:\n${physical(q)}")
-      assert(physical(q).contains("_s62"),
+      assert(scans(q, slice),
         s"routed plan does not scan the bucketed slice:\n${physical(q)}")
       val exchanges = q.queryExecution.executedPlan.collect {
         case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
@@ -364,5 +375,48 @@ class FilteredProjectionSpec extends AnyFunSuite with TempDirs {
       fs.delete(new org.apache.hadoop.fs.Path(dir0), true)
       fs.delete(new org.apache.hadoop.fs.Path(slice), true)
     }
+  }
+
+  test("ingest invalidation refreshes memory and disk slices: routed results see appended rows") {
+    val dir = tmp("filtered_refresh_") + System.nanoTime()
+    val slice = dir + "_ctr3"
+    def write(from: Long, until: Long, to: String): Unit =
+      spark.range(from, until).select((col("id") % 10).cast("int").as("ctr"),
+        (col("id") % 7).as("k"), col("id").as("v")).write.parquet(to)
+    write(0, 1000, dir)
+    val base = spark.read.parquet(dir)
+    def q(ctr: Int): DataFrame = base.filter(col("ctr") === ctr)
+      .groupBy(col("k")).agg(count(lit(1)).as("n"), sum(col("v")).as("sv"))
+    def result(ctr: Int): Map[Long, (Long, Long)] = {
+      val df = q(ctr)
+      assert(Projections.usesFilteredProjection(df), s"ctr=$ctr did not route")
+      df.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    }
+    def expected(ctr: Int, rows: Long): Map[Long, (Long, Long)] =
+      (0L until rows).filter(_ % 10 == ctr).groupBy(_ % 7)
+        .map { case (k, ids) => k -> (ids.size.toLong, ids.sum) }
+    Projections.registerFiltered(spark, base, "ctr", 2, Seq("ctr", "k", "v"))
+    Projections.registerFiltered(spark, base, "ctr", 3, Seq("ctr", "k", "v"),
+      diskDir = Some(slice))
+    try {
+      assert(result(2) == expected(2, 1000))
+      assert(result(3) == expected(3, 1000))
+      // add files the way an external ingest does — moved in, so Spark's
+      // own cache manager never hears of the write — then invalidate:
+      // both the memory and the disk slice are rebuilt over the
+      // re-listed base
+      val stage = dir + "_stage"
+      write(1000, 1500, stage)
+      new java.io.File(stage).listFiles().filter(_.getName.endsWith(".parquet"))
+        .foreach(f => java.nio.file.Files.move(f.toPath,
+          new java.io.File(dir, "appended-" + f.getName).toPath))
+      assert(result(2) == expected(2, 1000), "control: slice is a snapshot")
+      Projections.invalidatePath(dir)
+      assert(result(2) == expected(2, 1500),
+        "memory slice does not see the appended rows")
+      assert(result(3) == expected(3, 1500),
+        "disk slice does not see the appended rows")
+      assert(scans(q(3), slice))
+    } finally Projections.clear()
   }
 }
