@@ -162,23 +162,6 @@ object Bench {
     // this JVM's own 32 worker threads).
     val loadAvg = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
-    // 100 M-row hits results are a committed SNAPSHOT (BENCH_100M.json,
-    // produced by tools/run_bench100.sh — ~30 min with a 100 g heap, too
-    // heavy to re-measure inside every per-round bench). Printed as its
-    // own line BEFORE the suite line: the driver tail-captures stdout,
-    // and r9's embedded-snapshot suffix pushed the live sf0.1 numbers
-    // past the truncation point. The parsable suite line must be LAST.
-    Seq("BENCH_100M.json" -> "hits100m_snapshot",
-        "BENCH_100M_COLD.json" -> "hits100m_cold_snapshot",
-        "BENCH_1B.json" -> "hits1b_snapshot").foreach {
-      case (file, label) =>
-        try {
-          val p = java.nio.file.Paths.get(file)
-          if (java.nio.file.Files.exists(p))
-            println(s"""{"metric":"$label","snapshot":${
-              java.nio.file.Files.readString(p).trim}}""")
-        } catch { case _: Throwable => () }
-    }
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","stream_gate_sec":$streamTotal,"queries":$qs,"status":$statuses,"failed":$failedNames,"sf":"$sfDir","load_avg_ambient":$ambientLoad,"load_avg":$loadAvg$hits}"""
     try java.nio.file.Files.writeString(

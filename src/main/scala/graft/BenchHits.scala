@@ -596,7 +596,6 @@ object BenchHits {
     // plan Complete-mode agg, RegionID-class keys keep partial agg. The
     // engine decision is stats-driven; no per-query lists.
     graft.plans.TableStats.analyze(hits)
-    graft.plans.SkipPartialAgg.register(spark)
 
     val filteredRegistered = registerProjections(spark, hits, rows, path)
 

@@ -101,7 +101,6 @@ object BenchHitsCheck {
     hits.createOrReplaceTempView("hits")
     graft.functions.GraftScalar.register(spark)
     graft.plans.TableStats.analyze(hits)
-    graft.plans.SkipPartialAgg.register(spark)
 
     // pass 1: raw (no projections)
     val raw = probes.map { case (n, q) => n -> checksum(spark, q) }.toMap

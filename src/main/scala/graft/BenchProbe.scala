@@ -54,7 +54,6 @@ object BenchProbe {
     hits.createOrReplaceTempView("hits")
     graft.functions.GraftScalar.register(spark)
     graft.plans.TableStats.analyze(hits)
-    graft.plans.SkipPartialAgg.register(spark)
     if (!sys.env.get("SPARK_GRAFT_PROJECTIONS").contains("0"))
       BenchHits.registerProjections(spark, hits, BenchHits.HitsRows,
         BenchHits.DefaultPath)

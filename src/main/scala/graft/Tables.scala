@@ -185,6 +185,41 @@ object Tables {
     root.getPath
   }
 
+  /** The one hook every table writer calls after appending or rewriting
+    * files under `path` (REST ingest, WAL commit, maintenance rewrites):
+    * projections over the path rebuild and cached results over it drop
+    * (the reference pushes every inserted block through dependent MVs). */
+  def tableWritten(path: String): Unit = {
+    graft.plans.Projections.invalidatePath(path)
+    graft.core.QueryCache.invalidatePath(path)
+  }
+
+  /** Install graft's planner extensions on `spark`, each only if absent
+    * (so any number of calls leaves one copy):
+    *   - SkipPartialAgg, stats-driven shuffle-first aggregation: inert
+    *     until a table is ANALYZEd via plans.TableStats (auto mode vetoes
+    *     unanalyzed keys), then high-NDV group-bys plan Complete-mode agg
+    *     after the exchange;
+    *   - LazyTopK, lazy top-k materialization: wide ORDER BY + LIMIT
+    *     reads bound the scan by a narrow pre-pass (inert unless the
+    *     shape + width match);
+    *   - FastSubstring, the constant-substring fast path: LIKE '%x%'
+    *     (-> Contains) swaps to a Volnitsky bigram-skip matcher (measured
+    *     1.2-1.8x/row on hits-shaped strings, BENCH_volnitsky_ab.json)
+    *     and Filter AND-chains order cheap-first, both result-identical;
+    *   - RouteToProjection, routing to registered projections (returns
+    *     the plan untouched while none is registered). */
+  def installRules(spark: SparkSession): Unit = {
+    val x = spark.experimental
+    if (!x.extraStrategies.contains(graft.plans.SkipPartialAgg))
+      x.extraStrategies = graft.plans.SkipPartialAgg +: x.extraStrategies
+    val rules = Seq(graft.plans.LazyTopK.Rewrite,
+      graft.functions.FastSubstring.Rewrite,
+      graft.plans.Projections.RouteToProjection)
+    x.extraOptimizations =
+      x.extraOptimizations ++ rules.filterNot(x.extraOptimizations.contains)
+  }
+
   /** Apply engine-level session tuning once per session. Values chosen for
     * local[32] testing but expressed scale-independently: AQE handles
     * runtime coalescing/skew at any cluster size.
@@ -206,17 +241,6 @@ object Tables {
       "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     graft.functions.GraftScalar.register(spark)
-    // Stats-driven shuffle-first aggregation: inert until a table is
-    // ANALYZEd via plans.TableStats (auto mode vetoes unanalyzed keys),
-    // then high-NDV group-bys plan Complete-mode agg after the exchange.
-    graft.plans.SkipPartialAgg.register(spark)
-    // Lazy top-k materialization: wide ORDER BY + LIMIT reads bound the
-    // scan by a narrow pre-pass (inert unless the shape + width match).
-    graft.plans.LazyTopK.install(spark)
-    // Constant-substring fast path: LIKE '%x%' (-> Contains) swaps to a
-    // Volnitsky bigram-skip matcher (measured 1.2-1.8x/row on hits-shaped
-    // strings, BENCH_volnitsky_ab.json) and Filter AND-chains order
-    // cheap-first, both result-identical.
-    graft.functions.FastSubstring.install(spark)
+    installRules(spark)
   }
 }

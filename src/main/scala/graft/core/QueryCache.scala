@@ -2,12 +2,12 @@ package graft.core
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.Alias
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.types.StructType
 
-/** Query result cache with insert-driven invalidation.
+/** Query result cache with write-driven invalidation.
   *
   * EXTENSION beyond the reference: the daisy fork at `/root/reference`
   * (v21.4-era) has no query result cache — the closest machinery it has
@@ -30,33 +30,40 @@ import org.apache.spark.storage.StorageLevel
   *     component (LazyTopK's bounded pre-pass) must not run just to
   *     decide hit/miss, and a miss would otherwise pay full optimization
   *     twice (once for the key, once for the recompute).
-  *   - A hit re-aliases the shared persisted result to the REQUESTING
-  *     query's output column names (`toDF(names)` — a zero-cost
-  *     projection over the persisted blocks), so a REST client always
-  *     reads back the aliases it asked for even when the entry was
-  *     populated by a differently-aliased twin.
-  *   - The cached value is the result persisted as a Spark cached
-  *     DataFrame (MEMORY_AND_DISK) — at cluster scale the result blocks
-  *     live on the executors, not the driver, so a cached 100 GB
-  *     aggregate is as legal as a cached 5-row one.
+  *   - An entry is the result's collected rows and schema, kept only
+  *     when the result has at most [[Bound]] rows. A larger result is
+  *     returned to its caller uncached (REST `/search` streams it with
+  *     `toLocalIterator` as it does any uncached query), so the cache
+  *     never holds more than `maxEntries * Bound` rows on the driver and
+  *     never registers anything with Spark's CacheManager: an ingest
+  *     write into a table never waits on, or re-caches, an entry.
+  *   - A hit is a one-partition local scan of the rows, renamed to the
+  *     REQUESTING query's output column names (`toDF(names)`), so a REST
+  *     client always reads back the aliases it asked for even when the
+  *     entry was populated by a differently-aliased twin. One partition
+  *     keeps a streamed hit to one Spark job.
   *   - Freshness follows the projection registry's model rather than
-  *     pure TTL expiry: every ingest path that appends files under a
-  *     table root calls [[invalidatePath]], which drops every entry whose
-  *     plan scanned that root. A miss whose compute overlaps an
+  *     pure TTL expiry: every writer that appends or rewrites files under
+  *     a table root (ingest, WAL commit, maintenance rewrites) calls
+  *     `Tables.tableWritten`, which calls [[invalidatePath]] to drop every
+  *     entry whose plan scanned that root. A miss whose compute overlaps an
   *     invalidation of a root it scans is returned to its caller but not
   *     kept, since it may predate the ingest. The TTL remains as a
   *     backstop for sources graft does not write (external files mutated
   *     out-of-band).
   *
-  * Recomputation always re-plans from the ANALYZED logical plan via
-  * `Dataset.ofRows` — never by re-running the caller's memoized
-  * DataFrame, whose executed plan has the pre-ingest file listing baked
-  * into its scan. A fresh planning pass re-lists the (refreshed) file
-  * index, so a post-invalidation recompute sees appended files.
+  * Recomputation always re-plans from the ANALYZED logical plan — never
+  * by re-running the caller's memoized DataFrame, whose executed plan
+  * has the pre-ingest file listing baked into its scan. A fresh planning
+  * pass re-lists the (refreshed) file index, so a post-invalidation
+  * recompute sees appended files.
   *
   * Entries evict LRU beyond `maxEntries` (access-ordered LinkedHashMap).
   */
 object QueryCache {
+
+  /** Most rows an entry holds; a larger result is served uncached. */
+  val Bound = 10000
 
   /** Cache key: the canonical plan with file relations swapped for
     * schema-only stand-ins, plus one token per swapped relation naming
@@ -67,10 +74,16 @@ object QueryCache {
   private final case class Key(plan: LogicalPlan, relations: Seq[String])
 
   private final case class Entry(
-      key: Key,
-      result: DataFrame,                  // persisted
+      rows: Array[Row],                   // at most Bound
+      schema: StructType,
       createdMs: Long,
-      paths: Set[String])                 // scanned file roots
+      paths: Set[String]) {               // scanned file roots
+    /** One partition, so a streamed hit runs one Spark job, not one per
+      * default-parallelism slice; columns take the caller's names. */
+    def scan(df: DataFrame): DataFrame =
+      df.sparkSession.createDataFrame(rows.toSeq.asJava, schema)
+        .coalesce(1).toDF(df.columns.toIndexedSeq: _*)
+  }
 
   // access-ordered: get() on a hit moves the entry to the young end, so
   // the iterator's first entry is always the LRU eviction victim. Keyed
@@ -136,10 +149,10 @@ object QueryCache {
         }
     }.flatten.toSet
 
-  /** Serve `df`'s result from the cache, computing and persisting it on
-    * miss. The returned DataFrame reads the persisted result — identical
-    * rows, no recomputation. Non-deterministic plans (rand(), current
-    * timestamp) are never cached. */
+  /** Serve `df`'s result from the cache, computing it on miss. The
+    * returned DataFrame scans the kept rows — identical rows, no
+    * recomputation. Non-deterministic plans (rand(), current timestamp)
+    * and results over [[Bound]] rows are never cached. */
   def cached(df: DataFrame): DataFrame = {
     val key = normalizedKey(df).getOrElse(return df)
     val deterministic = key.plan.collect { case n => n }
@@ -163,72 +176,50 @@ object QueryCache {
       val hit = entries.get(key)
       if (hit != null && now - hit.createdMs <= ttlMs) {
         hitCount += 1
-        // serve the REQUESTING query's output names over the shared
-        // persisted blocks (plans are value-identical, columns align
-        // positionally; the entry may have been keyed by an
-        // alias-blanked twin)
-        return hit.result.toDF(df.columns.toIndexedSeq: _*)
+        return hit.scan(df)
       }
-      if (hit != null) dropEntry(key, hit) // expired
+      if (hit != null) entries.remove(key) // expired
       epochs
     }
     // compute OUTSIDE the lock: a slow query must not serialize the cache.
     // NEVER re-run the caller's DataFrame — its memoized QueryExecution
     // has the planning-time file listing baked into the scan. The no-op
-    // filter builds a NEW Dataset over the analyzed plan, so persisting
-    // it triggers a fresh planning pass that re-lists the (refreshed)
-    // file index; the optimizer erases the trivial filter itself.
-    val result = df
-      .where(org.apache.spark.sql.functions.lit(true))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    result.count()
-    val entry = Entry(key, result, now, paths)
+    // filter builds a NEW Dataset over the analyzed plan, so collecting
+    // it runs a fresh planning pass that re-lists the (refreshed) file
+    // index; the optimizer erases the trivial filter itself.
+    val fresh = df.where(org.apache.spark.sql.functions.lit(true))
+    val rows = fresh.limit(Bound + 1).collect()
+    val entry = Entry(rows, fresh.schema, now, paths)
     lock.synchronized {
       missCount += 1
-      if (epochs != epochsBefore) {
-        // an ingest into a scanned root committed during the compute: the
-        // result may predate it, so this caller gets it but no one else
-        result.unpersist(false)
-        return result
-      }
+      if (rows.length > Bound) return df
+      // an ingest into a scanned root committed during the compute: the
+      // result may predate it, so this caller gets it but no one else
+      if (epochs != epochsBefore) return entry.scan(df)
       val race = entries.get(key)
-      if (race != null && now - race.createdMs <= ttlMs) {
-        result.unpersist(false)
-        return race.result.toDF(df.columns.toIndexedSeq: _*)
-      }
-      if (race != null) dropEntry(key, race)
+      if (race != null && now - race.createdMs <= ttlMs) return race.scan(df)
       entries.put(key, entry)
-      while (entries.size > maxEntries) {
-        val eldest = entries.entrySet().iterator().next()
-        dropEntry(eldest.getKey, eldest.getValue)
-      }
+      while (entries.size > maxEntries)
+        entries.remove(entries.keySet().iterator().next())
     }
-    result
-  }
-
-  private def dropEntry(key: Key, e: Entry): Unit = {
-    e.result.unpersist(false)
-    entries.remove(key)
+    entry.scan(df)
   }
 
   /** Insert-triggered invalidation: drop every entry whose plan scanned
-    * `path` (called by the same ingest hooks that refresh projections).
-    * Entry paths come from FileIndex rootPaths (always absolute), so a
-    * relative caller path is absolutized before matching — same contract
-    * as `Projections.invalidatePath`. */
+    * `path` (called by `Tables.tableWritten` beside the projection
+    * refresh). Entry paths come from FileIndex rootPaths (always
+    * absolute), so a relative caller path is absolutized before matching
+    * — same contract as `Projections.invalidatePath`. */
   def invalidatePath(path: String): Unit = lock.synchronized {
     val target = {
       val p = new org.apache.hadoop.fs.Path(path).toUri.getPath
       if (p.startsWith("/")) p else new java.io.File(p).getAbsolutePath
     }
     pathEpochs(target) += 1
-    entries.entrySet().asScala
-      .filter(_.getValue.paths.contains(target)).toSeq
-      .foreach(e => dropEntry(e.getKey, e.getValue))
+    entries.values().removeIf(_.paths.contains(target))
   }
 
   def clear(): Unit = lock.synchronized {
-    entries.values().asScala.toSeq.foreach(_.result.unpersist(false))
     entries.clear()
     hitCount = 0L
     missCount = 0L

@@ -1583,11 +1583,6 @@ object FastSubstring {
     }
   }
 
-  def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(Rewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ Rewrite
-
   /** Test-only: remove the rewrite so a spec can run the un-swapped
     * plan on the same session and A/B the results. */
   private[graft] def uninstallForTest(spark: SparkSession): Unit =

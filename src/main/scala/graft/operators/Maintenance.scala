@@ -256,7 +256,9 @@ object Maintenance {
     * absent between the two renames — the guarantee is recoverability,
     * not availability. Hadoop `fs.rename` signals failure by returning
     * false (not throwing), so each step is checked; a failed second
-    * rename restores the aside copy before aborting. */
+    * rename restores the aside copy before aborting. The rewrite is a
+    * table write like any ingest: projections and cached results over
+    * `path` are refreshed through `Tables.tableWritten`. */
   private def swap(spark: SparkSession, tmp: String, path: String): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val p = new org.apache.hadoop.fs.Path(path)
@@ -270,6 +272,7 @@ object Maintenance {
       throw new java.io.IOException(s"swap: rename $tmp -> $p failed (restored $old)")
     }
     fs.delete(old, true)                                   // drop aside
+    graft.Tables.tableWritten(path)
   }
 
   /** Current data-file count of a table directory. */

@@ -173,11 +173,6 @@ object LazyTopK {
     override def partitionSchema: StructType = underlying.partitionSchema
   }
 
-  def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(Rewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ Rewrite
-
   /** Plan test used by the bench's routing-proof flags: true when the
     * top-k was BOUNDED (tagged Filter above the relation) or ANSWERED at
     * planning (the narrow early-termination path replaced the file scan

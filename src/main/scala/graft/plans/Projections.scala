@@ -275,7 +275,7 @@ object Projections {
   private def add(spark: SparkSession, p: Proj): DataFrame = {
     val at = registry.asScala.indexWhere(_.rank > p.rank)
     registry.add(if (at < 0) registry.size else at, p)
-    install(spark)
+    graft.Tables.installRules(spark)
     p.projDf
   }
 
@@ -848,13 +848,13 @@ object Projections {
         clusterIdx, coalesceTo))
     }
 
-  /** Insert-triggered projection refresh — the ingest paths (Catalog
-    * ingest/ingestRaw, WalCommitter.commitBatch) call this after
-    * appending files under `path`. Every projection whose base scans
-    * that path is dropped and rebuilt: the base's file index is
-    * re-listed first (same mechanism as `spark.catalog.refreshByPath`),
-    * so both the rebuilt projection and any later un-routed scan of the
-    * same base lineage see the appended rows. */
+  /** Insert-triggered projection refresh — `Tables.tableWritten` calls
+    * this after every append or rewrite of files under `path`. Every
+    * projection whose base scans that path is dropped and rebuilt: the
+    * base's file index is re-listed first (same mechanism as
+    * `spark.catalog.refreshByPath`), so both the rebuilt projection and
+    * any later un-routed scan of the same base lineage see the appended
+    * rows. */
   def invalidatePath(path: String): Unit = lock.synchronized {
     if (registry.isEmpty) return
     // registered roots are absolute URI paths — absolutize a relative
@@ -920,11 +920,6 @@ object Projections {
     registry.forEach(_.drop())
     registry.clear()
   }
-
-  def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(RouteToProjection))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RouteToProjection
 
   /** An [[Aggregate]] under routing: the facts the projection kinds match
     * on, each computed at most once however many entries ask. */

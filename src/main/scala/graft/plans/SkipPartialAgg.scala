@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete}
 import org.apache.spark.sql.catalyst.planning.PhysicalAggregation
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
@@ -45,11 +44,6 @@ import org.apache.spark.sql.internal.SQLConf
 object SkipPartialAgg extends SparkStrategy {
   val ConfKey = "spark.graft.skipPartialAgg"
   val RatioKey = "spark.graft.skipPartialAgg.ratio"
-
-  def register(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(SkipPartialAgg))
-      spark.experimental.extraStrategies =
-        SkipPartialAgg +: spark.experimental.extraStrategies
 
   /** Stats verdict: estimated groups >= ratio * rows, with every grouping
     * attribute analyzed FOR THE RELATION THIS AGGREGATE SCANS (stats are

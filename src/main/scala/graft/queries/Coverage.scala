@@ -893,7 +893,8 @@ object Coverage extends QueryModule {
     // JSON-lines, then join + aggregate. Values surviving the round-trip
     // hash-equal the oracle running directly on the parquet source.
     "q_format_roundtrip" -> ((s, dir) => {
-      val scratch = "/root/repo/target/fmt_rt/" + dir.replaceAll("[^a-zA-Z0-9]", "_")
+      val scratch = new org.apache.hadoop.fs.Path(graft.Tables.scratchRoot,
+        "fmt_rt/" + dir.replaceAll("[^a-zA-Z0-9]", "_")).toString
       val nation = t(s, dir, "nation")
       val region = t(s, dir, "region")
       nation.write.mode("overwrite").option("header", "true").csv(scratch + "/nation_csv")

@@ -15,7 +15,8 @@ import org.apache.spark.sql.types.{ArrayType, StringType}
 object Formats extends QueryModule {
 
   private def scratch(dir: String) =
-    "/root/repo/target/fmt2/" + dir.replaceAll("[^a-zA-Z0-9]", "_")
+    new org.apache.hadoop.fs.Path(graft.Tables.scratchRoot,
+      "fmt2/" + dir.replaceAll("[^a-zA-Z0-9]", "_")).toString
 
   def queries: Map[String, Q] = Map(
     // ORC round-trip (reference ORCBlockInputFormat): columnar format

@@ -169,11 +169,7 @@ class Catalog(spark: SparkSession, root: String) {
       else bucketed
     arranged.write.mode("append")
       .partitionBy(TimeTable.BucketCol).parquet(dataPath(name))
-    // insert-triggered projection refresh (the reference pushes every
-    // inserted block through dependent MVs; our equivalent re-lists and
-    // rebuilds projections registered over this table's path)
-    graft.plans.Projections.invalidatePath(dataPath(name))
-    graft.core.QueryCache.invalidatePath(dataPath(name))
+    graft.Tables.tableWritten(dataPath(name))
     n
   }
 
@@ -236,8 +232,7 @@ class Catalog(spark: SparkSession, root: String) {
       .sortWithinPartitions(col("sourcetype"))
       .write.mode("append")
       .partitionBy(TimeTable.BucketCol).parquet(dataPath(name))
-    graft.plans.Projections.invalidatePath(dataPath(name))
-    graft.core.QueryCache.invalidatePath(dataPath(name))
+    graft.Tables.tableWritten(dataPath(name))
     n
   }
 

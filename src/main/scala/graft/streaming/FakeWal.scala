@@ -278,10 +278,7 @@ final class WalCommitter(tablePath: String, maxIdemKeys: Int = 100000) {
         }
       kept.drop("_wal_partition", "_wal_sn")
         .write.mode("append").parquet(tablePath)
-      // commit hook: refresh projections registered over this table
-      // (reference: inserts push blocks through dependent MVs)
-      graft.plans.Projections.invalidatePath(tablePath)
-      graft.core.QueryCache.invalidatePath(tablePath)
+      graft.Tables.tableWritten(tablePath)
     }
     seenIdem.synchronized(first.keys.foreach(k => seenIdem.put(k, java.lang.Boolean.TRUE)))
     ranges.foreach { case (p, (lo, hi)) =>

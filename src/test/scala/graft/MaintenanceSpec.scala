@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.core.QueryCache
 import graft.operators.Maintenance
 import graft.sql.Search
 
@@ -124,6 +125,21 @@ class MaintenanceSpec extends AnyFunSuite with TempDirs {
     assert(kept == 2 && deleted == 1)
     assert(spark.read.parquet(dir).select($"id").as[Int].collect().sorted
       .sameElements(Array(1, 3)))
+  }
+
+  test("a maintenance rewrite invalidates cached results over the table") {
+    val dir = tmp("mutdel_cache_test")
+    Seq(1L, 5L, 20L).toDF("v").write.mode("overwrite").parquet(dir)
+    def q = spark.read.parquet(dir).agg(sum($"v").as("s"))
+    QueryCache.clear()
+    try {
+      assert(QueryCache.cached(q).collect()(0).getLong(0) == 26L)
+      Maintenance.mutateDelete(spark, dir, "v > 10")
+      val misses = QueryCache.misses
+      assert(QueryCache.cached(q).collect()(0).getLong(0) == 6L,
+        "served the pre-mutation result")
+      assert(QueryCache.misses == misses + 1)
+    } finally QueryCache.clear()
   }
 
   test("ALTER UPDATE evaluates assignments on the pre-mutation row and casts to the column type") {

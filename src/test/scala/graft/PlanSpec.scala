@@ -226,7 +226,7 @@ class PlanSpec extends AnyFunSuite with TempDirs {
         (col("id") % 3).cast("string").as("tag"))
     df.createOrReplaceTempView("stats_t")
     TableStats.analyze(df)
-    SkipPartialAgg.register(spark)
+    Tables.tune(spark)
     try {
       def plan(sql: String): String =
         spark.sql(sql).queryExecution.executedPlan.toString
@@ -256,7 +256,7 @@ class PlanSpec extends AnyFunSuite with TempDirs {
     val df = spark.range(20000)
       .select(col("id").as("user_id"), (col("id") % 4).as("region_id"))
     TableStats.analyze(df)
-    SkipPartialAgg.register(spark)
+    Tables.tune(spark)
     try {
       def plan(q: DataFrame): String = q.queryExecution.executedPlan.toString
       // another table with the SAME column name, unanalyzed: veto

@@ -65,7 +65,7 @@ class PositionCISpec extends AnyFunSuite with TempDirs {
   test("instr(lower(x), c) and locate(c, lower(x)) swap to the CI " +
       "engine and keep results; position_ci matches them") {
     graft.functions.GraftScalar.register(spark)
-    graft.functions.FastSubstring.install(spark)
+    Tables.tune(spark)
     val rows = Seq("Spark SQL engine", "no match here", "SPARK upper",
       "mid sPaRk mid", "Kelvin sparK trail", null)
     // parquet-backed: a LocalRelation would be constant-folded away

@@ -7,8 +7,9 @@ import graft.core.QueryCache
 
 /** Query-cache contract (graft EXTENSION — the v21.4-era reference has no
   * query result cache; see QueryCache.scala class doc): plan-keyed hits,
-  * non-deterministic refusal, TTL expiry, LRU eviction, and insert-driven
-  * invalidation. */
+  * non-deterministic refusal, TTL expiry, LRU eviction, insert-driven
+  * invalidation, the row bound, one-job hits and no CacheManager
+  * registration. */
 class QueryCacheSpec extends AnyFunSuite {
   import TestSpark._
 
@@ -115,9 +116,7 @@ class QueryCacheSpec extends AnyFunSuite {
     freshState()
     val root = java.nio.file.Files.createTempDirectory("graft_qcache_race")
     val dir = root.resolve("t").toString
-    val staged = root.resolve("staged").toString
     spark.range(100).coalesce(1).write.parquet(dir)
-    spark.range(100, 200).coalesce(1).write.parquet(staged)
     val base = spark.read.parquet(dir)
     import QueryCacheSpec.{first, proceed, started}
     // the first row the compute reads parks it until the ingest below is
@@ -128,16 +127,18 @@ class QueryCacheSpec extends AnyFunSuite {
       id
     }
     val onPath = base.agg(sum(gate(col("id"))).as("s"))
-    val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    def submit[T](body: => T) = pool.submit(new java.util.concurrent.Callable[T] {
+      override def call(): T = body
+    })
     try {
-      val racing = pool.submit(new java.util.concurrent.Callable[Long] {
-        override def call(): Long = QueryCache.cached(onPath).collect()(0).getLong(0)
-      })
+      val racing = submit(QueryCache.cached(onPath).collect()(0).getLong(0))
       assert(started.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      // an ingest commits a file while the miss is being computed (a
-      // Spark write here would wait on the parked cache build)
-      new java.io.File(staged).listFiles().filter(_.getName.endsWith(".parquet"))
-        .foreach(f => java.nio.file.Files.move(f.toPath, root.resolve("t").resolve(f.getName)))
+      // an ingest commits through a DataFrameWriter while the miss is
+      // being computed: the cache registers nothing with Spark's
+      // CacheManager, so the append has no cache build to wait on
+      submit(spark.range(100, 200).coalesce(1).write.mode("append").parquet(dir))
+        .get(60, java.util.concurrent.TimeUnit.SECONDS)
       refreshFileIndex(base)
       QueryCache.invalidatePath(dir)
       proceed.countDown()
@@ -150,6 +151,45 @@ class QueryCacheSpec extends AnyFunSuite {
       QueryCache.clear()
       org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
     }
+  }
+
+  test("results over the row bound are served but not kept") {
+    freshState()
+    val q = spark.range(QueryCache.Bound + 1L).select((col("id") * 2).as("x"))
+    assert(QueryCache.cached(q).count() == QueryCache.Bound + 1L)
+    assert(QueryCache.size == 0 && QueryCache.misses == 1)
+    val small = spark.range(QueryCache.Bound).select((col("id") * 2).as("x"))
+    assert(QueryCache.cached(small).count() == QueryCache.Bound)
+    assert(QueryCache.size == 1)
+    QueryCache.clear()
+  }
+
+  test("the cache registers nothing with Spark's CacheManager") {
+    freshState()
+    // start from an empty CacheManager so the check sees only the cache
+    spark.catalog.clearCache()
+    def noCachedData = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.isEmpty
+    val q = spark.range(1000).groupBy((col("id") % 3).as("k")).agg(sum("id").as("s"))
+    QueryCache.cached(q).collect()
+    assert(QueryCache.misses == 1 && noCachedData)
+    QueryCache.cached(q).collect()
+    assert(QueryCache.hits == 1 && noCachedData)
+    QueryCache.clear()
+  }
+
+  test("a streamed hit runs at most one Spark job") {
+    freshState()
+    val q = spark.range(1000).groupBy((col("id") % 4).as("k")).agg(sum("id").as("s"))
+    QueryCache.cached(q)
+    var rows = 0
+    val jobs = jobsIn {
+      val it = QueryCache.cached(q).toJSON.toLocalIterator()
+      while (it.hasNext) { it.next(); rows += 1 }
+    }
+    assert(QueryCache.hits == 1 && rows == 4)
+    assert(jobs <= 1, s"a 4-row hit ran $jobs jobs")
+    QueryCache.clear()
   }
 }
 

@@ -1,43 +1,10 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 class TablesSpec extends AnyFunSuite with TempDirs {
   import TestSpark._
   import spark.implicits._
-
-  /** Spark jobs that `body` launches from this thread: jobs are tagged
-    * with a job group, and a marker job after `body` proves the listener
-    * has seen every earlier job. */
-  private def jobsIn(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = "tables-spec-" + System.nanoTime()
-    val jobs = new AtomicInteger
-    val markerSeen = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) {
-          if (e.properties.getProperty("spark.job.description") == "marker") markerSeen.countDown()
-          else jobs.incrementAndGet()
-        }
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "body")
-    try {
-      body
-      sc.setJobDescription("marker")
-      sc.parallelize(Seq(1), 1).count()
-      assert(markerSeen.await(60, TimeUnit.SECONDS), "listener never saw the marker job")
-      jobs.get
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
 
   test("a second load of a table launches no Spark job") {
     val dir = tmp("second_load")

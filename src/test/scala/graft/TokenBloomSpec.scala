@@ -80,7 +80,7 @@ class TokenBloomSpec extends AnyFunSuite with TempDirs {
       "LIKE scan still runs the fast matcher on the surviving files " +
       "(judge r15 Wrong #4 — pin the ordering)") {
     fixture()
-    graft.functions.FastSubstring.install(spark)
+    Tables.tune(spark)
     val (df, read, total) = TokenBloomIndex.scanLike(
       spark, dir, "body", "%markerp2%")
     assert(read == 1 && total == 4, "the bloom prune must still fire")
