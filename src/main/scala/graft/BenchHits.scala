@@ -589,7 +589,6 @@ object BenchHits {
       }
     }
     hits.createOrReplaceTempView("hits")
-    graft.functions.GraftScalar.register(spark) // domain_without_www (q29)
 
     // ANALYZE pass (untimed): per-column NDV over the cached table feeds
     // SkipPartialAgg's shuffle-first decision — UserID/URL-class keys

@@ -99,7 +99,6 @@ object BenchHitsCheck {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     hits.count()
     hits.createOrReplaceTempView("hits")
-    graft.functions.GraftScalar.register(spark)
     graft.plans.TableStats.analyze(hits)
 
     // pass 1: raw (no projections)

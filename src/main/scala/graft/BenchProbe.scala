@@ -52,7 +52,6 @@ object BenchProbe {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     hits.count()
     hits.createOrReplaceTempView("hits")
-    graft.functions.GraftScalar.register(spark)
     graft.plans.TableStats.analyze(hits)
     if (!sys.env.get("SPARK_GRAFT_PROJECTIONS").contains("0"))
       BenchHits.registerProjections(spark, hits, BenchHits.HitsRows,

@@ -41,9 +41,4 @@ object Rawstore {
     * with JSONExtract* over `_raw`). */
   def jsonField(field: String): org.apache.spark.sql.Column =
     get_json_object(col("_raw"), s"$$.$field")
-
-  /** Query-time regexp field extraction (the Regexp/Template format
-    * analogue). */
-  def regexField(pattern: String, group: Int): org.apache.spark.sql.Column =
-    regexp_extract(col("_raw"), pattern, group)
 }

@@ -2,11 +2,12 @@ package graft.functions
 
 import java.util.{HashSet => JHashSet}
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** shingle_hashes(tokens, n) — distinct 64-bit FNV-1a hashes of the word
@@ -165,5 +166,68 @@ object ShingleHashes {
     }
     new GenericArrayData(
       if (outLen == count) out else java.util.Arrays.copyOf(out, outLen))
+  }
+}
+
+/** repetition_signals(tokens, topNs, dupNs) — Gopher's repetition signals
+  * (Rae et al. 2021, App. A) of one token array, as a struct of longs:
+  * `top{n}_chars` per n in topNs (the largest count × chars over the
+  * distinct word n-grams, chars in code points as Spark's `length`
+  * counts them), then `dup{n}_toks` per n in dupNs (token positions
+  * covered by n-grams occurring at least twice, each position once). A
+  * gram is its tokens joined by one space, nulls skipped — the strings
+  * [[graft.operators.CorpusOps.ngrams]] builds. A null or short array
+  * gives zeros. One hash map per (row, n): O(L·n) work in a narrow
+  * projection, interpreted since the map loop has no codegen form. */
+case class RepetitionSignals(child: Expression, topNs: Seq[Int], dupNs: Seq[Int])
+    extends UnaryExpression with CodegenFallback {
+  require((topNs ++ dupNs).forall(_ >= 1), "repetition_signals: n must be >= 1")
+
+  override def dataType: DataType = StructType(
+    (topNs.map(n => s"top${n}_chars") ++ dupNs.map(n => s"dup${n}_toks"))
+      .map(StructField(_, LongType, nullable = false)))
+  override def nullable: Boolean = false
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"repetition_signals requires array<string>, got $t")
+  }
+
+  override def eval(input: InternalRow): Any = {
+    val toks = child.eval(input).asInstanceOf[ArrayData]
+    new GenericInternalRow((topNs.map(RepetitionSignals.signal(toks, _, dup = false)) ++
+      dupNs.map(RepetitionSignals.signal(toks, _, dup = true))).toArray[Any])
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): RepetitionSignals =
+    copy(child = newChild)
+}
+
+object RepetitionSignals {
+  private val Space = UTF8String.fromString(" ")
+
+  /** top-n char coverage of `toks`, or with `dup` its dup-n token
+    * coverage: duplicate spans merged in ascending start order, each
+    * start adding the part of [pos, pos + n) past the running end. */
+  def signal(toks: ArrayData, n: Int, dup: Boolean): Long = {
+    val m = if (toks == null) 0 else math.max(toks.numElements() - n + 1, 0)
+    val window = new Array[UTF8String](n)
+    val grams = Array.tabulate(m) { i =>
+      for (j <- 0 until n)
+        window(j) = if (toks.isNullAt(i + j)) null else toks.getUTF8String(i + j)
+      UTF8String.concatWs(Space, window: _*)
+    }
+    val counts = scala.collection.mutable.HashMap.empty[UTF8String, Int].withDefaultValue(0)
+    grams.foreach(g => counts(g) += 1)
+    if (!dup) grams.foldLeft(0L)((best, g) => math.max(best, counts(g).toLong * g.numChars))
+    else {
+      var prevEnd = -1L
+      grams.indices.filter(pos => counts(grams(pos)) >= 2).foldLeft(0L) { (covered, pos) =>
+        val c = math.max(pos + n - math.max(pos, prevEnd), 0L)
+        prevEnd = math.max(prevEnd, pos + n.toLong)
+        covered + c
+      }
+    }
   }
 }

@@ -137,10 +137,13 @@ object GraftScalar {
         s"$what must be an integer literal, got: $other")
     }
   }
+  private def litInts(exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
+                      i: Int, what: String): Seq[Int] = {
+    require(exprs.length > i && exprs(i).foldable, s"$what must be a literal int array")
+    exprs(i).eval().asInstanceOf[ArrayData].toIntArray().toSeq
+  }
   import org.apache.spark.sql.SparkSession
   import org.apache.spark.sql.functions.call_function
-
-  @volatile private var registered = false
 
   /** Idempotently register graft custom expressions with the session. */
   def register(spark: SparkSession): Unit = {
@@ -491,7 +494,10 @@ object GraftScalar {
       "shingle_hashes", exprs => ShingleHashes(exprs(0), exprs(1)), "built-in")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "char_ngram_hashes", exprs => NgramHashes(exprs(0), exprs(1)), "built-in")
-    registered = true
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      "repetition_signals", exprs => RepetitionSignals(exprs(0),
+        litInts(exprs, 1, "repetition_signals topNs"),
+        litInts(exprs, 2, "repetition_signals dupNs")), "built-in")
   }
 
   def siphash64(s0: Column): Column = call_function("siphash64", s0)
@@ -525,6 +531,12 @@ object GraftScalar {
     import org.apache.spark.sql.functions.lit
     call_function("char_ngram_hashes", s, lit(n))
   }
+
+  /** Gopher repetition signals of a token array ([[RepetitionSignals]]). */
+  def repetitionSignals(tokens: Column, topNs: Seq[Int], dupNs: Seq[Int]): Column =
+    call_function("repetition_signals", tokens,
+      org.apache.spark.sql.functions.typedLit(topNs),
+      org.apache.spark.sql.functions.typedLit(dupNs))
 
   /** Hamming distance between two long fingerprints. */
   def hamming64(a: Column, b: Column): Column = {

@@ -16,7 +16,10 @@ import graft.functions.GraftScalar
   * Scale rules shared by every member: pure `functions._` column
   * arithmetic (codegen, no UDF) for the per-document work, joins only on
   * bucket keys (cluster id), and window functions partitioned by a
-  * bounded key (language) — never a single global ordering.
+  * bounded key (language) — never a single global ordering. A
+  * per-document signal that columns reach only by explode → groupBy(doc)
+  * → join back is one row-local expression over the document's own array
+  * instead ([[repetitionSignals]]: 1 Spark job where that plan ran 8).
   */
 object CorpusOps {
 
@@ -37,9 +40,9 @@ object CorpusOps {
     * derive from file sizes, so heavily-compressed corpora may need
     * spark.sql.sources.fileCompressionFactor or a lower threshold).
     * Persisted frames register with [[graft.Tables.registerScratch]] so
-    * the bench/verify harness unpersists them after the query. NOT
-    * applied to [[repetitionSignals]] — measured worse there (see the
-    * note at its base frame). */
+    * the bench/verify harness unpersists them after the query.
+    * [[repetitionSignals]] has no multi-consumer frame to gate: it is one
+    * narrow pass over each document's token array. */
   private[graft] def persistIfLarge(df: DataFrame): DataFrame = {
     val thr = df.sparkSession.conf
       .get("spark.graft.corpus.persistThreshold", (256L << 20).toString)
@@ -149,71 +152,15 @@ object CorpusOps {
     *    counts once (the "fraction of characters in duplicate n-grams"
     *    family, token-resolution, the paper's full n = 5..10 range).
     *
-    * Shaped for scale, not per-row lambdas: grams explode once per n and
-    * aggregate by (doc, gram) — O(L log L)-ish work per document instead
-    * of the O(L²) filter-inside-transform a HOF version would run, so a
-    * 100k-token document costs 4·100k exploded rows, not 10¹⁰ compares.
-    * Every shuffle and window is doc-keyed (bounded partitions). */
+    * Every signal is defined per document, so it is one row-local
+    * expression ([[graft.functions.RepetitionSignals]]): one hash map of
+    * grams per (document, n), O(L·n) work, no shuffle, one Spark job. */
   def repetitionSignals(df: DataFrame, idCol: String, toksCol: Column,
                         topNs: Seq[Int] = Seq(2, 3, 4),
-                        dupNs: Seq[Int] = Seq(5, 6, 7, 8, 9, 10)): DataFrame = {
-    // The base fans into 1 + |topNs| + |dupNs| plan branches, but a
-    // size-gated persist was MEASURED WORSE here (r17, 50× corpus:
-    // 64-86 s recompute vs 76-107 s persisted): the cached frame holds
-    // the exploded token ARRAYS — far fatter than the compact parquet
-    // strings each branch re-reads — and the explode+window stages
-    // dominate regardless. Recompute stands; contrast lmScore, whose
-    // narrower gram frame DOES win from the same gate.
-    val base = df.select(col(idCol).as("id"), toksCol.as("toks"))
-      .withColumn("n_toks", size(col("toks")).cast("long"))
-    val ids = base.select(col("id"), col("n_toks"))
-
-    // top-n-gram char coverage, all n in one exploded pass
-    val tagged = topNs.map { n =>
-        base.select(col("id"), lit(n).as("n"),
-          explode(ngrams(col("toks"), n)).as("g"))
-      }.reduce(_ unionByName _)
-    val covers = tagged.groupBy(col("id"), col("n"), col("g"))
-      .agg(count(lit(1)).as("cnt"))
-      .withColumn("cover", col("cnt") * length(col("g")))
-      .groupBy(col("id")).pivot("n", topNs)
-      .agg(max(col("cover")))
-    val coverCols = topNs.map(n => coalesce(col(s"`$n`"), lit(0L))
-      .as(s"top${n}_chars"))
-
-    // duplicate-n-gram coverage, all n in one tagged pass: dup start
-    // positions, interval-merged per (doc, n) by the same
-    // running-max-end fold as [[dupSpans]], then pivoted wide
-    val taggedDup = dupNs.map { n =>
-        base.select(col("id"), lit(n).as("n"),
-          posexplode(ngrams(col("toks"), n)).as(Seq("pos", "g")))
-      }.reduce(_ unionByName _)
-    val dupPos = taggedDup
-      .withColumn("cnt", count(lit(1)).over(
-        Window.partitionBy(col("id"), col("n"), col("g"))))
-      .filter(col("cnt") >= 2)
-      .select(col("id"), col("n"), col("pos").cast("long").as("pos"))
-    val wPrev = Window.partitionBy(col("id"), col("n")).orderBy(col("pos"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val dupCov = dupPos
-      .withColumn("prev_end",
-        coalesce(max(col("pos") + col("n")).over(wPrev), lit(-1L)))
-      .withColumn("c", greatest(
-        col("pos") + col("n") - greatest(col("pos"), col("prev_end")),
-        lit(0L)))
-      .groupBy(col("id")).pivot("n", dupNs)
-      .agg(sum(col("c")))
-    val dupCols = dupNs.map(n => coalesce(col(s"`$n`"), lit(0L))
-      .as(s"dup${n}_toks"))
-
-    ids.join(covers.select(col("id") +: coverCols: _*), Seq("id"), "left")
-      .join(dupCov.select(col("id") +: dupCols: _*), Seq("id"), "left")
-      .select(col("id") +: col("n_toks") +:
-        (topNs.map(n => coalesce(col(s"top${n}_chars"), lit(0L))
-          .as(s"top${n}_chars")) ++
-         dupNs.map(n => coalesce(col(s"dup${n}_toks"), lit(0L))
-           .as(s"dup${n}_toks"))): _*)
-  }
+                        dupNs: Seq[Int] = Seq(5, 6, 7, 8, 9, 10)): DataFrame =
+    df.select(col(idCol).as("id"), size(toksCol).cast("long").as("n_toks"),
+        GraftScalar.repetitionSignals(toksCol, topNs, dupNs).as("sig"))
+      .select("id", "n_toks", "sig.*")
 
   // ----------------------------------------------------------- PII scrubbing
 

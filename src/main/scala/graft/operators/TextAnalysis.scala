@@ -39,8 +39,6 @@ object TextAnalysis {
     when(best.getField("hits") > 0, best.getField("lang")).otherwise(lit("und"))
   }
 
-  def langId(text: Column): Column = langIdFromToks(tokens(text))
-
   /** Whitespace token count. */
   def tokenCount(text: Column): Column = size(tokens(text)).cast("long")
 

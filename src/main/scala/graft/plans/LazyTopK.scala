@@ -43,9 +43,9 @@ import org.apache.spark.sql.types._
   * plus a no-nulls proof under a nullable key), the pre-pass rows ARE
   * the answer and the subtree collapses to a k-row LocalRelation at
   * planning time — the reference's read-in-primary-key-order early
-  * termination, Spark-shaped. Below the [[minDisjointFraction]]
+  * termination, Spark-shaped. Below the [[MinDisjointFraction]]
   * clustering threshold the attempt is budget-capped
-  * ([[attemptBudgetFraction]]) and vetoed up front by a footer-only
+  * ([[AttemptBudgetFraction]]) and vetoed up front by a footer-only
   * keep estimate, so an ORDER BY over an unclustered column costs no
   * attempt I/O at all and keeps its plain TakeOrdered plan.
   *
@@ -60,9 +60,9 @@ import org.apache.spark.sql.types._
   *    deterministic predicates, no subqueries;
   *  - first sort key is a plain attribute of an atomic orderable type
   *    (pushable to parquet statistics);
-  *  - at least [[minSavedCols]] columns are read that the narrow
+  *  - at least [[MinSavedCols]] columns are read that the narrow
   *    pre-pass does not need (else the pre-pass IS the query);
-  *  - `n <= maxK` (the pre-pass collects n scalars to the driver —
+  *  - `n <= MaxK` (the pre-pass collects n scalars to the driver —
   *    bounded by contract, like the ANN training samples).
   */
 object LazyTopK {
@@ -73,40 +73,40 @@ object LazyTopK {
     * to pay for itself). With footer stats the pre-pass is STAGED (a
     * few files), so the width guard is replaced by the clustering
     * heuristic below. */
-  @volatile var minSavedCols: Int = 8
+  final val MinSavedCols = 8
 
   /** Largest LIMIT the pre-pass will collect. */
-  @volatile var maxK: Int = 100000
+  final val MaxK = 100000
 
   /** Minimum fraction of adjacent (min-ordered) file pairs whose key
-    * ranges are disjoint for a NARROW query (savedCols < minSavedCols)
+    * ranges are disjoint for a NARROW query (savedCols < MinSavedCols)
     * to stage unconditionally: on a key the layout is clustered by, the
     * fraction is ~1 and the bound prunes almost everything; on an
     * unclustered key it is ~0 and the rewrite would only add planning
     * I/O. BELOW the threshold a narrow query still gets a budget-capped
-    * ATTEMPT (see [[attemptBudgetFraction]]): the chain heuristic reads
+    * ATTEMPT (see [[AttemptBudgetFraction]]): the chain heuristic reads
     * ~0 on range-partitioned layouts where every adjacent file pair
     * shares one boundary key range (e.g. 2 files per day on a
     * date-ranged table) even though a bound near the key minimum prunes
     * all but those boundary files — prunability near the extreme is
     * decided by the ACTUAL keep-set, not adjacency. */
-  @volatile var minDisjointFraction: Double = 0.5
+  final val MinDisjointFraction = 0.5
 
   /** Budget for the narrow-query ATTEMPT below the clustering
     * threshold: the staged pre-pass may scan at most this fraction of
     * the table's files looking for k passing keys; if no bound
     * surfaces within the budget — or the bound's keep-set fails
-    * [[attemptMaxKeepFraction]] — the rewrite declines and the query
+    * [[AttemptMaxKeepFraction]] — the rewrite declines and the query
     * keeps its plain TakeOrdered plan. Caps the wasted planning I/O on
     * a never-firing shape at one narrow scan of this fraction (the
     * common decline costs ONE file: the first stage finds k keys, the
     * keep-set check fails). */
-  @volatile var attemptBudgetFraction: Double = 0.25
+  final val AttemptBudgetFraction = 0.25
 
   /** The attempt injects only when the bound's keep-set leaves at most
     * this fraction of files — injecting a bound that prunes nothing
     * would only add a per-row key compare to the scan. */
-  @volatile var attemptMaxKeepFraction: Double = 0.5
+  final val AttemptMaxKeepFraction = 0.5
 
   /** Marks an injected bound so the fixpoint batch cannot re-fire. */
   private val BoundedTag = TreeNodeTag[Boolean]("graft.lazyTopK.bounded")
@@ -117,12 +117,9 @@ object LazyTopK {
     override def initialValue(): Boolean = false
   }
 
-  /** Thread-local pre-pass disable, nestable. Explain-only paths used to
-    * flip the session conf and restore it, but two interleaved explain
-    * calls could capture each other's "false" and leave the pre-pass
-    * stuck off for the whole session (and any concurrently planned query
-    * lost the rewrite). The flag is per-thread — Catalyst plans lazily on
-    * the accessing thread — so other threads' queries are untouched. */
+  /** Thread-local pre-pass disable, nestable. Per-thread because Catalyst
+    * plans lazily on the accessing thread: an explain call never turns
+    * the rewrite off for a query another thread is planning. */
   private val prePassDisabled = new ThreadLocal[Int] {
     override def initialValue(): Int = 0
   }
@@ -194,7 +191,7 @@ object LazyTopK {
       else plan.transformDown {
         case gl @ GlobalLimit(IntegerLiteral(k),
             ll @ LocalLimit(_, s @ Sort(orders, true, child, _)))
-            if k > 0 && k <= maxK && orders.nonEmpty =>
+            if k > 0 && k <= MaxK && orders.nonEmpty =>
           rewrite(k, s, child, orders) match {
             case Some(newChild) =>
               gl.copy(child = ll.copy(child = s.copy(child = newChild)))
@@ -208,7 +205,7 @@ object LazyTopK {
         case gl @ GlobalLimit(IntegerLiteral(k),
             ll @ LocalLimit(_, p @ Project(projList,
               s @ Sort(orders, true, child, _))))
-            if k > 0 && k <= maxK && orders.nonEmpty &&
+            if k > 0 && k <= MaxK && orders.nonEmpty &&
               projList.forall(_.isInstanceOf[AttributeReference]) =>
           rewrite(k, s, child, orders) match {
             case Some(newChild) =>
@@ -223,11 +220,8 @@ object LazyTopK {
       // The pre-pass runs a REAL narrow scan during logical optimization,
       // so plan-only inspection (EXPLAIN endpoints) of a matching query
       // would do executor I/O at planning time. Explain paths disable it
-      // via withoutPrePass (sql/Search.scala does); the conf is the
-      // session-wide off switch. Default on.
-      if (prePassDisabled.get() > 0 ||
-          conf.getConfString("spark.graft.lazyTopK.prePass", "true") != "true")
-        return None
+      // on their thread via withoutPrePass (sql/Search.scala does).
+      if (prePassDisabled.get() > 0) return None
       // first sort key must be a plain, parquet-stat-pushable attribute
       val key = orders.head.child match {
         case a: AttributeReference if pushable(a.dataType) => a
@@ -274,9 +268,9 @@ object LazyTopK {
         if (fsRel.partitionSchema.isEmpty) fileStats(fsRel, key) else None
       stats match {
         case Some(st) if st.size > 1 =>
-          val wide = saved >= minSavedCols
+          val wide = saved >= MinSavedCols
           val clustered =
-            disjointFraction(st, key.dataType) >= minDisjointFraction
+            disjointFraction(st, key.dataType) >= MinDisjointFraction
           if (wide)
             // wide: the win is pruning the wide phase's decode — inject
             // the k-th-key bound (+ file-level pruning) as before
@@ -323,9 +317,9 @@ object LazyTopK {
                   }
               }
             }
-            if (!clustered && keepEstimate > st.size * attemptMaxKeepFraction)
+            if (!clustered && keepEstimate > st.size * AttemptMaxKeepFraction)
               return None
-            val budget = if (clustered) 1.0 else attemptBudgetFraction
+            val budget = if (clustered) 1.0 else AttemptBudgetFraction
             stagedTopK(k, key, orders, conds, child.output, rel, fsRel,
               st, budget) match {
               case Some(scala.util.Left(rows)) =>
@@ -337,7 +331,7 @@ object LazyTopK {
                     pruned.map(_._1)))
                 else pruned.collect {
                   case (sub, keepCount)
-                      if keepCount <= st.size * attemptMaxKeepFraction =>
+                      if keepCount <= st.size * AttemptMaxKeepFraction =>
                     inject(mkBound(key, orders.head, v), key, child, rel,
                       Some(sub))
                 }
@@ -347,7 +341,7 @@ object LazyTopK {
         case _ =>
           // no usable stats (e.g. no footers, nested/decimal key):
           // the original full narrow pre-pass, width-gated
-          if (saved < minSavedCols) return None
+          if (saved < MinSavedCols) return None
           boundOf(k, sort, child, key, orders.head)
             .map(inject(_, key, child, rel, None))
       }

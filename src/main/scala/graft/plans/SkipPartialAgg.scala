@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.planning.PhysicalAggregation
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.aggregate.HashAggregateExec
-import org.apache.spark.sql.internal.SQLConf
 
 /** Shuffle-first ("complete mode") aggregation for high-cardinality
   * group-bys.
@@ -32,20 +31,17 @@ import org.apache.spark.sql.internal.SQLConf
   * fires when the estimated group count (product of per-key NDVs, capped
   * at the table row count; non-attribute grouping expressions contribute
   * a conservative factor 1, unanalyzed attributes veto) clears
-  * `spark.graft.skipPartialAgg.ratio` (default 0.005) of the rows — the
-  * ANALYZE-driven analogue of the reference Aggregator's runtime
-  * two-level conversion. `spark.graft.skipPartialAgg` = true/false
-  * force-overrides; "auto" (default) consults the stats.
+  * 0.5 % of the rows — the ANALYZE-driven analogue of the reference
+  * Aggregator's runtime two-level conversion. Without [[TableStats]]
+  * for the grouping keys it never fires.
   *
   * Falls through (Nil) for distinct/filtered aggregates, aggregates with
   * no grouping keys, and buffer types HashAggregateExec can't hold in
   * UnsafeRow — Spark's built-in strategy then plans those as usual.
   */
 object SkipPartialAgg extends SparkStrategy {
-  val ConfKey = "spark.graft.skipPartialAgg"
-  val RatioKey = "spark.graft.skipPartialAgg.ratio"
 
-  /** Stats verdict: estimated groups >= ratio * rows, with every grouping
+  /** Stats verdict: estimated groups >= 0.5 % of rows, with every grouping
     * attribute analyzed FOR THE RELATION THIS AGGREGATE SCANS (stats are
     * leaf-scoped — another table's same-named column never fires here;
     * multi-relation children veto) AND resolved BY ATTRIBUTE IDENTITY
@@ -56,8 +52,7 @@ object SkipPartialAgg extends SparkStrategy {
     * aggregate whose keys are all such expressions never fires. */
   private def statsSayHighCard(
       groupingExprs: Seq[org.apache.spark.sql.catalyst.expressions.NamedExpression],
-      child: LogicalPlan,
-      ratio: Double): Boolean = {
+      child: LogicalPlan): Boolean = {
     import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Literal}
     val leaf = TableStats.leafOf(child).getOrElse(return false)
     var product = 1.0
@@ -81,16 +76,12 @@ object SkipPartialAgg extends SparkStrategy {
         case _ => // derived expression: conservative factor 1
       }
     }
-    sawAttr && rows > 0 && math.min(product, rows.toDouble) >= ratio * rows
+    sawAttr && rows > 0 && math.min(product, rows.toDouble) >= 0.005 * rows
   }
 
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case PhysicalAggregation(groupingExprs, aggExprs, resultExprs, child)
-        if {
-          val mode = SQLConf.get.getConfString(ConfKey, "auto")
-          mode == "true" || (mode == "auto" && statsSayHighCard(groupingExprs,
-            child, SQLConf.get.getConfString(RatioKey, "0.005").toDouble))
-        } &&
+        if statsSayHighCard(groupingExprs, child) &&
           groupingExprs.nonEmpty && aggExprs.nonEmpty &&
           aggExprs.forall(ae => !ae.isDistinct && ae.filter.isEmpty) &&
           Aggregate.supportsHashAggregate(

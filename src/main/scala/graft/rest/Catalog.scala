@@ -126,8 +126,9 @@ class Catalog(spark: SparkSession, root: String) {
 
   /** Ingest rows (REST `{columns, data}` payload — string cells cast to
     * the declared types; `_time` defaults to now; `_idem` key dedup
-    * within the batch, mirroring the WAL idempotent-key dedup). Returns
-    * committed row count. */
+    * within the batch, on the driver where the payload already sits,
+    * mirroring `WalCommitter.commitBatch`: the first row per non-null key
+    * and every keyless row commit). Returns committed row count. */
   def ingest(name: String, columns: Seq[String],
              data: Seq[Seq[String]]): Long = {
     val tdef = get(name).getOrElse(sys.error(s"no such table: $name"))
@@ -138,8 +139,11 @@ class Catalog(spark: SparkSession, root: String) {
     val known = schema.fieldNames.toSet + "_idem"
     require(columns.forall(known), s"unknown columns: ${columns.filterNot(known)}")
     val strSchema = StructType(columns.map(StructField(_, StringType)))
-    val rows = data.map(cells => Row.fromSeq(
-      cells.padTo(columns.length, null)))
+    val idem = columns.indexOf("_idem")
+    val seen = scala.collection.mutable.HashSet.empty[String]
+    val rows = data.map(cells => Row.fromSeq(cells.padTo(columns.length, null)))
+      .filter(r => idem < 0 || r.isNullAt(idem) || seen.add(r.getString(idem)))
+      .toList
     // ONE slice → one part file per insert block (the reference's
     // MergeTree part-per-INSERT semantics, `Record.h` block framing) —
     // and a single-file append commits atomically, so a concurrent
@@ -147,17 +151,13 @@ class Catalog(spark: SparkSession, root: String) {
     // JSON ingest is inherently a small-batch path; bulk loads go
     // through the WAL/file routes.
     val raw = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toList, 1), strSchema)
-    val deduped =
-      if (columns.contains("_idem")) raw.dropDuplicates("_idem").drop("_idem")
-      else raw
-    val typed = schema.fields.filter(f => deduped.columns.contains(f.name))
-      .foldLeft(deduped) { (df, f) => df.withColumn(f.name, col(f.name).cast(f.dataType)) }
+      spark.sparkContext.parallelize(rows, 1), strSchema).drop("_idem")
+    val typed = schema.fields.filter(f => raw.columns.contains(f.name))
+      .foldLeft(raw) { (df, f) => df.withColumn(f.name, col(f.name).cast(f.dataType)) }
     val complete = schema.fields.foldLeft(typed) { (df, f) =>
       if (df.columns.contains(f.name)) df
       else df.withColumn(f.name, lit(null).cast(f.dataType))
     }.select(schema.fieldNames.map(col).toSeq: _*)
-    val n = complete.count()
     val withTime = complete.withColumn("_time",
       coalesce(col("_time"), current_timestamp()))
     val bucketed = withTime.withColumn(TimeTable.BucketCol,
@@ -170,7 +170,7 @@ class Catalog(spark: SparkSession, root: String) {
     arranged.write.mode("append")
       .partitionBy(TimeTable.BucketCol).parquet(dataPath(name))
     graft.Tables.tableWritten(dataPath(name))
-    n
+    rows.size
   }
 
   // ---- databases (daisy DatabaseRestRouterHandler): grouping metadata.
@@ -225,7 +225,6 @@ class Catalog(spark: SparkSession, root: String) {
       .withColumn("sourcetype", lit(sourcetype))
       .withColumn("source", lit(source))
       .withColumn("host", lit(host))
-    val n = raw.count()
     raw.withColumn(TimeTable.BucketCol,
         date_format(date_trunc(tdef.timeGranularity.truncUnit, col("_time")),
           "yyyy-MM-dd-HH"))
@@ -233,13 +232,13 @@ class Catalog(spark: SparkSession, root: String) {
       .write.mode("append")
       .partitionBy(TimeTable.BucketCol).parquet(dataPath(name))
     graft.Tables.tableWritten(dataPath(name))
-    n
+    lines.size
   }
 
-  /** Register every catalog table as a temp view (search queries
-    * reference tables by name). */
-  def registerViews(): Unit =
-    list().foreach(n => table(n).createOrReplaceTempView(n))
+  /** Register the catalog tables `named` picks as temp views (search
+    * queries reference tables by name); each one re-lists its files. */
+  def registerViews(named: String => Boolean = _ => true): Unit =
+    list().filter(named).foreach(n => table(n).createOrReplaceTempView(n))
 }
 
 object Catalog {

@@ -244,6 +244,16 @@ class RestServer(spark: SparkSession, catalog: Catalog, port: Int = 0) {
     }
   })
 
+  /** Re-register the catalog and system views `sql` names as a word, so a
+    * request sees every ingest acknowledged before it without re-reading
+    * every table and system frame (~200 ms a request). */
+  private def registerViewsFor(sql: String): Unit = {
+    val named = (n: String) =>
+      ("(?i)\\b" + java.util.regex.Pattern.quote(n) + "\\b").r.findFirstIn(sql).isDefined
+    catalog.registerViews(named)
+    SystemTables.registerCatalogViews(spark, catalog, named)
+  }
+
   /** Results are STREAMED: rows flow driver→client via toLocalIterator
     * into a chunked response, so no result set is ever collect()ed whole
     * on the driver (the reference streams too —
@@ -261,12 +271,11 @@ class RestServer(spark: SparkSession, catalog: Catalog, port: Int = 0) {
     var logSql: String = null
     try {
       val b = body(ex)
-      catalog.registerViews()
-      SystemTables.registerCatalogViews(spark, catalog)
       def opt(field: String): Option[JsonNode] =
         Option(b.get(field)).filter(!_.isNull)
       val sql = b.get("query").asText()
       logSql = sql
+      registerViewsFor(sql)
       val limit = opt("limit").map(_.asInt()).getOrElse(100)
       val effLimit = if (limit <= 0) RestServer.MaxResultRows else limit
       val offset = opt("offset").map(_.asInt()).getOrElse(0)
@@ -279,12 +288,11 @@ class RestServer(spark: SparkSession, catalog: Catalog, port: Int = 0) {
           paged.limit(effLimit)
       }
       val watchMode = opt("watch").map(_.asInt()).filter(_ > 0)
-      // Result cache (graft extension, QueryCache.scala): per-request
-      // `use_cache` or server-wide flag. WATCH mode never caches — its
-      // whole point is re-evaluating against fresh ingests.
+      // Result cache (graft extension, QueryCache.scala): opted into per
+      // request with `use_cache`. WATCH mode never caches — its whole
+      // point is re-evaluating against fresh ingests.
       val useCache = watchMode.isEmpty &&
-        (opt("use_cache").exists(_.asBoolean(false)) ||
-          RestServer.queryCacheEnabled)
+        opt("use_cache").exists(_.asBoolean(false))
       val df = {
         val built = buildDf()
         if (useCache) graft.core.QueryCache.cached(built) else built
@@ -321,7 +329,7 @@ class RestServer(spark: SparkSession, catalog: Catalog, port: Int = 0) {
               }
               if (version < nUpdates) {
                 Thread.sleep(intervalMs)
-                catalog.registerViews() // fresh scans: see new ingests
+                registerViewsFor(sql) // fresh scans: see new ingests
                 current = buildDf()
               }
             }
@@ -392,8 +400,7 @@ class RestServer(spark: SparkSession, catalog: Catalog, port: Int = 0) {
 
   server.createContext("/dae/v1/sqlanalyzer", (ex: HttpExchange) => handle(ex) {
     val b = body(ex)
-    catalog.registerViews()
-    SystemTables.registerCatalogViews(spark, catalog)
+    registerViewsFor(b.get("query").asText())
     // optional "mode": the reference's EXPLAIN levels (ast|syntax|plan|
     // pipeline|codegen) mapped onto the Catalyst stages.
     val mode = Option(b.get("mode")).filter(!_.isNull)
@@ -429,10 +436,4 @@ class RestServer(spark: SparkSession, catalog: Catalog, port: Int = 0) {
 object RestServer {
   /** Server-side clamp for `limit <= 0` ("unbounded") search requests. */
   val MaxResultRows = 1000000
-
-  /** Serve every /search SELECT through [[graft.core.QueryCache]] when
-    * true; individual requests can opt in with `"use_cache": true`
-    * regardless. Ingest paths invalidate by table root, so a cached
-    * result is never served across an append to its table. */
-  @volatile var queryCacheEnabled: Boolean = false
 }

@@ -170,9 +170,10 @@ object SystemTables {
     names.foreach(n =>
       frame(spark, catalog, n).createOrReplaceTempView(s"system_$n"))
 
-  /** Refresh only the catalog-derived views (cheap; no function-registry
-    * scan, no metric snapshot) — the per-request path. */
-  def registerCatalogViews(spark: SparkSession, catalog: Catalog): Unit =
-    catalogDependent.foreach(n =>
+  /** Refresh the catalog-derived views `named` picks by view name (no
+    * function-registry scan, no metric snapshot) — the per-request path. */
+  def registerCatalogViews(spark: SparkSession, catalog: Catalog,
+                           named: String => Boolean = _ => true): Unit =
+    catalogDependent.filter(n => named(s"system_$n")).foreach(n =>
       frame(spark, catalog, n).createOrReplaceTempView(s"system_$n"))
 }

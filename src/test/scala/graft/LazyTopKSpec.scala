@@ -13,7 +13,7 @@ class LazyTopKSpec extends AnyFunSuite with TempDirs {
 
   private val dir = tmp("lazytopk_test")
 
-  /** 12 measure columns (clears minSavedCols = 8) + key/tag columns,
+  /** 12 measure columns (clears MinSavedCols = 8) + key/tag columns,
     * written shuffled so the parquet order is NOT the sort order for
     * the ts ties test, with repeated ts values for tie coverage. */
   private lazy val table: String = {

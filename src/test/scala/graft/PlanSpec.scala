@@ -245,9 +245,10 @@ class PlanSpec extends AnyFunSuite with TempDirs {
       val un = plan("SELECT user_id, count(*) FROM stats_t GROUP BY user_id")
       assert(un.contains("partial_count"), s"unanalyzed stats must veto:\n$un")
     } finally {
+      // clearing the stats makes the rule inert; the shared session keeps
+      // the one install Tables.tune made for every later suite
       TableStats.clear()
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies.filterNot(_ == SkipPartialAgg)
+      assert(spark.experimental.extraStrategies.count(_ == SkipPartialAgg) == 1)
     }
   }
 
@@ -279,9 +280,10 @@ class PlanSpec extends AnyFunSuite with TempDirs {
       assert(plan(df.groupBy("user_id").agg(count(lit(1))))
         .contains("partial_count"), "stale stats survived re-registration")
     } finally {
+      // clearing the stats makes the rule inert; the shared session keeps
+      // the one install Tables.tune made for every later suite
       TableStats.clear()
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies.filterNot(_ == SkipPartialAgg)
+      assert(spark.experimental.extraStrategies.count(_ == SkipPartialAgg) == 1)
     }
   }
 

@@ -66,6 +66,28 @@ class RestSpec extends AnyFunSuite with TempDirs {
     assert(sc == 200 && sb.contains("committed"), sb)
   }
 
+  test("ingest keeps every keyless row and the first row per _idem key") {
+    assert(post("/ddl/tables", """{"name":"idem_t","columns":[
+        |{"name":"tag","type":"string"},{"name":"v","type":"double"},
+        |{"name":"_time","type":"timestamp"}]}""".stripMargin)._1 == 200)
+    // 3 keyless rows (two null keys, one short row) and 2 sharing key "k"
+    val (code, body) = post("/ingest/tables/idem_t",
+      """{"columns":["tag","v","_time","_idem"],
+        |"data":[
+        | ["none","1.0","2024-03-05 10:00:00",null],
+        | ["none","2.0","2024-03-05 10:00:00",null],
+        | ["none","3.0","2024-03-05 10:00:00"],
+        | ["keyed","4.0","2024-03-05 10:00:00","k"],
+        | ["keyed","5.0","2024-03-05 10:00:00","k"]]}""".stripMargin)
+    assert(code == 200, body)
+    assert(body.contains("\"committed\":4"), body)
+    val (sc, sb) = post("/search",
+      """{"query":"SELECT v FROM idem_t ORDER BY v"}""")
+    assert(sc == 200 && sb.contains("1.0") && sb.contains("2.0") &&
+      sb.contains("3.0") && sb.contains("4.0") && !sb.contains("5.0"), sb)
+    assert(delete("/ddl/tables/idem_t")._1 == 200)
+  }
+
   test("search applies time bounds and paging") {
     val (code, body) = post("/search",
       """{"query":"SELECT sourcetype, latency FROM logs",

@@ -71,6 +71,99 @@ class TrainingOpsSpec extends AnyFunSuite {
     assert(out == ((1L, 0L, 0L, 0L, 0L)))
   }
 
+  /** The explode/pivot/window/join plan repetitionSignals used to run,
+    * kept as the reference the row-local expression must reproduce. */
+  private def repetitionReference(df: org.apache.spark.sql.DataFrame,
+      topNs: Seq[Int] = Seq(2, 3, 4),
+      dupNs: Seq[Int] = Seq(5, 6, 7, 8, 9, 10)): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val base = df.select(col("doc_id").as("id"), col("toks"))
+      .withColumn("n_toks", size(col("toks")).cast("long"))
+    val ids = base.select(col("id"), col("n_toks"))
+    val tagged = topNs.map { n =>
+        base.select(col("id"), lit(n).as("n"),
+          explode(CorpusOps.ngrams(col("toks"), n)).as("g"))
+      }.reduce(_ unionByName _)
+    val covers = tagged.groupBy(col("id"), col("n"), col("g"))
+      .agg(count(lit(1)).as("cnt"))
+      .withColumn("cover", col("cnt") * length(col("g")))
+      .groupBy(col("id")).pivot("n", topNs)
+      .agg(max(col("cover")))
+    val coverCols = topNs.map(n => coalesce(col(s"`$n`"), lit(0L))
+      .as(s"top${n}_chars"))
+    val taggedDup = dupNs.map { n =>
+        base.select(col("id"), lit(n).as("n"),
+          posexplode(CorpusOps.ngrams(col("toks"), n)).as(Seq("pos", "g")))
+      }.reduce(_ unionByName _)
+    val dupPos = taggedDup
+      .withColumn("cnt", count(lit(1)).over(
+        Window.partitionBy(col("id"), col("n"), col("g"))))
+      .filter(col("cnt") >= 2)
+      .select(col("id"), col("n"), col("pos").cast("long").as("pos"))
+    val wPrev = Window.partitionBy(col("id"), col("n")).orderBy(col("pos"))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val dupCov = dupPos
+      .withColumn("prev_end",
+        coalesce(max(col("pos") + col("n")).over(wPrev), lit(-1L)))
+      .withColumn("c", greatest(
+        col("pos") + col("n") - greatest(col("pos"), col("prev_end")),
+        lit(0L)))
+      .groupBy(col("id")).pivot("n", dupNs)
+      .agg(sum(col("c")))
+    val dupCols = dupNs.map(n => coalesce(col(s"`$n`"), lit(0L))
+      .as(s"dup${n}_toks"))
+    ids.join(covers.select(col("id") +: coverCols: _*), Seq("id"), "left")
+      .join(dupCov.select(col("id") +: dupCols: _*), Seq("id"), "left")
+      .select(col("id") +: col("n_toks") +:
+        (topNs.map(n => coalesce(col(s"top${n}_chars"), lit(0L))
+          .as(s"top${n}_chars")) ++
+         dupNs.map(n => coalesce(col(s"dup${n}_toks"), lit(0L))
+           .as(s"dup${n}_toks"))): _*)
+  }
+
+  test("repetitionSignals matches the explode/pivot reference on random docs") {
+    // 3 words of 1, 2 and 2 code points (the last is 4 UTF-16 units, so a
+    // UTF-16 length would differ), lengths 0-40, an occasional null token
+    // (array_join skips it) and one null array
+    val vocab = Seq("a", "bé", "\uD835\uDD38\uD835\uDD39")
+    val rnd = new scala.util.Random(20211208)
+    val docs = (1L to 200L).map { id =>
+      id -> Seq.fill(rnd.nextInt(41))(
+        if (rnd.nextInt(50) == 0) null else vocab(rnd.nextInt(vocab.size)))
+    } :+ (201L -> (null: Seq[String]))
+    val d = docs.toDF("doc_id", "toks")
+    val cols = Seq("id", "n_toks") ++ Seq(2, 3, 4).map(n => s"top${n}_chars") ++
+      (5 to 10).map(n => s"dup${n}_toks")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(cols.map(col): _*).collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
+    val got = rows(CorpusOps.repetitionSignals(d, "doc_id", col("toks")))
+    val want = rows(repetitionReference(d))
+    assert(got.size == 201)
+    assert(got.map(_.drop(2)).exists(_.exists(_ != 0L)), "all-zero signals")
+    assert(got == want)
+  }
+
+  test("repetitionSignals is linear in document length: a 50 000-token periodic doc") {
+    // a period-7 body of 2-char tokens (49 000 tokens) then 1 000 unique
+    // tail tokens: every body n-gram repeats, every gram touching the
+    // tail is unique, so dup-n covers exactly the body and the best top-n
+    // gram is a body gram occurring ceil((body - n + 1) / 7) times
+    val (p, body, tail) = (7, 49000, 1000)
+    val toks = (0 until body).map(i => s"a${i % p}") ++ (0 until tail).map(i => s"u$i")
+    val d = Seq((1L, toks)).toDF("doc_id", "toks")
+    val t0 = System.nanoTime()
+    val r = CorpusOps.repetitionSignals(d, "doc_id", col("toks")).collect().head
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(r.getAs[Long]("n_toks") == body + tail)
+    Seq(2, 3, 4).foreach { n =>
+      val occurrences = (body - n + 1 + p - 1) / p
+      assert(r.getAs[Long](s"top${n}_chars") == occurrences.toLong * (2 * n + n - 1), s"top$n")
+    }
+    (5 to 10).foreach(n => assert(r.getAs[Long](s"dup${n}_toks") == body, s"dup$n"))
+    // O(L) per n is well under a second; an all-pairs O(L²) scan is not
+    assert(secs < 60, s"took $secs s")
+  }
+
   test("dupSpans merges overlapping and adjacent duplicate k-gram ranges") {
     // k=2 over: doc1 = p q r s t, doc2 = p q r x s t
     // duplicate 2-grams: "p q" (d1@0, d2@0), "q r" (d1@1, d2@1),
