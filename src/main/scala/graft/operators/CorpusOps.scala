@@ -23,6 +23,9 @@ import graft.functions.GraftScalar
   */
 object CorpusOps {
 
+  /** Estimated plan-output bytes from which [[persistIfLarge]] persists. */
+  private val PersistThreshold = 256L << 20
+
   /** Size-gated persist for multi-consumer frames (guide §5: caching is
     * only worth it when the frame is reused AND recomputing costs more
     * than the memory pressure). [[lmScore]] consumes its exploded gram
@@ -35,20 +38,17 @@ object CorpusOps {
     * recomputed. Gate on the optimizer's size estimate: below the
     * threshold the plan is untouched (bench shape preserved), above it
     * the frame is persisted once and feeds every consumer from
-    * memory/disk. Threshold conf `spark.graft.corpus.persistThreshold`
-    * (bytes, default 256 MB of estimated plan output — scan estimates
-    * derive from file sizes, so heavily-compressed corpora may need
-    * spark.sql.sources.fileCompressionFactor or a lower threshold).
+    * memory/disk. The threshold is [[PersistThreshold]] (256 MB of
+    * estimated plan output — scan estimates derive from file sizes, so
+    * heavily-compressed corpora may need
+    * spark.sql.sources.fileCompressionFactor raised).
     * Persisted frames register with [[graft.Tables.registerScratch]] so
     * the bench/verify harness unpersists them after the query.
     * [[repetitionSignals]] has no multi-consumer frame to gate: it is one
     * narrow pass over each document's token array. */
   private[graft] def persistIfLarge(df: DataFrame): DataFrame = {
-    val thr = df.sparkSession.conf
-      .get("spark.graft.corpus.persistThreshold", (256L << 20).toString)
-      .toLong
     val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (est >= thr)
+    if (est >= PersistThreshold)
       graft.Tables.registerScratch(df.persist(
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     else df
@@ -154,13 +154,17 @@ object CorpusOps {
     *
     * Every signal is defined per document, so it is one row-local
     * expression ([[graft.functions.RepetitionSignals]]): one hash map of
-    * grams per (document, n), O(L·n) work, no shuffle, one Spark job. */
+    * grams per (document, n), O(L·n) work, no shuffle, one Spark job.
+    * The `carry` columns of `df` pass through after the signals, so a
+    * caller needs no join back on the id for other per-document values. */
   def repetitionSignals(df: DataFrame, idCol: String, toksCol: Column,
                         topNs: Seq[Int] = Seq(2, 3, 4),
-                        dupNs: Seq[Int] = Seq(5, 6, 7, 8, 9, 10)): DataFrame =
-    df.select(col(idCol).as("id"), size(toksCol).cast("long").as("n_toks"),
-        GraftScalar.repetitionSignals(toksCol, topNs, dupNs).as("sig"))
-      .select("id", "n_toks", "sig.*")
+                        dupNs: Seq[Int] = Seq(5, 6, 7, 8, 9, 10),
+                        carry: Seq[String] = Nil): DataFrame =
+    df.select(Seq(col(idCol).as("id"), size(toksCol).cast("long").as("n_toks"),
+        GraftScalar.repetitionSignals(toksCol, topNs, dupNs).as("sig")) ++
+        carry.map(col): _*)
+      .select(Seq(col("id"), col("n_toks"), col("sig.*")) ++ carry.map(col): _*)
 
   // ----------------------------------------------------------- PII scrubbing
 

@@ -2,7 +2,8 @@ package graft.operators
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, MapType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -218,55 +219,86 @@ object Dedup {
     * componentizing the MinHash/SimHash pair output, keep min(doc_id)
     * per component and drop the rest.
     *
-    * Each round runs a union-find inside every edge partition
-    * (`mapPartitions`): a node gets the minimum id of its
-    * partition-local component, and the minimum over partitions when
-    * the edges span several. When one partition holds every edge
-    * (`parts == 1`, up to ~100k edges) that contraction is exact and the
-    * operator ends: a small graph costs two Spark jobs. Otherwise every
-    * edge is relabelled through the round's labels, self-loops and
-    * duplicates are dropped, and the contracted graph — which keeps the
-    * components, since each label is a node of its own node's component —
-    * goes round again. Any round maps the larger end of every edge
-    * below itself, so the graph shrinks every round (simulated on a
-    * 100k-node chain of shuffled ids over 2-4 partitions: 5-9x per
-    * round, where min-label propagation with pointer jumping needs about
-    * n/2 rounds). No driver-side data: labels and edges stay distributed,
-    * and the per-round decision is an edge count.
+    * A graph the optimizer estimates at under [[EdgesPerPartition]]
+    * directed edges is labelled by one union-find over all its pairs in
+    * one partition: a lazy single pass that launches no Spark job while
+    * the frame is built. Union-find needs neither the reversed edges nor
+    * a `distinct`, so the pair frame goes in as it is.
     *
-    * Ids may be of any atomic type but binary; strings order as Spark's
-    * `min` orders them (by UTF-8 bytes).
+    * Larger graphs are contracted round by round. Each round runs a
+    * union-find inside every edge partition (`mapPartitions`): a node
+    * gets the minimum id of its partition-local component, and the
+    * minimum over partitions when the edges span several. When one
+    * partition holds every edge (`parts == 1`) that contraction is exact
+    * and the loop ends. Otherwise every edge is relabelled through the
+    * round's labels, self-loops and duplicates are dropped, and the
+    * contracted graph — which keeps the components, since each label is
+    * a node of its own node's component — goes round again. Any round
+    * maps the larger end of every edge below itself, so the graph
+    * shrinks every round (simulated on a 100k-node chain of shuffled ids
+    * over 2-4 partitions: 5-9x per round, where min-label propagation
+    * with pointer jumping needs about n/2 rounds). No driver-side data:
+    * labels and edges stay distributed, and the per-round decision is an
+    * edge count. `maxIter` bounds these rounds.
+    *
+    * Both paths are exact, so a wrong size estimate costs time, never
+    * correctness. Ids may be of any atomic type but binary; strings
+    * order as Spark's `min` orders them (by UTF-8 bytes).
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    val spark = pairs.sparkSession
+    val sym0 = pairs.toDF("a", "b")
+    val directed = sym0.select(col("a").as("src"), col("b").as("dst"))
+      .union(sym0.select(col("b").as("src"), col("a").as("dst")))
+    val idType = directed.schema("src").dataType
+    idType match {
+      case BinaryType | _: ArrayType | _: MapType | _: StructType =>
+        throw new IllegalArgumentException(
+          s"connectedComponents: ids of type ${idType.simpleString} are not supported")
+      case _ => ()
+    }
+    val labelEncoder = Encoders.row(
+      new StructType().add("id", idType).add("comp", idType))
+    if (estimatedRows(pairs) * 2 < EdgesPerPartition)
+      sym0.select(col("a").cast(idType), col("b").cast(idType))
+        .coalesce(1).mapPartitions(unionFindLabels(idType))(labelEncoder)
+    else contract(directed.distinct(), idType, labelEncoder, maxIter)
+  }
+
+  /** Directed edges per union-find partition: up to this many the whole
+    * graph is one partition's exact contraction. */
+  private val EdgesPerPartition = 100000L
+
+  /** The optimizer's row estimate for `df`: its row count when the plan
+    * carries one, else its size estimate over the row width (as
+    * `CorpusOps.persistIfLarge` reads sizes). Reading it runs no job. */
+  private def estimatedRows(df: DataFrame): BigInt = {
+    val plan = df.queryExecution.optimizedPlan
+    plan.stats.rowCount.getOrElse(
+      plan.stats.sizeInBytes / EstimationUtils.getSizePerRow(plan.output))
+  }
+
+  /** The round loop of [[connectedComponents]] over the symmetric,
+    * distinct directed edges (src, dst) of a graph. */
+  private def contract(directed: DataFrame, idType: DataType,
+                       labelEncoder: Encoder[Row], maxIter: Int): DataFrame = {
+    val spark = directed.sparkSession
     val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     // AQE materializes every exchange as its own stage-job: with the
     // shuffles sized to the graph below there is nothing left for it to
     // re-optimize, and each exchange (the pair graph's own, the edge
     // distinct, every round's joins) paid an extra driver round-trip of
-    // pure latency. Off for the whole operator, restored on exit.
-    // NOTE: these conf flips are session-global while the operator runs —
-    // a CONCURRENT query on the same SparkSession would plan under the
-    // temporary width/AQE settings. The engine's query harness
-    // (Bench/Verify/gates) runs queries sequentially per session, which
-    // is the assumption here; a multi-tenant caller should wrap this
-    // operator in spark.newSession().
+    // pure latency. Off for the whole loop, restored on exit.
+    // NOTE: only this large-graph path changes confs, and they are
+    // session-global while it runs — a CONCURRENT query on the same
+    // SparkSession would plan under the temporary width/AQE settings.
+    // The engine's query harness (Bench/Verify/gates) runs queries
+    // sequentially per session, which is the assumption here; a
+    // multi-tenant caller should wrap this operator in
+    // spark.newSession().
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val sym0 = pairs.toDF("a", "b")
-      val edges0 = sym0.select(col("a").as("src"), col("b").as("dst"))
-        .union(sym0.select(col("b").as("src"), col("a").as("dst")))
-        .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val idType = edges0.schema("src").dataType
-      idType match {
-        case BinaryType | _: ArrayType | _: MapType | _: StructType =>
-          throw new IllegalArgumentException(
-            s"connectedComponents: ids of type ${idType.simpleString} are not supported")
-        case _ => ()
-      }
-      val labelSchema = new StructType().add("id", idType).add("comp", idType)
+      val edges0 = directed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       var edges = edges0
       var labels: DataFrame = null // (id, comp) for every node seen so far
       var rounds = 0
@@ -282,11 +314,10 @@ object Dedup {
         // width (guide §2.2: size partitions to the data).
         val nEdges = edges.count()
         val parts = math.max(1, math.min(
-          spark.sparkContext.defaultParallelism, (nEdges / 100000L).toInt + 1))
+          spark.sparkContext.defaultParallelism, (nEdges / EdgesPerPartition).toInt + 1))
         spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
         val local = edges.repartition(parts, col("src"))
-          .mapPartitions(unionFindLabels(idType))(
-            org.apache.spark.sql.Encoders.row(labelSchema))
+          .mapPartitions(unionFindLabels(idType))(labelEncoder)
         // Every frame a later round reads is eagerly localCheckpoint'ed:
         // each round's plan would otherwise embed every earlier round's,
         // growing analysis/planning cost and lineage without bound.

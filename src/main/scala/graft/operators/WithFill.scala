@@ -18,9 +18,10 @@ import org.apache.spark.sql.functions._
   * (last/next value over an ordered window).
   *
   * Scale: the series explode produces (to-from)/step rows from a 1-row
-  * frame, broadcast against the data (the series frame is tiny — time
-  * buckets); interpolation is one ordered window over the axis — a
-  * single range shuffle. TO is exclusive when explicit (ClickHouse
+  * frame and keeps every one of them, so it is the preserved side of the
+  * left join and cannot be the broadcast build side (Spark drops such a
+  * hint); interpolation is one ordered window over the axis — a single
+  * range shuffle. TO is exclusive when explicit (ClickHouse
   * semantics), inclusive when derived from the observed max.
   */
 object WithFill {
@@ -48,7 +49,7 @@ object WithFill {
                fillZero: Seq[String],
                from: Option[Long] = None, to: Option[Long] = None): DataFrame = {
     val series = seriesFrame(df, axis, step, from, to)
-    val joined = broadcast(series).join(df, Seq(axis), "left")
+    val joined = series.join(df, Seq(axis), "left")
     val outCols = joined.columns.map { c =>
       if (fillZero.contains(c)) coalesce(col(c), lit(0L)).as(c) else col(c)
     }
@@ -70,7 +71,7 @@ object WithFill {
                       from: Option[Long] = None, to: Option[Long] = None,
                       seriesKeys: Seq[String] = Nil): DataFrame = {
     val series =
-      if (seriesKeys.isEmpty) broadcast(seriesFrame(df, axis, step, from, to))
+      if (seriesKeys.isEmpty) seriesFrame(df, axis, step, from, to)
       else {
         // per-key bounds -> per-key dense series; the explode fans each
         // key's 1 bounds row into its buckets, partitioned by key.

@@ -123,9 +123,9 @@ object Training extends QueryModule {
         .withColumn("n_chars", length(col("norm")).cast("long"))
       val withPpm = Seq(2, 3, 4).foldLeft(
           Seq(5, 6, 7, 8, 9, 10).foldLeft(
-            CorpusOps.repetitionSignals(docs, "doc_id", col("toks"))
+            CorpusOps.repetitionSignals(docs, "doc_id", col("toks"),
+                carry = Seq("n_chars"))
               .withColumnRenamed("id", "doc_id")
-              .join(docs.select(col("doc_id"), col("n_chars")), "doc_id")
           ) { (d, n) =>
             d.withColumn(s"dup${n}_ppm",
               ppmOf(col(s"dup${n}_toks"), col("n_toks")))

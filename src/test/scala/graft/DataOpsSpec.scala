@@ -317,9 +317,39 @@ class DataOpsSpec extends AnyFunSuite {
     }
     val expected = parent.keys.map(x => x -> find(x)).toMap
 
-    val got = Dedup.connectedComponents(rng.shuffle(pairs).toDF("a", "b"))
+    val pairFrame = rng.shuffle(pairs).toDF("a", "b")
+    val got = Dedup.connectedComponents(pairFrame)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got.size == expected.size)
     assert(got == expected)
+    // the estimate sends this graph through the contraction loop, and the
+    // loop needs more than one round for it
+    val e = intercept[IllegalStateException](
+      Dedup.connectedComponents(pairFrame, maxIter = 1))
+    assert(e.getMessage.contains("did not converge in 1 rounds"))
+  }
+
+  test("connected components of a small pair graph are one lazy pass: no Spark job, no conf change") {
+    import spark.implicits._
+    val confs = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    val before = confs.map(spark.conf.get)
+    // duplicate pairs, both directions of a pair and a cycle: union-find
+    // needs neither the symmetric union nor a distinct
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 1L), (2L, 1L), (2L, 1L), (10L, 11L), (12L, 11L))
+      .toDF("a", "b")
+    assert(jobsIn(Dedup.connectedComponents(pairs)) == 0)
+    assert(confs.map(spark.conf.get) == before)
+    assert(Dedup.connectedComponents(pairs).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L, 12L -> 10L))
+    assert(confs.map(spark.conf.get) == before)
+    // the registered query over a parquet table builds without a job too
+    Tables.load(spark, sf, "orders")
+    assert(jobsIn { SparkEntry.queries("q_dedup_components")(spark, sf) } == 0)
+    assert(confs.map(spark.conf.get) == before)
+    // ids of two widths are widened to one type before the union-find
+    val mixed = Seq((1, 2L), (2, 3L)).toDF("a", "b")
+    assert(Dedup.connectedComponents(mixed).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap == Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
   }
 }

@@ -1,8 +1,12 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.CorpusOps
+import graft.operators.{CorpusOps, Dedup}
 
 /** Pins the sub-document corpus operators on hand-built inputs:
   * paragraph dedup's first-occurrence rule and doc reconstruction,
@@ -10,7 +14,7 @@ import graft.operators.CorpusOps
   * sf0.01 gate hash-checks the same operators against DuckDB; these
   * cases document WHY each answer is what it is.)
   */
-class TrainingOpsSpec extends AnyFunSuite {
+class TrainingOpsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   import TestSpark._
   import spark.implicits._
 
@@ -162,6 +166,27 @@ class TrainingOpsSpec extends AnyFunSuite {
     (5 to 10).foreach(n => assert(r.getAs[Long](s"dup${n}_toks") == body, s"dup$n"))
     // O(L) per n is well under a second; an all-pairs O(L²) scan is not
     assert(secs < 60, s"took $secs s")
+  }
+
+  test("q_quality_repetition carries n_chars through one documents scan, no self-join") {
+    val q = SparkEntry.queries("q_quality_repetition")(spark, sf)
+    val plan = q.queryExecution.executedPlan
+    val scans = collectWithSubqueries(plan) { case s: FileSourceScanExec => s }
+    assert(scans.map(_.relation.location.rootPaths.map(_.getName).mkString) ==
+      Seq("documents.parquet"), plan.toString)
+    assert(collectWithSubqueries(plan) { case j: BaseJoinExec => j }.isEmpty, plan.toString)
+    // the rows equal those of the form that joined n_chars back by doc_id
+    val docs = Tables.load(spark, sf, "documents")
+      .withColumn("norm", Dedup.normalized(col("text")))
+      .withColumn("toks", split(col("norm"), " "))
+      .withColumn("n_chars", length(col("norm")).cast("long"))
+    val joined = CorpusOps.repetitionSignals(docs, "doc_id", col("toks"))
+      .withColumnRenamed("id", "doc_id")
+      .join(docs.select(col("doc_id"), col("n_chars")), "doc_id")
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
+    val got = rows(q.select(joined.columns.map(col): _*))
+    assert(got.nonEmpty)
+    assert(got == rows(joined))
   }
 
   test("dupSpans merges overlapping and adjacent duplicate k-gram ranges") {
