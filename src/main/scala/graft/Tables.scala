@@ -185,11 +185,30 @@ object Tables {
     root.getPath
   }
 
-  /** The one hook every table writer calls after appending or rewriting
-    * files under `path` (REST ingest, WAL commit, maintenance rewrites):
+  /** `path` as an absolute URI path, the form FileIndex root paths take:
+    * the key of [[writeEpoch]] and of the write-driven invalidations. */
+  private[graft] def absolutePath(path: String): String = {
+    val p = new Path(path).toUri.getPath
+    if (p.startsWith("/")) p else new java.io.File(p).getAbsolutePath
+  }
+
+  /** Writes so far per table root (absolute path). */
+  private val writeEpochs =
+    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+
+  /** How many times [[tableWritten]] has been called for `path`. Read it
+    * BEFORE listing the path's files: a listing made after reading epoch
+    * e holds every write whose epoch bump is <= e. */
+  def writeEpoch(path: String): Long =
+    writeEpochs.getOrDefault(absolutePath(path), 0L)
+
+  /** The one hook every table writer calls after appending, rewriting or
+    * deleting files under `path` (REST ingest, table drop, WAL commit,
+    * maintenance rewrites): the path's write epoch goes up first, then
     * projections over the path rebuild and cached results over it drop
     * (the reference pushes every inserted block through dependent MVs). */
   def tableWritten(path: String): Unit = {
+    writeEpochs.merge(absolutePath(path), 1L, (a, b) => a + b)
     graft.plans.Projections.invalidatePath(path)
     graft.core.QueryCache.invalidatePath(path)
   }

@@ -3,8 +3,11 @@ package graft.core
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.Alias
+import org.apache.spark.sql.catalyst.json.{JacksonGenerator, JSONOptions}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
 /** Query result cache with write-driven invalidation.
@@ -37,26 +40,30 @@ import org.apache.spark.sql.types.StructType
   *     never holds more than `maxEntries * Bound` rows on the driver and
   *     never registers anything with Spark's CacheManager: an ingest
   *     write into a table never waits on, or re-caches, an entry.
-  *   - A hit is a one-partition local scan of the rows, renamed to the
-  *     REQUESTING query's output column names (`toDF(names)`), so a REST
-  *     client always reads back the aliases it asked for even when the
-  *     entry was populated by a differently-aliased twin. One partition
-  *     keeps a streamed hit to one Spark job.
+  *   - A hit always carries the REQUESTING query's output column names,
+  *     so a REST client reads back the aliases it asked for even when the
+  *     entry was populated by a differently-aliased twin. [[Lookup.json]]
+  *     serves it with no Spark job: the rows rendered on the driver by the
+  *     JacksonGenerator and JSONOptions (session time zone) that
+  *     `Dataset.toJSON` runs per partition, so the bytes are the same,
+  *     once per entry and column-name list. [[Lookup.frame]] (and
+  *     [[cached]], the Scala API) is a one-partition local scan of the
+  *     rows renamed with `toDF(names)`.
   *   - Freshness follows the projection registry's model rather than
-  *     pure TTL expiry: every writer that appends or rewrites files under
-  *     a table root (ingest, WAL commit, maintenance rewrites) calls
-  *     `Tables.tableWritten`, which calls [[invalidatePath]] to drop every
-  *     entry whose plan scanned that root. A miss whose compute overlaps an
-  *     invalidation of a root it scans is returned to its caller but not
-  *     kept, since it may predate the ingest. The TTL remains as a
-  *     backstop for sources graft does not write (external files mutated
-  *     out-of-band).
+  *     pure TTL expiry: every writer that appends, rewrites or deletes
+  *     files under a table root (ingest, drop, WAL commit, maintenance
+  *     rewrites) calls `Tables.tableWritten`, which bumps the root's
+  *     `Tables.writeEpoch` and calls [[invalidatePath]] to drop every
+  *     entry whose plan scanned that root. A miss computed while a root it
+  *     scans changed epoch is returned to its caller but not kept, since
+  *     it may predate the write. The TTL remains as a backstop for sources
+  *     graft does not write (external files mutated out-of-band).
   *
   * Recomputation always re-plans from the ANALYZED logical plan — never
   * by re-running the caller's memoized DataFrame, whose executed plan
-  * has the pre-ingest file listing baked into its scan. A fresh planning
-  * pass re-lists the (refreshed) file index, so a post-invalidation
-  * recompute sees appended files.
+  * has the pre-ingest file listing baked into its scan — after
+  * re-listing the plan's file indexes, so a recompute sees every write
+  * acknowledged before the lookup began.
   *
   * Entries evict LRU beyond `maxEntries` (access-ordered LinkedHashMap).
   */
@@ -83,6 +90,53 @@ object QueryCache {
     def scan(df: DataFrame): DataFrame =
       df.sparkSession.createDataFrame(rows.toSeq.asJava, schema)
         .coalesce(1).toDF(df.columns.toIndexedSeq: _*)
+
+    // JSON rows per (caller column names, session time zone); a few
+    // alias lists at most, so clearing on overflow bounds it
+    private val rendered = new java.util.concurrent.ConcurrentHashMap[
+      (Seq[String], String), IndexedSeq[String]]()
+
+    def json(df: DataFrame): IndexedSeq[String] = {
+      val conf = df.sparkSession.sessionState.conf
+      val names = df.columns.toSeq
+      if (rendered.size >= 4) rendered.clear()
+      rendered.computeIfAbsent((names, conf.sessionLocalTimeZone), _ =>
+        render(rows, StructType(schema.fields.zip(names).map {
+          case (f, n) => f.copy(name = n)
+        }), conf))
+    }
+  }
+
+  /** `rows` as `Dataset.toJSON` renders them (same generator, options
+    * and Row-to-InternalRow serializer), on the calling thread. */
+  private def render(rows: Array[Row], schema: StructType,
+                     conf: SQLConf): IndexedSeq[String] =
+    SQLConf.withExistingConf(conf) {
+      val toRow = ExpressionEncoder(schema, /* lenient = */ true).createSerializer()
+      val writer = new java.io.CharArrayWriter()
+      val gen = new JacksonGenerator(schema, writer,
+        new JSONOptions(Map.empty[String, String], conf.sessionLocalTimeZone))
+      try rows.toIndexedSeq.map { r =>
+        gen.write(toRow(r))
+        gen.flush()
+        val json = writer.toString
+        writer.reset()
+        json
+      } finally gen.close()
+    }
+
+  /** One lookup's outcome: `hit` when the result was found rather than
+    * computed now. */
+  final class Lookup private[QueryCache] (df: DataFrame, entry: Entry,
+                                          val hit: Boolean) {
+    /** The result as a DataFrame: a scan of the kept rows, or `df`
+      * itself when the plan is not cacheable or its result is over
+      * [[Bound]] rows. */
+    def frame: DataFrame = if (entry == null) df else entry.scan(df)
+
+    /** The result's rows as `df.toJSON` renders them, under `df`'s column
+      * names, when the rows are held (None where [[frame]] is `df`). */
+    def json: Option[IndexedSeq[String]] = Option(entry).map(_.json(df))
   }
 
   // access-ordered: get() on a hit moves the entry to the young end, so
@@ -92,10 +146,6 @@ object QueryCache {
   private val entries =
     new java.util.LinkedHashMap[Key, Entry](16, 0.75f, true)
   private val lock = new Object
-  // invalidations so far per table root (guarded by `lock`): a miss
-  // computed across an invalidation of a root it scans is not kept
-  private val pathEpochs = scala.collection.mutable.HashMap.empty[String, Long]
-    .withDefaultValue(0L)
 
   @volatile private var hitCount = 0L
   @volatile private var missCount = 0L
@@ -139,22 +189,26 @@ object QueryCache {
     if (uncacheable) None else Some(Key(plan, relTokens.result()))
   }
 
-  private def rootPathsOf(plan: LogicalPlan): Set[String] =
+  private def fileRelationsOf(plan: LogicalPlan) =
     plan.collect {
       case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
         lr.relation match {
-          case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            fs.location.rootPaths.map(_.toUri.getPath)
-          case _ => Nil
+          case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation => Some(fs)
+          case _ => None
         }
-    }.flatten.toSet
+    }.flatten
 
   /** Serve `df`'s result from the cache, computing it on miss. The
     * returned DataFrame scans the kept rows — identical rows, no
     * recomputation. Non-deterministic plans (rand(), current timestamp)
     * and results over [[Bound]] rows are never cached. */
-  def cached(df: DataFrame): DataFrame = {
-    val key = normalizedKey(df).getOrElse(return df)
+  def cached(df: DataFrame): DataFrame = lookup(df).frame
+
+  /** Find `df`'s result in the cache, computing (one collect) and keeping
+    * it on a miss; see [[cached]] for what is never kept. */
+  def lookup(df: DataFrame): Lookup = {
+    def uncached = new Lookup(df, null, false)
+    val key = normalizedKey(df).getOrElse(return uncached)
     val deterministic = key.plan.collect { case n => n }
       .forall(_.expressions.forall(_.deterministic))
     // Time-dependent expressions are deterministic=true in Catalyst
@@ -168,41 +222,48 @@ object QueryCache {
            _: LocalTimestamp | _: CurrentTimeZone => true
       case _ => false
     }))
-    if (!deterministic || timeDependent) return df
+    if (!deterministic || timeDependent) return uncached
     val now = System.currentTimeMillis()
-    val paths = rootPathsOf(df.queryExecution.analyzed)
-    def epochs = paths.map(p => p -> pathEpochs(p)).toMap
+    val relations = fileRelationsOf(df.queryExecution.analyzed)
+    val paths = relations.flatMap(_.location.rootPaths.map(_.toUri.getPath)).toSet
+    def epochs = paths.map(p => p -> graft.Tables.writeEpoch(p)).toMap
     val epochsBefore = lock.synchronized {
       val hit = entries.get(key)
       if (hit != null && now - hit.createdMs <= ttlMs) {
         hitCount += 1
-        return hit.scan(df)
+        return new Lookup(df, hit, true)
       }
       if (hit != null) entries.remove(key) // expired
       epochs
     }
     // compute OUTSIDE the lock: a slow query must not serialize the cache.
+    // The caller's file listings may predate a write `epochsBefore`
+    // already counts (a REST view registered, then an ingest acknowledged,
+    // then this lookup), so they are re-listed now, after the read: the
+    // kept rows then hold every write the epochs count.
+    relations.foreach(_.location.refresh())
     // NEVER re-run the caller's DataFrame — its memoized QueryExecution
     // has the planning-time file listing baked into the scan. The no-op
     // filter builds a NEW Dataset over the analyzed plan, so collecting
-    // it runs a fresh planning pass that re-lists the (refreshed) file
-    // index; the optimizer erases the trivial filter itself.
+    // it runs a fresh planning pass over the re-listed file index; the
+    // optimizer erases the trivial filter itself.
     val fresh = df.where(org.apache.spark.sql.functions.lit(true))
     val rows = fresh.limit(Bound + 1).collect()
     val entry = Entry(rows, fresh.schema, now, paths)
     lock.synchronized {
       missCount += 1
-      if (rows.length > Bound) return df
-      // an ingest into a scanned root committed during the compute: the
+      if (rows.length > Bound) return uncached
+      // a write into a scanned root committed during the compute: the
       // result may predate it, so this caller gets it but no one else
-      if (epochs != epochsBefore) return entry.scan(df)
+      if (epochs != epochsBefore) return new Lookup(df, entry, false)
       val race = entries.get(key)
-      if (race != null && now - race.createdMs <= ttlMs) return race.scan(df)
+      if (race != null && now - race.createdMs <= ttlMs)
+        return new Lookup(df, race, false)
       entries.put(key, entry)
       while (entries.size > maxEntries)
         entries.remove(entries.keySet().iterator().next())
     }
-    entry.scan(df)
+    new Lookup(df, entry, false)
   }
 
   /** Insert-triggered invalidation: drop every entry whose plan scanned
@@ -211,11 +272,7 @@ object QueryCache {
     * absolute), so a relative caller path is absolutized before matching
     * — same contract as `Projections.invalidatePath`. */
   def invalidatePath(path: String): Unit = lock.synchronized {
-    val target = {
-      val p = new org.apache.hadoop.fs.Path(path).toUri.getPath
-      if (p.startsWith("/")) p else new java.io.File(p).getAbsolutePath
-    }
-    pathEpochs(target) += 1
+    val target = graft.Tables.absolutePath(path)
     entries.values().removeIf(_.paths.contains(target))
   }
 

@@ -859,10 +859,7 @@ object Projections {
     if (registry.isEmpty) return
     // registered roots are absolute URI paths — absolutize a relative
     // caller path so it can match them
-    val target = {
-      val p = new org.apache.hadoop.fs.Path(path).toUri.getPath
-      if (p.startsWith("/")) p else new java.io.File(p).getAbsolutePath
-    }
+    val target = graft.Tables.absolutePath(path)
     def refreshBase(base: DataFrame): Unit =
       base.queryExecution.analyzed.foreach {
         case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>

@@ -100,9 +100,10 @@ class Catalog(spark: SparkSession, root: String) {
     val meta = new java.io.File(catalogDir, s"$name.json")
     val existed = meta.exists()
     meta.delete()
-    val data = new org.apache.hadoop.fs.Path(s"$root/$name")
+    val data = new org.apache.hadoop.fs.Path(dataPath(name))
     val fs = data.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(data, true)
+    graft.Tables.tableWritten(dataPath(name))
     existed
   }
 
@@ -115,14 +116,15 @@ class Catalog(spark: SparkSession, root: String) {
   }
 
   /** Read a table (empty frame with the declared schema if no data yet). */
-  def table(name: String): DataFrame = {
-    val tdef = get(name).getOrElse(sys.error(s"no such table: $name"))
-    if (hasData(name))
+  def table(name: String): DataFrame =
+    read(get(name).getOrElse(sys.error(s"no such table: $name")))
+
+  private def read(tdef: TableDef): DataFrame =
+    if (hasData(tdef.name))
       spark.read.schema(tdef.schema.add(TimeTable.BucketCol, StringType))
-        .parquet(dataPath(name)).drop(TimeTable.BucketCol)
+        .parquet(dataPath(tdef.name)).drop(TimeTable.BucketCol)
     else
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], tdef.schema)
-  }
 
   /** Ingest rows (REST `{columns, data}` payload — string cells cast to
     * the declared types; `_time` defaults to now; `_idem` key dedup
@@ -235,10 +237,38 @@ class Catalog(spark: SparkSession, root: String) {
     lines.size
   }
 
+  private val registered =
+    new java.util.concurrent.ConcurrentHashMap[String, Registered]()
+  private val registering = new Object
+
+  private def tempView(name: String): Option[AnyRef] =
+    spark.sessionState.catalog.getRawTempView(name)
+
   /** Register the catalog tables `named` picks as temp views (search
-    * queries reference tables by name); each one re-lists its files. */
+    * queries reference tables by name). A view is rebuilt, re-listing
+    * its files, only when the table's write epoch or definition differs
+    * from its last registration or the view is not the one registered;
+    * otherwise nothing is listed. Every `Tables.tableWritten` call (all
+    * graft writers, and drop) bumps the epoch before it returns, so a
+    * search sees each ingest acknowledged before it; files put under a
+    * table directory any other way are seen after the table's next write
+    * or DDL. Rebuilds are serialized, so a view is never replaced by an
+    * older listing. */
   def registerViews(named: String => Boolean = _ => true): Unit =
-    list().filter(named).foreach(n => table(n).createOrReplaceTempView(n))
+    list().filter(named).foreach { n =>
+      // the epoch is read before `read` lists the files
+      def wanted = get(n).map(Registered(graft.Tables.writeEpoch(dataPath(n)), _, null))
+      def upToDate(w: Registered) = {
+        val r = registered.get(n)
+        r != null && r.copy(view = null) == w && tempView(n).exists(_ eq r.view)
+      }
+      if (!wanted.forall(upToDate)) registering.synchronized {
+        wanted.filterNot(upToDate).foreach { w =>
+          read(w.tdef).createOrReplaceTempView(n)
+          registered.put(n, w.copy(view = tempView(n).orNull))
+        }
+      }
+    }
 }
 
 object Catalog {
@@ -261,8 +291,15 @@ object Catalog {
     s"""{"name":${q(t.name)},"columns":[$cols],"order_by":[$ob],"partition_by_granularity":${q(t.granularity)},"subtype":${q(t.subtype)}}"""
   }
 
+  /** What a view was registered from: the table's write epoch (read
+    * before its files were listed), its definition, and the session's
+    * view object, so a view replaced or dropped by anyone else is seen. */
+  private final case class Registered(epoch: Long, tdef: TableDef, view: AnyRef)
+
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
   def fromJson(s: String): TableDef = {
-    val m = new com.fasterxml.jackson.databind.ObjectMapper().readTree(s)
+    val m = mapper.readTree(s)
     import scala.jdk.CollectionConverters._
     TableDef(
       m.get("name").asText(),

@@ -33,15 +33,29 @@ import graft.sql.Search
   * Built on the JDK's HttpServer (no extra dependencies). Ingest here is
   * synchronous (commit before the response returns) — poll_ids resolve
   * immediately to `committed`; the reference's async Kafka-WAL path needs
-  * a broker this environment doesn't ship. Query execution, time-bound
-  * injection, paging, and the catalog are the real library code paths.
+  * a broker this environment doesn't ship. The server remembers the last
+  * [[RestServer.MaxPolls]] poll_ids; an older one reads as unknown (404).
+  * Query execution, time-bound injection, paging, and the catalog are the
+  * real library code paths.
   */
 class RestServer(spark: SparkSession, catalog: Catalog, port: Int = 0) {
 
   private val mapper = new ObjectMapper()
-  private val polls =
-    new java.util.concurrent.ConcurrentHashMap[String, Long]()
+  // insertion-ordered, oldest out beyond MaxPolls (as QueryLog bounds itself)
+  private val polls = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[String, java.lang.Long]() {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[String, java.lang.Long]): Boolean =
+        size() > RestServer.MaxPolls
+    })
   private val server = HttpServer.create(new InetSocketAddress(port), 0)
+
+  /** A new poll_id whose status reports `rows` committed rows. */
+  private[graft] def newPoll(rows: Long): String = {
+    val pollId = java.util.UUID.randomUUID().toString
+    polls.put(pollId, rows)
+    pollId
+  }
 
   def boundPort: Int = server.getAddress.getPort
 
@@ -146,9 +160,7 @@ class RestServer(spark: SparkSession, catalog: Catalog, port: Int = 0) {
       Option(b.get("sourcetype")).map(_.asText()).getOrElse("default")
     val lines = b.get("data").elements().asScala.map(_.asText()).toSeq
     val n = catalog.ingestRaw(name, sourcetype, lines)
-    val pollId = java.util.UUID.randomUUID().toString
-    polls.put(pollId, n)
-    (200, s"""{"poll_id":"$pollId","committed":$n}""")
+    (200, s"""{"poll_id":"${newPoll(n)}","committed":$n}""")
   })
 
   /** Column DDL (daisy ColumnRestRouterHandler):
@@ -229,9 +241,7 @@ class RestServer(spark: SparkSession, catalog: Catalog, port: Int = 0) {
     val data = b.get("data").elements().asScala.map(row =>
       row.elements().asScala.map(c => if (c.isNull) null else c.asText()).toSeq).toSeq
     val n = catalog.ingest(name, columns, data)
-    val pollId = java.util.UUID.randomUUID().toString
-    polls.put(pollId, n)
-    (200, s"""{"poll_id":"$pollId","committed":$n}""")
+    (200, s"""{"poll_id":"${newPoll(n)}","committed":$n}""")
   })
 
   server.createContext("/dae/v1/ingest/statuses", (ex: HttpExchange) => handle(ex) {
@@ -244,9 +254,10 @@ class RestServer(spark: SparkSession, catalog: Catalog, port: Int = 0) {
     }
   })
 
-  /** Re-register the catalog and system views `sql` names as a word, so a
+  /** Register the catalog and system views `sql` names as a word, so a
     * request sees every ingest acknowledged before it without re-reading
-    * every table and system frame (~200 ms a request). */
+    * every table and system frame (~200 ms a request); a catalog view is
+    * rebuilt only when its table changed (`Catalog.registerViews`). */
   private def registerViewsFor(sql: String): Unit = {
     val named = (n: String) =>
       ("(?i)\\b" + java.util.regex.Pattern.quote(n) + "\\b").r.findFirstIn(sql).isDefined
@@ -257,7 +268,9 @@ class RestServer(spark: SparkSession, catalog: Catalog, port: Int = 0) {
   /** Results are STREAMED: rows flow driver→client via toLocalIterator
     * into a chunked response, so no result set is ever collect()ed whole
     * on the driver (the reference streams too —
-    * `SearchHandler.h:18 streamingOutput`). `limit <= 0` means
+    * `SearchHandler.h:18 streamingOutput`). A `use_cache` result the
+    * QueryCache holds (at most `QueryCache.Bound` rows) is written from
+    * its JSON rows instead: no Spark job on a hit. `limit <= 0` means
     * "unbounded" to the caller but is clamped to [[RestServer.MaxResultRows]]
     * server-side. A mid-stream executor failure truncates the chunked
     * body (the HTTP code is already on the wire) — same contract as the
@@ -293,10 +306,10 @@ class RestServer(spark: SparkSession, catalog: Catalog, port: Int = 0) {
       // point is re-evaluating against fresh ingests.
       val useCache = watchMode.isEmpty &&
         opt("use_cache").exists(_.asBoolean(false))
-      val df = {
-        val built = buildDf()
-        if (useCache) graft.core.QueryCache.cached(built) else built
-      }
+      val built = buildDf()
+      val cache = if (useCache) Some(graft.core.QueryCache.lookup(built)) else None
+      val cacheTag = cache.map(c => if (c.hit) "hit" else "miss").orNull
+      lazy val df = cache.fold(built)(_.frame)
 
       // WATCH mode (reference live views, `StorageLiveView.h:84-88`
       // periodic refresh + `ASTWatchQuery` LIMIT n): a chunked NDJSON
@@ -360,13 +373,14 @@ class RestServer(spark: SparkSession, catalog: Catalog, port: Int = 0) {
           headersSent = true
           val os = ex.getResponseBody
           try os.write(bytes) finally os.close()
-          SystemTables.QueryLog.record(sql, logT0, -1L, "ok")
+          SystemTables.QueryLog.record(sql, logT0, -1L, "ok", cacheTag)
         case Some(other) if other != "json" =>
           respond(ex, 400, s"""{"error":${Catalog.toJsonString(
             s"unknown format: $other (json, pretty, vertical, markdown, xml, csv, tsv)")}}""")
           headersSent = true
         case _ =>
-          val it = df.toJSON.toLocalIterator()
+          val it = cache.flatMap(_.json).map(_.iterator)
+            .getOrElse(df.toJSON.toLocalIterator().asScala)
           ex.getResponseHeaders.set("Content-Type", "application/json")
           ex.sendResponseHeaders(200, 0) // length 0 = chunked transfer
           headersSent = true
@@ -382,7 +396,7 @@ class RestServer(spark: SparkSession, catalog: Catalog, port: Int = 0) {
               nRows += 1
             }
             os.write("]}".getBytes(UTF_8))
-            SystemTables.QueryLog.record(sql, logT0, nRows, "ok")
+            SystemTables.QueryLog.record(sql, logT0, nRows, "ok", cacheTag)
           } finally os.close()
         }
       }
@@ -436,4 +450,7 @@ class RestServer(spark: SparkSession, catalog: Catalog, port: Int = 0) {
 object RestServer {
   /** Server-side clamp for `limit <= 0` ("unbounded") search requests. */
   val MaxResultRows = 1000000
+
+  /** Poll ids kept for `/ingest/statuses`. */
+  val MaxPolls = 1000
 }

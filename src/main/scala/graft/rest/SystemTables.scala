@@ -26,15 +26,17 @@ object SystemTables {
     * bounded in-memory ring of recent /search executions. The reference
     * persists its log through an internal MergeTree table; here the
     * introspection surface is the contract — entries are session-local
-    * and capped, like the metrics snapshot. */
+    * and capped, like the metrics snapshot. `cache` is `hit` or `miss`
+    * for a `use_cache` search (graft's QueryCache), null otherwise. */
   object QueryLog {
     final case class Entry(eventMs: Long, query: String, durationMs: Long,
-                           resultRows: Long, status: String)
+                           resultRows: Long, status: String, cache: String)
     private val cap = 1000
     private val buf = new java.util.concurrent.ConcurrentLinkedDeque[Entry]
-    def record(query: String, startNs: Long, rows: Long, status: String): Unit = {
+    def record(query: String, startNs: Long, rows: Long, status: String,
+               cache: String = null): Unit = {
       buf.addLast(Entry(System.currentTimeMillis(), query,
-        (System.nanoTime() - startNs) / 1000000L, rows, status))
+        (System.nanoTime() - startNs) / 1000000L, rows, status, cache))
       while (buf.size > cap) buf.pollFirst()
     }
     def entries(): Seq[Entry] = {
@@ -49,8 +51,8 @@ object SystemTables {
   def queryLog(spark: SparkSession): DataFrame = {
     import spark.implicits._
     QueryLog.entries()
-      .map(e => (e.eventMs, e.query, e.durationMs, e.resultRows, e.status))
-      .toDF("event_ms", "query", "duration_ms", "result_rows", "status")
+      .map(e => (e.eventMs, e.query, e.durationMs, e.resultRows, e.status, e.cache))
+      .toDF("event_ms", "query", "duration_ms", "result_rows", "status", "cache")
   }
 
   /** system.tables — one row per catalog table. */

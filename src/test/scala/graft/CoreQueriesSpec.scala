@@ -26,21 +26,39 @@ object TestSpark {
   /** Spark jobs that `body` launches from this thread: jobs are tagged
     * with a job group, and a marker job after `body` proves the listener
     * has seen every earlier job. */
-  def jobsIn(body: => Unit): Int = {
+  def jobsIn(body: => Unit): Int = countJobs(body, anyThread = false)
+
+  /** Spark jobs launched from ANY thread while `body` runs (a REST
+    * request runs on a server thread), so nothing else may launch jobs
+    * meanwhile. A marker job before `body` starts the count, so a job
+    * from before it that the listener bus delivers late is not counted. */
+  def allJobsIn(body: => Unit): Int = countJobs(body, anyThread = true)
+
+  private def countJobs(body: => Unit, anyThread: Boolean): Int = {
     val sc = spark.sparkContext
     val group = "jobs-in-" + System.nanoTime()
     val jobs = new AtomicInteger
+    val startSeen = new CountDownLatch(1)
     val markerSeen = new CountDownLatch(1)
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) {
-          if (e.properties.getProperty("spark.job.description") == "marker") markerSeen.countDown()
-          else jobs.incrementAndGet()
-        }
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val mine = e.properties != null &&
+          e.properties.getProperty("spark.jobGroup.id") == group
+        val description = if (mine) e.properties.getProperty("spark.job.description") else null
+        if (description == "start") startSeen.countDown()
+        else if (description == "marker") markerSeen.countDown()
+        else if (mine || (anyThread && startSeen.getCount == 0)) jobs.incrementAndGet()
+      }
     }
     sc.addSparkListener(listener)
     sc.setJobGroup(group, "body")
     try {
+      if (anyThread) {
+        sc.setJobDescription("start")
+        sc.parallelize(Seq(1), 1).count()
+        assert(startSeen.await(60, TimeUnit.SECONDS), "listener never saw the start job")
+        sc.setJobDescription("body")
+      }
       body
       sc.setJobDescription("marker")
       sc.parallelize(Seq(1), 1).count()

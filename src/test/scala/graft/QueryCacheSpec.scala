@@ -140,7 +140,7 @@ class QueryCacheSpec extends AnyFunSuite {
       submit(spark.range(100, 200).coalesce(1).write.mode("append").parquet(dir))
         .get(60, java.util.concurrent.TimeUnit.SECONDS)
       refreshFileIndex(base)
-      QueryCache.invalidatePath(dir)
+      Tables.tableWritten(dir)
       proceed.countDown()
       racing.get(60, java.util.concurrent.TimeUnit.SECONDS)
       assert(QueryCache.cached(onPath).collect()(0).getLong(0) == (0L until 200L).sum,
@@ -149,6 +149,34 @@ class QueryCacheSpec extends AnyFunSuite {
       proceed.countDown()
       pool.shutdown()
       QueryCache.clear()
+      org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
+    }
+  }
+
+  test("an ingest acknowledged between a view's registration and a miss is not cached stale") {
+    freshState()
+    val root = java.nio.file.Files.createTempDirectory("graft_qcache_view")
+    try {
+      val catalog = new graft.rest.Catalog(spark, root.toString)
+      catalog.create(graft.rest.TableDef("qc_view",
+        Seq(graft.rest.ColumnDef("k", "bigint")), Nil, "D"))
+      def ingest(k: Int): Unit =
+        catalog.ingest("qc_view", Seq("k", "_time"), Seq(Seq(k.toString, "2024-03-01 10:00:00")))
+      def count = spark.sql("SELECT count(*) AS n FROM qc_view")
+      ingest(1)
+      // a search registers its view, an ingest is acknowledged, then the
+      // search looks its plan up: the miss must not keep the old listing
+      catalog.registerViews()
+      val search = count
+      ingest(2)
+      assert(QueryCache.cached(search).collect()(0).getLong(0) == 2L)
+      catalog.registerViews()
+      assert(QueryCache.cached(count).collect()(0).getLong(0) == 2L,
+        "a search after the ingest was served the pre-ingest entry")
+      assert(QueryCache.hits == 1)
+    } finally {
+      QueryCache.clear()
+      spark.catalog.dropTempView("qc_view")
       org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
     }
   }
@@ -189,6 +217,24 @@ class QueryCacheSpec extends AnyFunSuite {
     }
     assert(QueryCache.hits == 1 && rows == 4)
     assert(jobs <= 1, s"a 4-row hit ran $jobs jobs")
+    QueryCache.clear()
+  }
+
+  test("a JSON hit runs no Spark job and renders as toJSON does") {
+    freshState()
+    val q = spark.range(1000).groupBy((col("id") % 4).as("k")).agg(sum("id").as("s"))
+      .select(col("k"), (col("s") / 7.0).as("d"), array(col("k"), col("s")).as("arr"),
+        map(lit("k"), col("k")).as("m"),
+        struct(col("k"), lit(null).cast("int").as("z")).as("st"),
+        lit(java.sql.Timestamp.valueOf("2024-03-01 10:00:00.5")).as("t"))
+      .orderBy("k")
+    val expected = q.toJSON.collect().toSeq
+    assert(QueryCache.lookup(q).json.contains(expected)) // the miss
+    var json: Option[IndexedSeq[String]] = None
+    val jobs = jobsIn { json = QueryCache.lookup(q).json }
+    assert(QueryCache.hits == 1 && QueryCache.misses == 1)
+    assert(json.contains(expected), s"$json vs $expected")
+    assert(jobs == 0, s"a JSON hit ran $jobs jobs")
     QueryCache.clear()
   }
 }

@@ -295,6 +295,19 @@ class RestSpec extends AnyFunSuite with TempDirs {
       """{"query":"SELECT count(*) AS n FROM system_query_log WHERE status = 'error'"}""")
     assert(c3 == 200, b3)
     assert(""""n":(\d+)""".r.findFirstMatchIn(b3).get.group(1).toLong >= 1, b3)
+    // `cache` says hit or miss for a use_cache search, null otherwise
+    graft.core.QueryCache.clear()
+    graft.rest.SystemTables.QueryLog.clear()
+    val cachedQ = """{"query":"SELECT count(*) AS n FROM logs","use_cache":true}"""
+    assert(post("/search", cachedQ)._1 == 200)
+    assert(post("/search", cachedQ)._1 == 200)
+    assert(post("/search", """{"query":"SELECT count(*) AS n FROM logs"}""")._1 == 200)
+    val (c4, b4) = post("/search",
+      """{"query":"SELECT coalesce(cache, 'none') AS c FROM system_query_log"}""")
+    assert(c4 == 200, b4)
+    assert(""""c":"(\w+)"""".r.findAllMatchIn(b4).map(_.group(1)).toSeq ==
+      Seq("miss", "hit", "none"), b4)
+    graft.core.QueryCache.clear()
   }
 
   test("analyzer returns a physical plan without executing") {
@@ -349,6 +362,135 @@ class RestSpec extends AnyFunSuite with TempDirs {
     val (c4, b4) = post("/search", q)
     assert(c4 == 200 && b4 == b3 && graft.core.QueryCache.hits == h1 + 1)
     graft.core.QueryCache.clear()
+  }
+
+  /** Create table `name` (k bigint, v double, _time) and ingest `rows`
+    * (k, v) pairs, all on 2024-03-01: one partition directory, one file. */
+  private def table(name: String, rows: Seq[(Int, Double)]): Unit = {
+    val (cc, cb) = post("/ddl/tables", s"""{"name":"$name","columns":[
+        |{"name":"k","type":"bigint"},{"name":"v","type":"double"},
+        |{"name":"_time","type":"timestamp"}]}""".stripMargin)
+    assert(cc == 200, cb)
+    if (rows.nonEmpty) ingest(name, rows)
+  }
+
+  private def ingest(name: String, rows: Seq[(Int, Double)]): Unit = {
+    val data = rows.map { case (k, v) => s"""["$k","$v","2024-03-01 10:00:00"]""" }
+    val (ic, ib) = post(s"/ingest/tables/$name",
+      s"""{"columns":["k","v","_time"],"data":[${data.mkString(",")}]}""")
+    assert(ic == 200, ib)
+  }
+
+  private def count(name: String): Long = {
+    val (c, b) = post("/search", s"""{"query":"SELECT count(*) AS n FROM $name"}""")
+    assert(c == 200, b)
+    """"n":(\d+)""".r.findFirstMatchIn(b).get.group(1).toLong
+  }
+
+  test("a use_cache hit over HTTP runs no Spark job; a miss runs one") {
+    table("one_file", Seq(1 -> 1.5, 2 -> 2.5, 3 -> -1.0))
+    graft.core.QueryCache.clear()
+    val q = """{"query":"SELECT k, v FROM one_file WHERE v > 0","use_cache":true}"""
+    var miss, hit = ""
+    val missJobs = allJobsIn { miss = post("/search", q)._2 }
+    val hitJobs = allJobsIn { hit = post("/search", q)._2 }
+    assert(graft.core.QueryCache.hits == 1 && graft.core.QueryCache.misses == 1)
+    assert(miss == """{"rows":[{"k":1,"v":1.5},{"k":2,"v":2.5}]}""", miss)
+    assert(hit == miss)
+    assert(missJobs == 1, s"a miss ran $missJobs Spark jobs")
+    assert(hitJobs == 0, s"a hit ran $hitJobs Spark jobs")
+    graft.core.QueryCache.clear()
+    assert(delete("/ddl/tables/one_file")._1 == 200)
+  }
+
+  test("a cached hit's body is byte-identical to the uncached body") {
+    assert(post("/ddl/tables", """{"name":"typed","columns":[
+        |{"name":"name","type":"string"},{"name":"score","type":"double"},
+        |{"name":"note","type":"string"},{"name":"_time","type":"timestamp"}]}""".stripMargin)._1 == 200)
+    assert(post("/ingest/tables/typed", """{"columns":["name","score","note","_time"],"data":[
+        | ["a","12.5","x","2024-03-01 10:00:00.123456"],
+        | ["b","1.0E-7",null,"2024-03-02 23:59:59"],
+        | ["c",null,"é\"q","2024-03-03 00:00:00"]]}""".stripMargin)._1 == 200)
+    def query(aliases: Seq[String], cache: Boolean) = {
+      val Seq(s, t, n, arr, m, st) = aliases
+      s"""{"query":"SELECT name, score AS $s, _time AS $t, note AS $n, """ +
+        s"""array(score, score * 2) AS $arr, map(name, score) AS $m, """ +
+        s"""named_struct('n', name, 't', _time, 'none', CAST(NULL AS int)) AS $st """ +
+        s"""FROM typed ORDER BY name","use_cache":$cache}"""
+    }
+    val names = Seq("score", "at", "note", "arr", "m", "st")
+    val twin = Seq("s2", "t2", "n2", "a2", "m2", "st2")
+    graft.core.QueryCache.clear()
+    val (uc, uncached) = post("/search", query(names, cache = false))
+    assert(uc == 200, uncached)
+    assert(uncached.contains("\"at\":") && uncached.contains("\"arr\":[12.5,25.0]"), uncached)
+    val miss = post("/search", query(names, cache = true))._2
+    val hit = post("/search", query(names, cache = true))._2
+    // the twin keys the same entry and reads back its own aliases
+    val twinUncached = post("/search", query(twin, cache = false))._2
+    val twinHit = post("/search", query(twin, cache = true))._2
+    assert(graft.core.QueryCache.misses == 1 && graft.core.QueryCache.hits == 2)
+    assert(miss == uncached, s"$miss vs $uncached")
+    assert(hit == uncached, s"$hit vs $uncached")
+    assert(twinHit == twinUncached && twinHit != uncached, s"$twinHit vs $twinUncached")
+    graft.core.QueryCache.clear()
+    assert(delete("/ddl/tables/typed")._1 == 200)
+  }
+
+  // Freshness of the registered views: a view is rebuilt only when its
+  // table's write epoch or definition changed. An ingest, a Maintenance
+  // rewrite and a drop + re-create under the same definition change only
+  // the epoch; column DDL changes only the definition.
+  test("a search sees rows ingested since its view was registered") {
+    table("fresh_ingest", Seq(1 -> 1.0, 2 -> 6.0))
+    assert(count("fresh_ingest") == 2) // registers the view
+    ingest("fresh_ingest", Seq(3 -> 7.0))
+    assert(count("fresh_ingest") == 3, "ingest not seen")
+    assert(delete("/ddl/tables/fresh_ingest")._1 == 200)
+  }
+
+  test("a search sees columns added and dropped since its view was registered") {
+    table("fresh_ddl", Seq(1 -> 1.0, 2 -> 6.0))
+    assert(count("fresh_ddl") == 2)
+    assert(post("/ddl/fresh_ddl/columns", """{"name":"extra","type":"int"}""")._1 == 200)
+    val (ac, ab) = post("/search", """{"query":"SELECT k, extra FROM fresh_ddl ORDER BY k"}""")
+    assert(ac == 200 && ab == """{"rows":[{"k":1},{"k":2}]}""", ab)
+    assert(delete("/ddl/fresh_ddl/columns/extra")._1 == 200)
+    val (dc, db) = post("/search", """{"query":"SELECT extra FROM fresh_ddl"}""")
+    assert(dc == 400, s"dropped column still readable: $db")
+    assert(delete("/ddl/tables/fresh_ddl")._1 == 200)
+  }
+
+  test("a search sees a Maintenance rewrite made since its view was registered") {
+    table("fresh_mnt", Seq(1 -> 1.0, 2 -> 6.0, 3 -> 7.0))
+    assert(count("fresh_mnt") == 3)
+    graft.operators.Maintenance.mutateDelete(spark, s"$root/fresh_mnt", "v > 5")
+    assert(count("fresh_mnt") == 1, "Maintenance rewrite not seen")
+    assert(delete("/ddl/tables/fresh_mnt")._1 == 200)
+  }
+
+  test("a search sees a table dropped and re-created under the same definition") {
+    table("fresh_drop", Seq(1 -> 1.0, 2 -> 6.0))
+    assert(count("fresh_drop") == 2)
+    assert(delete("/ddl/tables/fresh_drop")._1 == 200)
+    table("fresh_drop", Nil)
+    assert(count("fresh_drop") == 0, "re-created table shows the dropped one's rows")
+    assert(delete("/ddl/tables/fresh_drop")._1 == 200)
+  }
+
+  test("poll ids are bounded: the oldest is forgotten (404)") {
+    table("polled", Nil)
+    val (ic, ib) = post("/ingest/tables/polled",
+      """{"columns":["k","v","_time"],"data":[["1","1.0","2024-03-01 10:00:00"]]}""")
+    assert(ic == 200, ib)
+    val oldest = ib.split("\"poll_id\":\"")(1).split("\"")(0)
+    assert(get(s"/ingest/statuses?poll_id=$oldest")._1 == 200)
+    val newest = (1 to RestServer.MaxPolls).map(_ => server.newPoll(0L)).last
+    val (oc, ob) = get(s"/ingest/statuses?poll_id=$oldest")
+    assert(oc == 404 && ob.contains("unknown"), ob)
+    assert(get(s"/ingest/statuses?poll_id=$newest")._1 == 200)
+    assert(get("/ingest/statuses?poll_id=unknown-id")._1 == 404)
+    assert(delete("/ddl/tables/polled")._1 == 200)
   }
 
   test("drop removes table and data") {
