@@ -25,7 +25,9 @@ import org.apache.spark.sql.SparkSession
   * A query that throws (in the warm-up or in any timed run) is never a
   * timing: its `status` is `failed`, it is named in `failed` and on
   * stderr, it is left out of `queries` and of both sums, and the main
-  * exits with status 1 after printing its lines.
+  * exits with status 1 after printing its lines. A hits query that
+  * throws is named `hits qN` in `failed` and `qN` in `hits_failed`, and
+  * is left out of `hits_suite_sec`.
   */
 object Bench {
 
@@ -62,30 +64,38 @@ object Bench {
     }
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
+  /** System load average over the last minute. */
+  def loadAvg: Double = java.lang.management.ManagementFactory
+    .getOperatingSystemMXBean.getSystemLoadAverage
+
+  /** The session every graft main runs on: local[SPARK_GRAFT_CPUS]
+    * (default: the JVM's available processors) with as many shuffle
+    * partitions, UTC, no UI, and graft's tuning. Spark's shuffle and
+    * spill scratch goes under [[Tables.scratchRoot]]: RAM-backed where
+    * /dev/shm exists (the hits suite moves 100-500 MB of shuffle per
+    * high-cardinality query) and private to this process, since a
+    * sibling JVM exiting deletes a shared local root it created and
+    * with it this run's shuffle files. */
+  def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // Shuffle spill/scratch on tmpfs: the hits suite moves 100-500 MB
-      // of shuffle per high-cardinality query; RAM-backed local dirs take
-      // the filesystem out of the measurement (lz4 shuffle compression
-      // stays at its default ON — string shuffles compress ~5x, probed
-      // q35 495 MB -> 90 MB).
-      // per-process: see BenchHits100 — a sibling bench JVM exiting can
-      // delete a shared local root it created, killing this run's shuffle
-      .config("spark.local.dir",
-        s"/dev/shm/spark-graft-${ProcessHandle.current().pid()}")
-    // Core-conf A/B hook (core confs are static — env-driven so they land
-    // before the context starts): SPARK_GRAFT_CORE_CONF="k=v;k=v".
-    sys.env.get("SPARK_GRAFT_CORE_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
-    val spark = builder.getOrCreate()
+      .config("spark.local.dir", s"${Tables.scratchRoot}/spark-local")
+      // the 100 M and 1 B hits scales ran with this bound
+      .config("spark.driver.maxResultSize", "4g")
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Tables.tune(spark)
+    spark
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = session()
 
     def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)(): Unit =
       try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
@@ -101,11 +111,9 @@ object Bench {
       .flatMap(n => SparkEntry.queries.get(n).map(fn => n -> timeOnce(run(fn))))
       .filterNot(_._2.ok)
 
-    // Ambient load BEFORE any bench work: the suite itself drives the
-    // 32-thread box to ~10, so sampling at the end conflates self-load
-    // with the co-tenant interference the reader wants to discount.
-    def sampleLoad(): Double = java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean.getSystemLoadAverage
+    // Ambient load BEFORE any bench work: the suite itself loads the
+    // box, so sampling at the end conflates self-load with the
+    // co-tenant interference the reader wants to discount.
     // Record-and-retry under co-tenant load (judge r10: a run at ambient
     // 40.2 made the suite headline unusable for round-over-round
     // comparison): when the box is busier than the sanity bound before
@@ -113,10 +121,10 @@ object Bench {
     // the same discipline as the GC-storm re-measure, applied to the
     // whole run. Proceed regardless after the budget: a number with a
     // recorded load beats no number.
-    val ambientSamples = scala.collection.mutable.ArrayBuffer(sampleLoad())
+    val ambientSamples = scala.collection.mutable.ArrayBuffer(loadAvg)
     while (ambientSamples.last > 8.0 && ambientSamples.size <= 4) {
       Thread.sleep(45000)
-      ambientSamples += sampleLoad()
+      ambientSamples += loadAvg
     }
     val ambientLoad = ambientSamples.last
 
@@ -143,7 +151,8 @@ object Bench {
     val streamResults = streamSel.map { case (name, fn) => name -> bestOf(run(fn)) }
     val results = batchResults ++ streamResults
     val failures = warmFailures.map { case (n, t) => s"$n (warm-up)" -> t } ++
-      results.filterNot(_._2.ok)
+      results.filterNot(_._2.ok) ++
+      hitsRes.toSeq.flatMap(_.failed).map { case (n, t) => s"hits $n" -> t }
     failures.foreach { case (n, t) => System.err.println(s"[bench] $n failed: ${t.error.get}") }
     // Failed queries carry no timing: `queries` and both sums cover the
     // queries that ran, `status` names every query's outcome.
@@ -159,11 +168,10 @@ object Bench {
     // (observed: same code, 8.3s vs 14.4s hits suite) — the reader can
     // discount a run that raced other work. ambient = sampled BEFORE the
     // bench ran anything (co-tenant interference); end = after (includes
-    // this JVM's own 32 worker threads).
-    val loadAvg = java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean.getSystemLoadAverage
+    // this JVM's own worker threads).
+    val loadEnd = loadAvg
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","stream_gate_sec":$streamTotal,"queries":$qs,"status":$statuses,"failed":$failedNames,"sf":"$sfDir","load_avg_ambient":$ambientLoad,"load_avg":$loadAvg$hits}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","stream_gate_sec":$streamTotal,"queries":$qs,"status":$statuses,"failed":$failedNames,"sf":"$sfDir","load_avg_ambient":$ambientLoad,"load_avg":$loadEnd$hits}"""
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("target/BENCH_local.json"), line)
     catch { case _: Throwable => () }
@@ -173,10 +181,10 @@ object Bench {
     // window (judge r10: the full line's head was truncated and the
     // micro-suite totals with it).
     val hitsCompact = hitsRes.map(r =>
-      s""","hits_suite_sec":${r.total},"hits_regime":"${if (r.cold) "cold" else "cached"}"""")
+      s""","hits_suite_sec":${r.total},"hits_regime":"${r.regime}"""")
       .getOrElse("")
     val totalsLine =
-      s"""{"metric":"totals","micro_suite_sec":$total,"stream_gate_sec":$streamTotal,"n_queries":${results.size},"n_failed":${failures.size}$hitsCompact,"sf":"$sfDir","load_avg_ambient":$ambientLoad,"ambient_samples":${ambientSamples.mkString("[", ",", "]")},"load_avg":$loadAvg}"""
+      s"""{"metric":"totals","micro_suite_sec":$total,"stream_gate_sec":$streamTotal,"n_queries":${results.size},"n_failed":${failures.size}$hitsCompact,"sf":"$sfDir","load_avg_ambient":$ambientLoad,"ambient_samples":${ambientSamples.mkString("[", ",", "]")},"load_avg":$loadEnd}"""
     println(totalsLine)
     // Belt-and-braces for the driver's parser (judge r16 Wrong #2:
     // sbt's "[info] " log decoration kept these lines unparsable since

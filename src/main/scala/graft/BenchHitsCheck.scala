@@ -9,7 +9,8 @@ import org.apache.spark.sql.SparkSession
   * suite's own LIMIT-10 queries tie heavily at 10 M rows (near-unique
   * key tuples, all c=1), so the probes wrap the same GROUP BY shapes in
   * deterministic whole-result checksums instead of comparing an
-  * arbitrary tie cut. Exits non-zero on any mismatch.
+  * arbitrary tie cut. The table is set up exactly as the suite times it
+  * (BenchHits.prepare, 10 M rows). Exits non-zero on any mismatch.
   * Usage: runMain graft.BenchHitsCheck
   */
 object BenchHitsCheck {
@@ -84,29 +85,15 @@ object BenchHitsCheck {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Tables.tune(spark)
-
-    BenchHits.generate(spark)
-    val hits = spark.read.parquet(BenchHits.DefaultPath)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    hits.count()
-    hits.createOrReplaceTempView("hits")
-    graft.plans.TableStats.analyze(hits)
+    val spark = Bench.session()
+    val scale = BenchHits.Default
+    val (hits, _) = BenchHits.prepare(spark, scale)
 
     // pass 1: raw (no projections)
     val raw = probes.map { case (n, q) => n -> checksum(spark, q) }.toMap
 
     // pass 2: the full BenchHits projection tier
-    BenchHits.registerProjections(spark, hits, BenchHits.HitsRows,
-      BenchHits.DefaultPath)
+    BenchHits.registerProjections(spark, hits, scale.rows, scale.path)
     var failed = 0
     probes.foreach { case (n, q) =>
       val routedPlan =

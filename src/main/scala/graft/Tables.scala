@@ -24,11 +24,6 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Tables small enough to broadcast at ANY scale factor (dimension
-    * tables in the reference's star schema — daisy models these as
-    * in-memory Dictionaries, `src/Dictionaries/`). */
-  val broadcastable: Set[String] = Set("region", "nation", "supplier")
-
   /** Load a test table. Every table but `events` is read with its schema
     * supplied (`spark.read.schema(s).parquet`), so building the DataFrame
     * launches no Spark job: an unschema'd parquet read runs a

@@ -26,19 +26,6 @@ object TextAnalysis {
   def markerHits(toks: Column, words: Seq[String]): Column =
     size(filter(toks, x => x.isin(words.map(w => lit(w)): _*)))
 
-  /** argmax language by marker hits; "und" when nothing matched. Ties
-    * break by language code order (deterministic). Takes a BOUND token
-    * column (`withColumn("toks", tokens(text))` first) so the caller pays
-    * one tokenization, not one per language — interpreted HOF lambdas
-    * have no CSE (see Dedup.shinglesFromToks). */
-  def langIdFromToks(toks: Column): Column = {
-    val scored = langMarkers.toSeq.sortBy(_._1).map { case (lang, words) =>
-      struct(markerHits(toks, words).as("hits"), lit(lang).as("lang"))
-    }
-    val best = greatest(scored: _*) // struct compare: hits first, then lang
-    when(best.getField("hits") > 0, best.getField("lang")).otherwise(lit("und"))
-  }
-
   /** Whitespace token count. */
   def tokenCount(text: Column): Column = size(tokens(text)).cast("long")
 

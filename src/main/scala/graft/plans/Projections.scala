@@ -903,12 +903,6 @@ object Projections {
   private[graft] def usesAggProjection(df: DataFrame): Boolean =
     uses(df)(_.isInstanceOf[AggStateProj])
 
-  /** Debug hook: the registered aggregate-state DataFrames. */
-  private[graft] def aggStateDfs: Seq[(DataFrame, LogicalPlan)] =
-    registry.asScala.toSeq.collect {
-      case p: AggStateProj => (p.projDf, p.projPlan)
-    }
-
   /** Number of registered projections (spec hook). */
   private[graft] def registeredCount: Int = registry.size()
 

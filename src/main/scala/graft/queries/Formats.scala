@@ -338,6 +338,16 @@ object Formats extends QueryModule {
     // embedded Derby database — the same code path talks to any
     // JDBC-accessible store by swapping the URL.
     "q_jdbc_roundtrip" -> ((s, dir) => {
+      // Derby writes derby.log into its system home, the working
+      // directory by default. Unless the caller placed either, the log
+      // goes under the scratch root with the database; Derby reads this
+      // when its engine boots, at the first connection.
+      if (System.getProperty("derby.system.home") == null &&
+          System.getProperty("derby.stream.error.file") == null) {
+        new java.io.File(graft.Tables.scratchRoot).mkdirs()
+        System.setProperty("derby.stream.error.file",
+          new java.io.File(graft.Tables.scratchRoot, "derby.log").getPath)
+      }
       val url = s"jdbc:derby:${scratch(dir)}/derby_db;create=true"
       val props = new java.util.Properties()
       props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")

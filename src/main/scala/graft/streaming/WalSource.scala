@@ -40,10 +40,6 @@ import org.apache.spark.sql.types.StructType
   */
 object WalSource {
 
-  /** One WAL record: the raw payload plus the broker/file append time. */
-  val recordSchema: StructType =
-    StructType.fromDDL("value STRING, _wal_time TIMESTAMP")
-
   /** Kafka transport (production): offsets are the commit SNs; the
     * `startingOffsets` default resumes from the checkpoint exactly like
     * the reference's recovered `last_sn`. */
