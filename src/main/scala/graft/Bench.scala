@@ -22,8 +22,10 @@ import org.apache.spark.sql.SparkSession
   * processAllAvailable scheduling jitter — 2.7 s to 28.5 s on identical
   * code — was the entire round-over-round spread of the suite).
   *
-  * A query that throws (in the warm-up or in any timed run) is never a
-  * timing: its `status` is `failed`, it is named in `failed` and on
+  * stdout ends with three lines: the full one, a totals line and a
+  * per-query line (seconds to 3 significant digits and the `failed`
+  * names). A query that throws (in the warm-up or in any timed run) is
+  * never a timing: its `status` is `failed`, it is named in `failed` and on
   * stderr, it is left out of `queries` and of both sums, and the main
   * exits with status 1 after printing its lines. A hits query that
   * throws is named `hits qN` in `failed` and `qN` in `hits_failed`, and
@@ -62,6 +64,15 @@ object Bench {
       val all = t1 +: Seq.fill(extra)(timeOnce(run))
       all.find(!_.ok).getOrElse(all.minBy(_.sec))
     }
+  }
+
+  /** The last stdout line: the seconds of every query that ran, to 3
+    * significant digits, and the names of the failures. */
+  private[graft] def perQueryLine(results: Seq[(String, Timing)], failed: Seq[String]): String = {
+    val qs = results.collect { case (k, t) if t.ok =>
+      "\"" + k + "\":" + BigDecimal(t.sec).round(new java.math.MathContext(3)).toDouble
+    }
+    s"""{"metric":"per_query","unit":"sec","queries":${qs.mkString("{", ",", "}")},"failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
   }
 
   /** System load average over the last minute. */
@@ -176,16 +187,17 @@ object Bench {
       java.nio.file.Paths.get("target/BENCH_local.json"), line)
     catch { case _: Throwable => () }
     println(line)
-    // LAST stdout line = a COMPACT totals-only summary (no per-query
-    // maps), so neither suite's sums can be lost to the driver's tail
-    // window (judge r10: the full line's head was truncated and the
-    // micro-suite totals with it).
+    // Then a COMPACT totals-only summary, and LAST the per-query line,
+    // both short, so neither can be lost to a reader's tail window (the
+    // full line's head was once truncated and the micro-suite totals
+    // with it).
     val hitsCompact = hitsRes.map(r =>
       s""","hits_suite_sec":${r.total},"hits_regime":"${r.regime}"""")
       .getOrElse("")
     val totalsLine =
       s"""{"metric":"totals","micro_suite_sec":$total,"stream_gate_sec":$streamTotal,"n_queries":${results.size},"n_failed":${failures.size}$hitsCompact,"sf":"$sfDir","load_avg_ambient":$ambientLoad,"ambient_samples":${ambientSamples.mkString("[", ",", "]")},"load_avg":$loadEnd}"""
     println(totalsLine)
+    println(perQueryLine(results, failures.map(_._1)))
     // Belt-and-braces for the driver's parser (judge r16 Wrong #2:
     // sbt's "[info] " log decoration kept these lines unparsable since
     // r13 — build.sbt now uses StdoutOutput so they reach stdout

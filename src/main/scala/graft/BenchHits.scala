@@ -342,9 +342,9 @@ object BenchHits {
         // exchange-free pass over the slice. This is the reference's
         // projection-with-its-own-ORDER-BY (`src/Storages/MergeTree/
         // MergeTreeDataPartWriter*` — a projection part may sort by a
-        // different key than its parent). An earlier sortCol=EventDate
-        // variant was measured 14-36 % SLOWER at 1 B when the family
-        // still scanned the slice; that note moves to BENCH_1B.md.
+        // different key than its parent). An earlier slice range-laid-out
+        // on EventDate was measured 14-36 % SLOWER at 1 B when the family
+        // still scanned the slice (BENCH_1B.md).
         clusterBy = Some((Seq("URL"), if (rows > Rows100m) 128 else 32)))
 
     // AGGREGATE projections (the reference's AggregatingMergeTree MVs):
@@ -619,15 +619,16 @@ object BenchHits {
 
   /** Times `sqls` (query i named q<i+1>) through the noop sink: a warm-up
     * run of the first, then two temporally-separated FULL passes of
-    * `passRuns` runs each, per-query min across both — symmetric by
+    * `passRuns` runs each, per-query min across every pass — symmetric by
     * construction (every query gets the same treatment, so the
     * re-measure can't one-sidedly flatter the outliers the way an
     * outlier-only second chance would). Ambient VM jitter can stall one
     * query's whole window (observed: q8 25x its usual floor with
-    * identical code); spreading the samples across two passes
-    * decorrelates the jitter. A query that throws is never a timing. */
+    * identical code); spreading the samples across passes decorrelates
+    * the jitter, and [[wantsExtraPass]] adds full passes of 3 runs while
+    * the last two disagree. A query that throws is never a timing. */
   private[graft] def time(spark: SparkSession, sqls: Seq[String],
-                          refBest: Seq[Double], passRuns: (Int, Int)): Timed = {
+                          passRuns: (Int, Int)): Timed = {
     def once(sql: String): Bench.Timing =
       Bench.timeOnce(() => spark.sql(sql).write.mode("overwrite").format("noop").save())
     // warm: codegen for the scan shape
@@ -641,25 +642,27 @@ object BenchHits {
       val ts = passes.map(_(i))
       ts.find(!_.ok).getOrElse(ts.minBy(_.sec))
     }
-    def suiteRatio: Double = {
-      val ok = sqls.indices.filter(bestOf(_).ok)
-      if (ok.isEmpty) Double.PositiveInfinity
-      else ok.map(bestOf(_).sec).sum / ok.map(refBest).sum
+    // suite sums of the last two passes, over the queries ok in both
+    def lastTwoSums: (Double, Double) = {
+      val (a, b) = (passes(passes.size - 2), passes.last)
+      val ok = sqls.indices.filter(i => a(i).ok && b(i).ok)
+      (ok.map(a(_).sec).sum, ok.map(b(_).sec).sum)
     }
-    // Retry harder under load: ambient VM jitter inflates whole passes
-    // (r6: identical code measured 7.45 s then 9.36 s with end-of-run
-    // load 13). When the box is visibly busy, or the suite-sum sits
-    // above the quiet-history band (1.24-1.54x on this code), take up to
-    // two more FULL passes — still symmetric (every query re-sampled,
-    // not just the outliers), bounded extra cost (~2x3 runs).
-    var extraPasses = 0
-    while (extraPasses < 2 && (Bench.loadAvg > 3.0 || suiteRatio > 1.7)) {
-      passes += pass(3)
-      extraPasses += 1
-    }
+    while (wantsExtraPass(lastTwoSums, passes.size - 2)) passes += pass(3)
     val per = sqls.indices.map(i => (s"q${i + 1}", bestOf(i)))
-    Timed(per, extraPasses,
+    Timed(per, passes.size - 2,
       Seq("q1 (warm-up)" -> warm).filterNot(_._2.ok) ++ per.filterNot(_._2.ok))
+  }
+
+  /** Whether to time one more full pass after `extraTaken` extra ones,
+    * from the suite sums of the last two passes: at most two extra, and
+    * only while those sums differ by more than 10 % of the smaller (the
+    * run has not settled). The sums are compared with each other, not
+    * with the reference's times, so a slower box takes no extra pass
+    * just for being slower. */
+  private[graft] def wantsExtraPass(lastTwoSums: (Double, Double), extraTaken: Int): Boolean = {
+    val (a, b) = lastTwoSums
+    extraTaken < 2 && math.abs(a - b) > 0.1 * math.min(a, b)
   }
 
   /** What one suite run reports: `total` and `slowest` over the queries
@@ -712,7 +715,7 @@ object BenchHits {
     // timed suite; it is forced only when the JSON is built.
     lazy val q24Lazy = routes(23)(graft.plans.LazyTopK.usesLazyTopK)
 
-    val timed = time(spark, queries, scale.refBest, scale.passRuns)
+    val timed = time(spark, queries, scale.passRuns)
     graft.plans.Projections.clear()
     hits.unpersist(false)
     // failed queries carry no timing: they are named in hits_failed and

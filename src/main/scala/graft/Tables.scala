@@ -24,8 +24,8 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Load a test table. Every table but `events` is read with its schema
-    * supplied (`spark.read.schema(s).parquet`), so building the DataFrame
+  /** Load a test table, read with its schema supplied
+    * (`spark.read.schema(s).parquet`), so building the DataFrame
     * launches no Spark job: an unschema'd parquet read runs a
     * schema-inference job (~100 ms on a local session) on every call. The
     * schema is inferred on the first load of a table in a session and
@@ -33,31 +33,20 @@ object Tables {
     * confs are unchanged (see [[schemaOf]]); only the schema is kept,
     * never data or plans.
     *
-    * `events.ts` has shipped in two physical layouts
-    * across test-data generations: parquet TIMESTAMP(NANOS) — which
-    * Spark's vectorized reader rejects, so it arrives as raw long nanos
-    * under spark.sql.legacy.parquet.nanosAsLong and is truncated to
-    * micros — and plain TIMESTAMP(MICROS) without a UTC adjustment, which
-    * Spark reads as TIMESTAMP_NTZ. Both normalize to a session-local
-    * TIMESTAMP under the UTC session timezone, matching how DuckDB treats
-    * the same column, so oracle comparisons line up either way.
-    *
-    * The nanos fallback forces the NON-vectorized parquet reader, which
-    * made every events-table query pay a pathological row-by-row scan
-    * (~10 s at sf0.1). The converted frame is persisted once per
-    * (session, dir) and reused by all queries — equivalent to the one-time
-    * nanos→micros rewrite a real deployment would do at ingest.
+    * `events.ts` is parquet TIMESTAMP(MICROS) without a UTC adjustment,
+    * which Spark reads as TIMESTAMP_NTZ; it is cast to the session-local
+    * TIMESTAMP, matching how DuckDB treats the same column under the UTC
+    * session timezone. A TIMESTAMP(NANOS) column fails at load with
+    * Spark's own error.
     */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    if (name == "events") cachedEvents(spark, sfDir)
-    else {
-      val path = s"$sfDir/$name.parquet"
-      spark.read.schema(schemaOf(spark, path)).parquet(path)
-    }
+    val path = s"$sfDir/$name.parquet"
+    val df = spark.read.schema(schemaOf(spark, path)).parquet(path)
+    if (name == "events") df.withColumn("ts", col("ts").cast("timestamp")) else df
   }
 
-  /** Resolved table schemas, weak-keyed by session like [[eventsCache]].
-    * Per session: path -> (resolution key, schema). */
+  /** Resolved table schemas, weak-keyed by session so a stopped session
+    * never pins its entries. Per session: path -> (resolution key, schema). */
   private val schemas = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession,
       java.util.concurrent.ConcurrentHashMap[String, (String, StructType)]]())
@@ -66,7 +55,7 @@ object Tables {
     * Inferred once per (session, path, resolution key) and reused after.
     * The key is the fingerprint of the path's file listing (a rewritten
     * table has new lengths or mtimes, so it re-resolves) plus every
-    * parquet conf set on the session (`nanosAsLong`, `binaryAsString`,
+    * parquet conf set on the session (`binaryAsString`,
     * `inferTimestampNTZ`, ... change the inferred types). Listing a
     * local or HDFS directory is a driver-side metadata call, not a job. */
   private def schemaOf(spark: SparkSession, path: String): StructType = {
@@ -106,44 +95,6 @@ object Tables {
     md.digest().map("%02x".format(_)).mkString
   }
 
-  /** Events cache, weak-keyed by session so a stopped/GC'd session never
-    * pins its cached blocks (advisor r2: the identityHashCode key leaked
-    * entries for the JVM lifetime and could collide after GC). Bounded per
-    * session: evicts+unpersists the oldest dir when over capacity. */
-  private val eventsCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.LinkedHashMap[String, DataFrame]]())
-
-  private def cachedEvents(spark: SparkSession, sfDir: String): DataFrame =
-    eventsCache.synchronized {
-      val perSession = eventsCache.computeIfAbsent(spark, _ =>
-        new java.util.LinkedHashMap[String, DataFrame](8, 0.75f, true) {
-          override def removeEldestEntry(
-              e: java.util.Map.Entry[String, DataFrame]): Boolean = {
-            val evict = size() > 4
-            if (evict) e.getValue.unpersist(false)
-            evict
-          }
-        })
-      perSession.computeIfAbsent(sfDir, _ => {
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        // The non-vectorized nanos read arrives as ONE partition (single
-        // small file, no row-group splits) — every downstream projection
-        // would run single-threaded (judge r3: q_func_json spent 6 s
-        // parsing JSON on one core). Spread the cache across the session's
-        // cores once at build; at 100 TB real file splits make this moot.
-        val raw = spark.read.parquet(s"$sfDir/events.parquet")
-        val ts = raw.schema("ts").dataType match {
-          case org.apache.spark.sql.types.LongType =>
-            expr("timestamp_micros(ts div 1000)") // legacy nanos-as-long
-          case _ => col("ts").cast("timestamp")   // NTZ micros (or already LTZ)
-        }
-        raw.withColumn("ts", ts)
-          .repartition(spark.sparkContext.defaultParallelism)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      })
-    }
-
   /** Operator-internal persisted frames (optimizer barriers in Dedup etc.)
     * register here; Bench/Verify release them after each query so a long
     * multi-query session doesn't accumulate executor memory (round-2
@@ -153,8 +104,7 @@ object Tables {
 
   def registerScratch(df: DataFrame): DataFrame = { scratch.add(df); df }
 
-  /** Unpersist every registered scratch frame (non-blocking). The events
-    * cache is NOT touched — it is a table, not per-query scratch. */
+  /** Unpersist every registered scratch frame (non-blocking). */
   def releaseScratch(): Unit = {
     var df = scratch.poll()
     while (df != null) { df.unpersist(false); df = scratch.poll() }
@@ -249,11 +199,10 @@ object Tables {
     // the session's full shuffle width, 32 tasks per tiny cache build
     // (guide §2.2: partitions track data). Content is unchanged; only
     // the cached frame's partition count adapts. Explicit
-    // repartition(n) frames (the events cache) keep their width — AQE
-    // never overrides user-specified numPartitions.
+    // repartition(n) frames keep their width — AQE never overrides
+    // user-specified numPartitions.
     spark.conf.set(
       "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     graft.functions.GraftScalar.register(spark)
     installRules(spark)
   }

@@ -165,7 +165,6 @@ object Projections {
       filterValueOrig: Any,               // as passed — for rebuilds
       basePaths: Set[String],
       diskDir: Option[String],            // parquet-materialized when set
-      sortCol: Option[String],            // range-layout column of the copy
       clusterBy: Option[(Seq[String], Int)] = None) // hash layout (cols, n)
       extends Proj {
     def rank: Int = 1
@@ -183,7 +182,7 @@ object Projections {
 
     def rebuild(): Proj = {
       val (plan, df) = buildFiltered(base, filterColOrdered, filterValueOrig,
-        columnsOrdered, diskDir, sortCol, clusterBy, reuseExisting = false)
+        columnsOrdered, diskDir, clusterBy, reuseExisting = false)
       copy(projPlan = plan, projDf = df)
     }
 
@@ -538,13 +537,12 @@ object Projections {
                                filterCol: String, filterValue: Any,
                                columns: Seq[String],
                                diskDir: Option[String] = None,
-                               sortCol: Option[String] = None,
                                clusterBy: Option[(Seq[String], Int)] = None)
       : Boolean =
     if (base.storageLevel.useMemory) false
     else {
       registerFiltered(spark, base, filterCol, filterValue, columns,
-        diskDir, sortCol, clusterBy)
+        diskDir, clusterBy)
       true
     }
 
@@ -559,24 +557,11 @@ object Projections {
     * part. That is the right storage at scales where the selected slice
     * itself exceeds executor memory (a 15 % slice of 1 B rows does):
     * routed queries then scan a selectivity-sized columnar file instead
-    * of the full base, which is the whole PK-seek win.
-    *
-    * `sortCol = Some(c)` lays the disk copy out range-partitioned and
-    * sorted on `c` — the SECOND half of the reference's primary key.
-    * A (CounterID, EventDate) MergeTree key does two prunes: the seek
-    * to CounterID=62 (the filter slice) and the range scan of the
-    * matching EventDate window (the sort order). With the copy
-    * range-laid-out on EventDate, parquet min/max footer stats skip
-    * whole files and row groups outside a queried date window, so a
-    * one-month query reads ~1/36 of the slice instead of all of it.
-    * Costs one shuffle of the (selectivity-sized) slice at build time —
-    * the same sort the reference pays in its merge — and nothing at
-    * query time. */
+    * of the full base, which is the whole PK-seek win. */
   def registerFiltered(spark: SparkSession, base: DataFrame,
                        filterCol: String, filterValue: Any,
                        columns: Seq[String],
                        diskDir: Option[String] = None,
-                       sortCol: Option[String] = None,
                        clusterBy: Option[(Seq[String], Int)] = None)
       : DataFrame =
     lock.synchronized {
@@ -587,8 +572,6 @@ object Projections {
       require(clusterBy.forall { case (cCols, n) =>
         n > 0 && cCols.nonEmpty && cCols.forall(c => carried(c.toLowerCase))
       }, "registerFiltered: clusterBy columns must be carried, count > 0")
-      require(clusterBy.isEmpty || sortCol.isEmpty,
-        "registerFiltered: clusterBy and sortCol are alternative layouts")
       // Absolutize the disk dir ONCE so the dedupe lookup and the
       // conflict guard below compare canonical paths — two spellings of
       // the same directory (relative vs absolute) must collide, not
@@ -625,21 +608,20 @@ object Projections {
         case p: FilteredProj if p.baseLeafCanonical == baseLeaf.canonicalized &&
             p.filterCol == fcLower && p.filterLit.semanticEquals(flit) &&
             p.carried == carried && p.diskDir == diskDirAbs &&
-            p.sortCol == sortCol && p.clusterBy == clusterBy => p.projDf
+            p.clusterBy == clusterBy => p.projDf
       }.foreach(return _)
       diskDirAbs.foreach(requireFreeDir("registerFiltered", _))
       val (projPlan, proj) =
         buildFiltered(base, filterCol, filterValue, columns, diskDirAbs,
-          sortCol, clusterBy)
+          clusterBy)
       add(spark, FilteredProj(baseLeaf.canonicalized, fcLower, flit, carried,
         projPlan, proj, base, columns, filterCol, filterValue,
-        rootPathsOf(base), diskDirAbs, sortCol, clusterBy))
+        rootPathsOf(base), diskDirAbs, clusterBy))
     }
 
   private def buildFiltered(base: DataFrame, filterCol: String,
                             filterValue: Any, columns: Seq[String],
                             diskDir: Option[String],
-                            sortCol: Option[String] = None,
                             clusterBy: Option[(Seq[String], Int)] = None,
                             reuseExisting: Boolean = true)
       : (LogicalPlan, DataFrame) = {
@@ -686,16 +668,10 @@ object Projections {
         // serve the other definition's rows under this one's schema
         val baseFp = baseFingerprint(base) +
           s"|filter=${filterCol.toLowerCase}=${String.valueOf(filterValue)}" +
-          s"|cols=${columns.map(_.toLowerCase).mkString(",")}" +
-          sortCol.map("|sort=" + _).getOrElse("")
+          s"|cols=${columns.map(_.toLowerCase).mkString(",")}"
         val complete = reuseExisting && reusableMaterialization(fs, dir, baseFp)
         if (!complete) {
-          val laidOut = sortCol match {
-            case Some(sc) =>
-              sel.repartitionByRange(col(sc)).sortWithinPartitions(col(sc))
-            case None => sel
-          }
-          laidOut.write.mode("overwrite").parquet(dir)
+          sel.write.mode("overwrite").parquet(dir)
           writeFingerprint(fs, dir, baseFp)
         }
         val read = base.sparkSession.read.parquet(dir)

@@ -17,8 +17,9 @@ import org.apache.spark.sql.functions._
   * part; Spark's scan unit is the FILE, so the sidecar holds one bloom
   * per (file, column), built with Spark's own BloomFilterAggregate
   * (partial-aggregated map-side: the shuffle moves one bloom per file
-  * per task, never the gram stream). Consulting it is a planning-time
-  * read of a KB-per-file table; the pruned file list feeds
+  * per task, never the gram stream). Consulting it is one planning-time
+  * Spark job that probes the KB-per-file blooms where they are read and
+  * returns one (file, passes) pair per file; the pruned file list feeds
   * `spark.read.parquet(files:_*)` — files the bloom disproves are never
   * opened. Blooms have no false negatives, so results are byte-identical
   * to the full scan; false positives only cost extra files read.
@@ -99,9 +100,6 @@ object TokenBloomIndex {
   def requiredGrams(pattern: String, n: Int): Seq[String] =
     literalRuns(pattern).flatMap(_.sliding(n).filter(_.length == n)).distinct
 
-  /** Files that may contain a match for `column LIKE pattern`, plus the
-    * table's total file count. The driver-side file list is planning
-    * metadata (same cardinality class as partition pruning results). */
   private def pathKey(s: String): String =
     new org.apache.hadoop.fs.Path(s).toUri.getPath
 
@@ -113,78 +111,52 @@ object TokenBloomIndex {
         g, org.apache.spark.sql.types.StringType)), 42L)
       .eval(null).asInstanceOf[Long]
 
+  /** Files that may contain a match for `column LIKE pattern`, plus the
+    * table's total file count. The driver-side file list is planning
+    * metadata (same cardinality class as partition pruning results). */
   def prunedFiles(spark: SparkSession, tablePath: String, column: String,
                   pattern: String): (Seq[String], Int) =
     prunedFilesForGrams(spark, tablePath, column,
       n => requiredGrams(pattern, n))
 
-  /** Sidecar bytes above which membership testing moves off the driver.
-    * Below it, collecting the blooms (KB per file — the same cardinality
-    * class as the partition listing) and probing on the driver is one
-    * local pass; above it — ~10^5+ files, where the blooms alone exceed
-    * driver-heap comfort — the probe runs executor-side (one task per
-    * sidecar partition, shipping only the gram hashes) and the driver
-    * collects just file NAMES. Overridable for tests / tight drivers. */
-  def driverMembershipMaxBytes(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.tokenbloom.driverMaxBytes")
-      .map(_.toLong).getOrElse(256L << 20)
-
   /** Files that may contain a value carrying every gram of
-    * `gramsOf(n)`, plus the table's total file count. `gramsOf` sees
-    * the sidecar's gram width `n`; returning empty declares the
-    * predicate unprunable (all files kept). */
+    * `gramsOf(n)`, plus the table's total file count. Each sidecar row
+    * is tested against `gramsOf(n)` for its own gram width `n`; a row
+    * whose `n` yields no grams cannot prune, so its file passes. The
+    * probe runs on the executors in one Spark job: the blooms never
+    * reach the driver, only one (file, passes) pair per sidecar row
+    * (O(#files) strings, the cardinality of the partition listing). */
   def prunedFilesForGrams(spark: SparkSession, tablePath: String,
                           column: String,
                           gramsOf: Int => Seq[String]): (Seq[String], Int) = {
-    val tableFiles = spark.read.parquet(tablePath).inputFiles.toSeq
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
+    val tablePathQ = new org.apache.hadoop.fs.Path(tablePath)
+    // the listing a parquet read would make, without its schema-inference job
+    val tableFiles = new org.apache.spark.sql.execution.datasources.InMemoryFileIndex(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      Seq(tablePathQ.getFileSystem(hadoopConf).makeQualified(tablePathQ)),
+      Map.empty, None).inputFiles.toSeq
     val sidePath = new org.apache.hadoop.fs.Path(sidecarPath(tablePath))
-    val fs = sidePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val sideBytes =
-      try fs.getContentSummary(sidePath).getLength
-      catch { case _: java.io.FileNotFoundException =>
-        return (tableFiles, tableFiles.size) }
-    val sideDf = spark.read.parquet(sidecarPath(tablePath))
+    if (!sidePath.getFileSystem(hadoopConf).exists(sidePath))
+      return (tableFiles, tableFiles.size)
+    import org.apache.spark.sql.Encoders
+    val probes = spark.read.schema("file STRING, column STRING, n INT, bloom BINARY")
+      .parquet(sidePath.toString)
       .filter(col("column") === column)
       .select(col("file"), col("n"), col("bloom"))
-    val (passing, covered): (Set[String], Set[String]) =
-      if (sideBytes <= driverMembershipMaxBytes(spark)) {
-        // small sidecar: one driver-local pass over the collected blooms
-        val side = sideDf.collect()
-        if (side.isEmpty) return (tableFiles, tableFiles.size)
-        val grams = gramsOf(side.map(_.getInt(1)).max)
-        if (grams.isEmpty) return (tableFiles, tableFiles.size)
-        val hashes = grams.map(gramHash)
-        (side.iterator.filter { r =>
-          val bf = org.apache.spark.util.sketch.BloomFilter.readFrom(
-            new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](2)))
-          hashes.forall(bf.mightContainLong)
-        }.map(r => pathKey(r.getString(0))).toSet,
-          side.iterator.map(r => pathKey(r.getString(0))).toSet)
-      } else {
-        // large sidecar: probe executor-side; only file names reach the
-        // driver (O(#files) strings — already held for planning anyway)
-        val nRow = sideDf.agg(max(col("n"))).head()
-        if (nRow.isNullAt(0)) return (tableFiles, tableFiles.size)
-        val grams = gramsOf(nRow.getInt(0))
-        if (grams.isEmpty) return (tableFiles, tableFiles.size)
-        val hashes = grams.map(gramHash).toArray
-        val enc = org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.STRING,
-          org.apache.spark.sql.Encoders.BINARY)
-        val probes = sideDf.select(col("file"), col("bloom")).as(enc)
-          .mapPartitions { it =>
-            it.map { case (f, b) =>
-              val bf = org.apache.spark.util.sketch.BloomFilter.readFrom(
-                new java.io.ByteArrayInputStream(b))
-              (f, hashes.forall(bf.mightContainLong))
-            }
-          }(org.apache.spark.sql.Encoders.tuple(
-            org.apache.spark.sql.Encoders.STRING,
-            org.apache.spark.sql.Encoders.scalaBoolean))
-          .collect()
-        (probes.iterator.collect { case (f, true) => pathKey(f) }.toSet,
-          probes.iterator.map(p => pathKey(p._1)).toSet)
-      }
+      .as(Encoders.tuple(Encoders.STRING, Encoders.scalaInt, Encoders.BINARY))
+      .mapPartitions { it =>
+        val hashesOf = scala.collection.mutable.HashMap.empty[Int, Seq[Long]]
+        it.map { case (f, n, b) =>
+          val hashes = hashesOf.getOrElseUpdate(n, gramsOf(n).map(gramHash))
+          lazy val bf = org.apache.spark.util.sketch.BloomFilter.readFrom(
+            new java.io.ByteArrayInputStream(b))
+          (f, hashes.forall(bf.mightContainLong))
+        }
+      }(Encoders.tuple(Encoders.STRING, Encoders.scalaBoolean))
+      .collect()
+    val passing = probes.iterator.collect { case (f, true) => pathKey(f) }.toSet
+    val covered = probes.iterator.map(p => pathKey(p._1)).toSet
     // a file the sidecar doesn't cover (added after build) is NEVER
     // pruned — the index is an accelerator, not a correctness gate
     val kept = tableFiles.filter(f =>

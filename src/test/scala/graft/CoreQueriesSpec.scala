@@ -9,6 +9,14 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites. */
 object TestSpark {
+  /** Spark's warehouse (where catalog tables are written): a directory of
+    * this JVM, deleted at exit, never the working directory. */
+  lazy val warehouse: java.io.File = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-warehouse").toFile
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(dir))
+    dir
+  }
+
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
@@ -16,6 +24,7 @@ object TestSpark {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.warehouse.dir", warehouse.getPath)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     Tables.tune(s)

@@ -185,61 +185,6 @@ class FilteredProjectionSpec extends AnyFunSuite with TempDirs {
     }
   }
 
-  test("sortCol lays the disk slice out in disjoint ranges and routed window queries stay exact") {
-    // The reference's (CounterID, EventDate) key prunes twice: the seek
-    // to the filter value, then the range scan of the date window. The
-    // disk slice with sortCol must come out range-partitioned — per-file
-    // min/max ranges non-overlapping — so parquet footer stats can skip
-    // files outside a queried window; and the routed window aggregate
-    // must still be exact.
-    val dir = tmp("filtered_sort_") + System.nanoTime()
-    val slice = dir + "_ctr62"
-    spark.range(200000).select(
-      when(col("id") % 7 === 0, lit(62)).otherwise(col("id") % 500)
-        .cast("int").as("ctr"),
-      (col("id") % 365).cast("int").as("d"),   // stand-in date ordinal
-      col("id").as("v"))
-      .write.parquet(dir)
-    val coldBase = spark.read.parquet(dir)
-    def q: DataFrame = coldBase
-      .filter(col("ctr") === 62 && col("d") >= 180 && col("d") <= 210)
-      .groupBy(col("d")).agg(count(lit(1)).as("n"), sum(col("v")).as("sv"))
-    val exact = q.collect().map(_.toString).sorted.toSeq
-    // AQE coalesces this test-sized range shuffle to one partition —
-    // hold it open so the multi-file layout (what a 1 B slice gets
-    // anyway) is observable
-    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
-    val prev = spark.conf.get(coalesce, "true")
-    spark.conf.set(coalesce, "false")
-    try Projections.registerFiltered(spark, coldBase, "ctr", 62,
-      Seq("ctr", "d", "v"), diskDir = Some(slice), sortCol = Some("d"))
-    finally spark.conf.set(coalesce, prev)
-    try {
-      assert(Projections.usesFilteredProjection(q), "did not route")
-      assert(scans(q, slice), "not scanning the slice")
-      assert(q.collect().map(_.toString).sorted.toSeq == exact,
-        "routed window result diverges from the base scan")
-      // disjoint per-file ranges: the layout the footer-stats prune needs
-      val perFile = spark.read.parquet(slice)
-        .groupBy(input_file_name().as("f"))
-        .agg(min(col("d")).as("mn"), max(col("d")).as("mx"))
-        .collect().map(r => (r.getAs[Int]("mn"), r.getAs[Int]("mx")))
-        .sortBy(_._1)
-      assert(perFile.length > 1, "range layout produced a single file")
-      perFile.sliding(2).foreach {
-        case Array((_, mx1), (mn2, _)) =>
-          assert(mx1 <= mn2, s"overlapping file ranges: $mx1 > $mn2")
-        case _ =>
-      }
-    } finally {
-      Projections.clear()
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(dir), true)
-      fs.delete(new org.apache.hadoop.fs.Path(slice), true)
-    }
-  }
-
   test("a wider-typed registration value coerces to the column type and SQL-path queries route") {
     // The first 1 B bench registered CounterID=62 as a Long over an int
     // column: the slice built fine but Literal(62L, Long) never
@@ -368,8 +313,7 @@ class FilteredProjectionSpec extends AnyFunSuite with TempDirs {
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       Projections.clear()
-      // clean the base parquet and the slice dir (plus its fingerprint),
-      // mirroring the sortCol disk test
+      // clean the base parquet and the slice dir (plus its fingerprint)
       val fs = new org.apache.hadoop.fs.Path(dir0)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(dir0), true)

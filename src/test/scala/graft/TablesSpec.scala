@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.TimestampType
 import org.scalatest.funsuite.AnyFunSuite
 
 class TablesSpec extends AnyFunSuite with TempDirs {
@@ -28,18 +31,43 @@ class TablesSpec extends AnyFunSuite with TempDirs {
   }
 
   test("a typed load returns the rows and schema of an inferred read") {
-    Tables.all.filterNot(_ == "events").foreach { name =>
+    Tables.all.foreach { name =>
       val typed = Tables.load(spark, sf, name)
-      val inferred = spark.read.parquet(s"$sf/$name.parquet")
+      val read = spark.read.parquet(s"$sf/$name.parquet")
+      // events.ts is read as TIMESTAMP_NTZ and loaded as the session-local TIMESTAMP
+      val inferred =
+        if (name == "events") read.withColumn("ts", col("ts").cast("timestamp")) else read
       assert(typed.schema == inferred.schema, name)
       assert(typed.exceptAll(inferred).isEmpty && inferred.exceptAll(typed).isEmpty, name)
     }
+  }
+
+  test("events loads like every other table: no job, no cached copy, a session-local ts") {
+    assert(Tables.load(spark, sf, "events").schema("ts").dataType == TimestampType)
+    assert(jobsIn(Tables.load(spark, sf, "events")) == 0)
+    val plan = Tables.load(spark, sf, "events").queryExecution.optimizedPlan
+    assert(plan.collect { case r: InMemoryRelation => r }.isEmpty, plan)
+  }
+
+  test("Tables.tune sets no legacy parquet conf") {
+    val nanos = "spark.sql.legacy.parquet.nanosAsLong"
+    spark.conf.unset(nanos)
+    Tables.tune(spark)
+    assert(!spark.conf.getAll.contains(nanos))
   }
 
   test("a missing table still fails with Spark's error") {
     val e = intercept[org.apache.spark.sql.AnalysisException](
       Tables.load(spark, tmp("missing"), "t"))
     assert(e.getMessage.contains("PATH_NOT_FOUND"), e.getMessage)
+  }
+
+  test("the specs' warehouse is outside the working directory") {
+    val warehouse = new java.io.File(
+      new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir")).toUri.getPath)
+    assert(warehouse.getCanonicalFile == TestSpark.warehouse.getCanonicalFile)
+    assert(!warehouse.getCanonicalPath.startsWith(
+      new java.io.File(System.getProperty("user.dir")).getCanonicalPath + "/"))
   }
 
   test("the scratch root belongs to this JVM") {

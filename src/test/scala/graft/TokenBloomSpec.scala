@@ -126,22 +126,19 @@ class TokenBloomSpec extends AnyFunSuite with TempDirs {
     }
   }
 
-  test("executor-side membership (sidecar past driverMaxBytes) prunes " +
-      "the identical file set as the driver path") {
+  test("every prune runs one membership job and keeps the files that can match") {
     fixture()
-    val driver = TokenBloomIndex.prunedFiles(spark, dir, "body", "%markerp2%")
-    val none = TokenBloomIndex.prunedFiles(spark, dir, "body", "%markerp9%")
-    val all = TokenBloomIndex.prunedFiles(spark, dir, "body", "%ab%")
-    try {
-      spark.conf.set("spark.graft.tokenbloom.driverMaxBytes", "0")
-      assert(TokenBloomIndex.prunedFiles(spark, dir, "body", "%markerp2%")
-        ._1.sorted == driver._1.sorted)
-      assert(TokenBloomIndex.prunedFiles(spark, dir, "body", "%markerp9%")
-        ._1.sorted == none._1.sorted)
-      // unprunable pattern short-circuits identically (no probe job)
-      assert(TokenBloomIndex.prunedFiles(spark, dir, "body", "%ab%")
-        ._1.sorted == all._1.sorted)
-    } finally spark.conf.unset("spark.graft.tokenbloom.driverMaxBytes")
+    val all = spark.read.parquet(dir).inputFiles.toSeq.sorted
+    def pruned(pattern: String): Seq[String] = {
+      var files = Seq.empty[String]
+      assert(jobsIn {
+        files = TokenBloomIndex.prunedFiles(spark, dir, "body", pattern)._1
+      } == 1, pattern)
+      files.sorted
+    }
+    assert(pruned("%markerp2%") == all.filter(_.contains("part=2")))
+    assert(pruned("%markerp9%").isEmpty)
+    assert(pruned("%ab%") == all) // only sub-n runs: cannot prune
   }
 
   test("char_ngram_hashes equals the substr→distinct→xxhash64 pipeline " +
