@@ -86,7 +86,9 @@ object Bench {
     * /dev/shm exists (the hits suite moves 100-500 MB of shuffle per
     * high-cardinality query) and private to this process, since a
     * sibling JVM exiting deletes a shared local root it created and
-    * with it this run's shuffle files. */
+    * with it this run's shuffle files. Spark's warehouse (the bucketed
+    * tables of q_join_bucketed) goes there too, not into the working
+    * directory. */
   def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors.toString)
@@ -96,6 +98,7 @@ object Bench {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.local.dir", s"${Tables.scratchRoot}/spark-local")
+      .config("spark.sql.warehouse.dir", s"${Tables.scratchRoot}/warehouse")
       // the 100 M and 1 B hits scales ran with this bound
       .config("spark.driver.maxResultSize", "4g")
       .getOrCreate()

@@ -172,14 +172,18 @@ object Tables {
     *     1.2-1.8x/row on hits-shaped strings, BENCH_volnitsky_ab.json)
     *     and Filter AND-chains order cheap-first, both result-identical;
     *   - RouteToProjection, routing to registered projections (returns
-    *     the plan untouched while none is registered). */
+    *     the plan untouched while none is registered);
+    *   - TimeTable.PruneBuckets, `_time_bucket` partition bounds for
+    *     `_time`-bounded reads of bucketed tables (inert on any relation
+    *     not read with the bucket-unit option). */
   def installRules(spark: SparkSession): Unit = {
     val x = spark.experimental
     if (!x.extraStrategies.contains(graft.plans.SkipPartialAgg))
       x.extraStrategies = graft.plans.SkipPartialAgg +: x.extraStrategies
     val rules = Seq(graft.plans.LazyTopK.Rewrite,
       graft.functions.FastSubstring.Rewrite,
-      graft.plans.Projections.RouteToProjection)
+      graft.plans.Projections.RouteToProjection,
+      graft.core.TimeTable.PruneBuckets)
     x.extraOptimizations =
       x.extraOptimizations ++ rules.filterNot(x.extraOptimizations.contains)
   }

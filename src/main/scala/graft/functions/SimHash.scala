@@ -498,6 +498,11 @@ object GraftScalar {
       "repetition_signals", exprs => RepetitionSignals(exprs(0),
         litInts(exprs, 1, "repetition_signals topNs"),
         litInts(exprs, 2, "repetition_signals dupNs")), "built-in")
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      "time_bucket", exprs => {
+        require(exprs.length == 2, "time_bucket(unit, timestamp): wrong arity")
+        graft.core.TimeTable.bucketExpr(exprs(0), exprs(1))
+      }, "built-in")
   }
 
   def siphash64(s0: Column): Column = call_function("siphash64", s0)

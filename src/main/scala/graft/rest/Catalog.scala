@@ -12,8 +12,8 @@ import graft.core.TimeTable
   * typed columns with defaults, `_time` auto-column, ORDER BY +
   * partition-by-granularity). Metadata persists as one JSON file per
   * table under `<root>/_catalog/`; data lives as a time-partitioned
-  * parquet table under `<root>/<table>/` (TimeTable layout, so REST
-  * searches prune partitions).
+  * parquet table under `<root>/<table>/` (TimeTable layout, buckets in
+  * UTC, so `_time`-bounded searches prune partitions).
   */
 final case class ColumnDef(name: String, sqlType: String)
 
@@ -49,6 +49,9 @@ class Catalog(spark: SparkSession, root: String) {
   /** Data root (system.parts walks it for partition/file metadata). */
   def rootDir: String = root
   catalogDir.mkdirs()
+  // the writers' `time_bucket` (TimeTable.bucket), also on a session
+  // that never ran Tables.tune
+  graft.functions.GraftScalar.register(spark)
 
   def list(): Seq[String] =
     Option(catalogDir.listFiles()).getOrElse(Array.empty)
@@ -119,9 +122,13 @@ class Catalog(spark: SparkSession, root: String) {
   def table(name: String): DataFrame =
     read(get(name).getOrElse(sys.error(s"no such table: $name")))
 
+  /** A table with data is read with its granularity unit as the
+    * [[TimeTable.UnitOption]] reader option, so `_time`-bounded queries
+    * over it list only their time buckets ([[TimeTable.PruneBuckets]]). */
   private def read(tdef: TableDef): DataFrame =
     if (hasData(tdef.name))
-      spark.read.schema(tdef.schema.add(TimeTable.BucketCol, StringType))
+      spark.read.option(TimeTable.UnitOption, tdef.timeGranularity.truncUnit)
+        .schema(tdef.schema.add(TimeTable.BucketCol, StringType))
         .parquet(dataPath(tdef.name)).drop(TimeTable.BucketCol)
     else
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], tdef.schema)
@@ -163,8 +170,7 @@ class Catalog(spark: SparkSession, root: String) {
     val withTime = complete.withColumn("_time",
       coalesce(col("_time"), current_timestamp()))
     val bucketed = withTime.withColumn(TimeTable.BucketCol,
-      date_format(date_trunc(tdef.timeGranularity.truncUnit, col("_time")),
-        "yyyy-MM-dd-HH"))
+      TimeTable.bucket(tdef.timeGranularity.truncUnit, col("_time")))
     val arranged =
       if (tdef.orderBy.nonEmpty)
         bucketed.sortWithinPartitions(tdef.orderBy.map(col): _*)
@@ -228,8 +234,7 @@ class Catalog(spark: SparkSession, root: String) {
       .withColumn("source", lit(source))
       .withColumn("host", lit(host))
     raw.withColumn(TimeTable.BucketCol,
-        date_format(date_trunc(tdef.timeGranularity.truncUnit, col("_time")),
-          "yyyy-MM-dd-HH"))
+        TimeTable.bucket(tdef.timeGranularity.truncUnit, col("_time")))
       .sortWithinPartitions(col("sourcetype"))
       .write.mode("append")
       .partitionBy(TimeTable.BucketCol).parquet(dataPath(name))

@@ -36,7 +36,9 @@ import graft.sql.Search
   * a broker this environment doesn't ship. The server remembers the last
   * [[RestServer.MaxPolls]] poll_ids; an older one reads as unknown (404).
   * Query execution, time-bound injection, paging, and the catalog are the
-  * real library code paths.
+  * real library code paths. Connections run with TCP_NODELAY (set by
+  * `object RestServer`), so a response costs its work, not a
+  * delayed-ACK wait.
   */
 class RestServer(spark: SparkSession, catalog: Catalog, port: Int = 0) {
 
@@ -48,7 +50,10 @@ class RestServer(spark: SparkSession, catalog: Catalog, port: Int = 0) {
           e: java.util.Map.Entry[String, java.lang.Long]): Boolean =
         size() > RestServer.MaxPolls
     })
-  private val server = HttpServer.create(new InetSocketAddress(port), 0)
+  private val server = {
+    RestServer.init() // sets NODELAY before the JVM's first HttpServer reads it
+    HttpServer.create(new InetSocketAddress(port), 0)
+  }
 
   /** A new poll_id whose status reports `rows` committed rows. */
   private[graft] def newPoll(rows: Long): String = {
@@ -448,6 +453,19 @@ class RestServer(spark: SparkSession, catalog: Catalog, port: Int = 0) {
 }
 
 object RestServer {
+  // TCP_NODELAY on every accepted connection: the JDK server writes a
+  // response's headers and its body as two writes, and with Nagle on the
+  // second waits for the client's ACK of the first, which a client
+  // delays by up to ~40 ms, so every response paid that wait whatever its
+  // work cost. The JDK reads `sun.net.httpserver.nodelay` once, when the
+  // JVM's first HttpServer is created, so it is set when this object
+  // initializes (see `init`). A constant, not an option.
+  System.setProperty("sun.net.httpserver.nodelay", "true")
+
+  /** Initializes this object; the constructor calls it before it
+    * creates its HttpServer. */
+  private def init(): Unit = ()
+
   /** Server-side clamp for `limit <= 0` ("unbounded") search requests. */
   val MaxResultRows = 1000000
 

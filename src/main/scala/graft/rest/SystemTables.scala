@@ -27,24 +27,32 @@ object SystemTables {
     * persists its log through an internal MergeTree table; here the
     * introspection surface is the contract — entries are session-local
     * and capped, like the metrics snapshot. `cache` is `hit` or `miss`
-    * for a `use_cache` search (graft's QueryCache), null otherwise. */
+    * for a `use_cache` search (graft's QueryCache), null otherwise.
+    * The ring holds the newest [[Cap]] entries under any number of
+    * recording threads: `count` is the number of entries added and not
+    * yet removed, and a record whose add takes it past the cap removes
+    * exactly one, the oldest — O(1), where a deque's `size` walks it. */
   object QueryLog {
     final case class Entry(eventMs: Long, query: String, durationMs: Long,
                            resultRows: Long, status: String, cache: String)
-    private val cap = 1000
+    val Cap = 1000
     private val buf = new java.util.concurrent.ConcurrentLinkedDeque[Entry]
+    private val count = new java.util.concurrent.atomic.AtomicInteger
     def record(query: String, startNs: Long, rows: Long, status: String,
                cache: String = null): Unit = {
       buf.addLast(Entry(System.currentTimeMillis(), query,
         (System.nanoTime() - startNs) / 1000000L, rows, status, cache))
-      while (buf.size > cap) buf.pollFirst()
+      if (count.incrementAndGet() > Cap) {
+        buf.pollFirst()
+        count.decrementAndGet()
+      }
     }
     def entries(): Seq[Entry] = {
       val it = buf.iterator(); val b = Seq.newBuilder[Entry]
       while (it.hasNext) b += it.next()
       b.result()
     }
-    def clear(): Unit = buf.clear()
+    def clear(): Unit = while (buf.pollFirst() != null) count.decrementAndGet()
   }
 
   /** system.query_log as a frame (newest last). */

@@ -19,7 +19,9 @@ object Search {
     * (the AddTimeParamVisitor behavior), apply offset/limit. The injected
     * filter lands OUTSIDE the subquery but Catalyst pushes it through
     * projections/filters down to the scan — same effect as the
-    * reference's AST injection into the innermost SELECT. */
+    * reference's AST injection into the innermost SELECT. Over a REST
+    * catalog table the bounds also select its time buckets
+    * (`TimeTable.PruneBuckets`), so only those directories are listed. */
   def timeBounded(spark: SparkSession, innerSql: String,
                   startIso: String, endIso: String,
                   limit: Int = 100, offset: Int = 0,

@@ -96,6 +96,14 @@ class HarnessSpec extends AnyFunSuite with TempDirs {
     assert(exit != 0)
   }
 
+  test("q_join_bucketed writes its warehouse outside the working directory") {
+    val cwd = tmp("warehouse_cwd")
+    val (exit, _, err) = runMain(cwd, Map.empty, "graft.Verify",
+      TestSpark.sf, tmp("warehouse_out"), "q_join_bucketed")
+    assert(exit == 0, err.takeRight(2000))
+    assert(!new java.io.File(cwd, "spark-warehouse").exists())
+  }
+
   test("q_jdbc_roundtrip leaves no derby.log in the working directory") {
     val cwd = tmp("jdbc_cwd")
     val (exit, _, err) = runMain(cwd, Map.empty, "graft.Verify",

@@ -85,6 +85,131 @@ class PlanSpec extends AnyFunSuite with TempDirs {
     assert(n == expect)
   }
 
+  /** A catalog with one `k bigint, _time timestamp` table per
+    * granularity (H, D, M), each holding rows at, and 1 ms either side
+    * of, hour, day and month edges in UTC and a Kolkata and a Los Angeles
+    * midnight, ingested under the UTC session. */
+  private lazy val pruneCatalog = {
+    val c = new graft.rest.Catalog(spark, tmp("prune_catalog"))
+    val data = PruneInstants.zipWithIndex.map { case (ms, k) => Seq(k.toString, utc(ms)) }
+    Seq("H", "D", "M").foreach { g =>
+      c.create(graft.rest.TableDef(s"prune_$g", Seq(graft.rest.ColumnDef("k", "bigint"),
+        graft.rest.ColumnDef("_time", "timestamp")), Nil, g))
+      c.ingest(s"prune_$g", Seq("k", "_time"), data)
+    }
+    c
+  }
+
+  /** Epoch ms of a UTC wall clock. */
+  private def ms(t: String): Long = java.time.LocalDateTime.parse(t.replace(' ', 'T'))
+    .toInstant(java.time.ZoneOffset.UTC).toEpochMilli
+
+  /** An hour, a day and a month bucket edge, the one of each granularity
+    * that is not an edge of the coarser ones. */
+  private val Edges = Map("H" -> ms("2024-02-01 01:00:00"),
+    "D" -> ms("2024-02-02 00:00:00"), "M" -> ms("2024-03-01 00:00:00"))
+
+  /** Every edge and 1 ms either side, Kolkata's and Los Angeles' March 1
+    * midnights likewise, and twelve days nine days apart. */
+  private val PruneInstants: Seq[Long] =
+    ((Edges.values.toSeq ++ Seq(ms("2024-02-29 18:30:00"), ms("2024-03-01 08:00:00")))
+      .flatMap(e => Seq(e - 1, e, e + 1)) ++
+      (0 until 12).map(i => ms("2023-12-23 01:00:00") + i * 9L * 86400000L)).distinct
+
+  /** `ms` as a UTC timestamp string with milliseconds. */
+  private def utc(ms: Long): String =
+    java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss.SSS")
+      .withZone(java.time.ZoneOffset.UTC).format(java.time.Instant.ofEpochMilli(ms))
+
+  private def withZone[T](zone: String)(body: => T): T = {
+    val was = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", zone)
+    try body finally spark.conf.set("spark.sql.session.timeZone", was)
+  }
+
+  /** Files the scans of `df` read, after running it. */
+  private def filesRead(df: DataFrame): Long = {
+    df.collect()
+    object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    Plans.collect(df.queryExecution.executedPlan) {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s.metrics("numFiles").value
+    }.sum
+  }
+
+  private def parquetFiles(dir: String): Int =
+    org.apache.commons.io.FileUtils.listFiles(new java.io.File(dir), Array("parquet"), true).size
+
+  /** `_time_bucket` comparisons in the optimized plan of `df`. */
+  private def bucketBounds(df: DataFrame): Int =
+    df.queryExecution.optimizedPlan.flatMap(_.expressions).flatMap(_.collect {
+      case b: org.apache.spark.sql.catalyst.expressions.BinaryComparison
+        if b.references.exists(_.name == TimeTable.BucketCol) => b
+    }).size
+
+  test("_time-bounded catalog reads prune buckets exactly in any session zone") {
+    val c = pruneCatalog
+    for (zone <- Seq("UTC", "Asia/Kolkata", "America/Los_Angeles")) withZone(zone) {
+      c.registerViews()
+      for ((g, e) <- Edges) {
+        val t = s"prune_$g"
+        // at the table's bucket edge and 1 ms either side: >, >=, <, <=,
+        // =, BETWEEN and a flipped comparison with the UTC instant, >=
+        // with the same wall clock read in the session zone (Kolkata's
+        // and Los Angeles' midnights on the month edge), and a
+        // timeBounded search of the hour from it
+        val cases = for (v <- Seq(e - 1, e, e + 1)) yield {
+          val at = s"TIMESTAMP '${utc(v)}Z'"
+          val wheres = Seq(">", ">=", "<", "<=", "=").map(op => s"_time $op $at") ++ Seq(
+            s"_time BETWEEN $at AND $at + INTERVAL 1 DAY", s"$at <= _time",
+            s"_time >= TIMESTAMP '${utc(v)}'")
+          val (lo, hi) = (utc(v), utc(v + 3600000L))
+          wheres.map(w => w -> spark.sql(s"SELECT k FROM $t WHERE $w")) :+
+            (s"_time >= '$lo' AND _time < '$hi'" ->
+              Search.timeBounded(spark, s"SELECT k, _time FROM $t", lo, hi, limit = 0))
+        }
+        val all = cases.flatten.zipWithIndex
+        assert(all.forall { case ((_, df), _) => bucketBounds(df) > 0 }, s"$zone $t")
+        val got = all.map { case ((_, df), i) => df.select(lit(i).as("q"), col("k")) }
+          .reduce(_ union _).collect().groupBy(_.getInt(0))
+        // the oracle: each filter over a plain read of the directory
+        val want = spark.read.parquet(s"${c.rootDir}/$t")
+          .select(col("k") +: all.map { case ((w, _), i) => expr(w).as(s"p$i") }: _*)
+          .collect()
+        all.foreach { case ((w, _), i) =>
+          val pruned = got.getOrElse(i, Array.empty).map(_.getLong(1)).sorted.toSeq
+          val plain = want.filter(_.getBoolean(i + 1)).map(_.getLong(0)).sorted.toSeq
+          assert(pruned == plain, s"$zone $t WHERE $w")
+        }
+      }
+    }
+  }
+
+  test("bucket pruning fires on _time bounds only: not under OR, not on an empty table") {
+    val c = pruneCatalog
+    c.registerViews()
+    val files = parquetFiles(s"${c.rootDir}/prune_D")
+    assert(files > 4, s"$files files")
+    val bounded = spark.sql("SELECT k FROM prune_D WHERE _time >= '2024-02-29 12:00:00' " +
+      "AND _time < '2024-03-01 12:00:00'")
+    assert(bucketBounds(bounded) == 2 && filesRead(bounded) == 2,
+      bounded.queryExecution.executedPlan.toString)
+    val timed = Search.timeBounded(spark, "SELECT k, _time FROM prune_D",
+      "2024-02-01 00:00:00", "2024-02-02 00:00:00", limit = 0)
+    assert(filesRead(timed) == 2 && timed.count() == 4)
+    val or = spark.sql("SELECT k FROM prune_D WHERE _time >= '2024-03-01 00:00:00' OR k = 0")
+    assert(bucketBounds(or) == 0 && filesRead(or) == files)
+    // a filter already on the bucket gains no bound of its own
+    val byBucket = spark.read.option(TimeTable.UnitOption, "day")
+      .parquet(s"${c.rootDir}/prune_D")
+      .where(s"${TimeTable.BucketCol} >= '2024-03-01-00' AND _time >= '2024-01-01 00:00:00'")
+    assert(bucketBounds(byBucket) == 1, byBucket.queryExecution.optimizedPlan)
+    // a table with no data is an empty local frame: nothing to prune
+    c.create(graft.rest.TableDef("prune_empty", Seq(graft.rest.ColumnDef("k", "bigint")), Nil, "D"))
+    c.registerViews()
+    val empty = spark.sql("SELECT k FROM prune_empty WHERE _time >= '2024-03-01 00:00:00'")
+    assert(empty.count() == 0 && bucketBounds(empty) == 0)
+  }
+
   test("search time bounds push through the subquery to the scan") {
     Tables.load(spark, sf, "events").withColumnRenamed("ts", "_time")
       .createOrReplaceTempView("events_t")

@@ -437,6 +437,48 @@ class RestSpec extends AnyFunSuite with TempDirs {
     assert(delete("/ddl/tables/typed")._1 == 200)
   }
 
+  test("a cached hit answers without a delayed-ACK stall over a keep-alive connection") {
+    table("nodelay", Seq(1 -> 1.5, 2 -> 2.5))
+    graft.core.QueryCache.clear()
+    val q = """{"query":"SELECT k, v FROM nodelay WHERE v > 0 ORDER BY k","use_cache":true}"""
+    val client = HttpClient.newBuilder().version(HttpClient.Version.HTTP_1_1).build()
+    val req = HttpRequest.newBuilder(URI.create(base + "/search"))
+      .header("Content-Type", "application/json")
+      .POST(HttpRequest.BodyPublishers.ofString(q)).build()
+    val first = client.send(req, HttpResponse.BodyHandlers.ofString()).body()
+    assert(first == """{"rows":[{"k":1,"v":1.5},{"k":2,"v":2.5}]}""", first)
+    val rtts = (1 to 20).map { _ =>
+      val t0 = System.nanoTime()
+      val r = client.send(req, HttpResponse.BodyHandlers.ofString())
+      assert(r.statusCode() == 200 && r.body() == first, r.body())
+      (System.nanoTime() - t0) / 1e6
+    }.sorted
+    // with Nagle on, each round trip waits ~40 ms for the client's ACK
+    assert(rtts(rtts.size / 2) < 25, s"round trips (ms): ${rtts.map(_.round)}")
+    graft.core.QueryCache.clear()
+    assert(delete("/ddl/tables/nodelay")._1 == 200)
+  }
+
+  test("query_log keeps exactly its newest Cap entries under 8 recording threads") {
+    val log = graft.rest.SystemTables.QueryLog
+    log.clear()
+    val perThread = log.Cap
+    val threads = (0 until 8).map { t =>
+      new Thread(() => (0 until perThread).foreach(i =>
+        log.record(s"t$t-$i", System.nanoTime(), i.toLong, "ok")))
+    }
+    threads.foreach(_.start()); threads.foreach(_.join())
+    val kept = log.entries()
+    assert(kept.size == log.Cap)
+    // each thread's kept entries are its last ones, in order
+    kept.groupBy(_.query.takeWhile(_ != '-')).foreach { case (t, es) =>
+      val rows = es.map(_.resultRows)
+      assert(rows == (perThread - rows.size until perThread).map(_.toLong), t)
+    }
+    log.clear()
+    assert(log.entries().isEmpty)
+  }
+
   // Freshness of the registered views: a view is rebuilt only when its
   // table's write epoch or definition changed. An ingest, a Maintenance
   // rewrite and a drop + re-create under the same definition change only
